@@ -51,12 +51,25 @@ final case class IngestionPipeline(
   def withChunkProcessor(p: DataFrame => DataFrame): IngestionPipeline =
     copy(chunkProcessors = chunkProcessors :+ p)
 
-  /** Compose the full lazy plan: documents in, enriched chunks out. */
-  def chunks(spark: SparkSession, documents: DataFrame): DataFrame = {
-    val processed = documentProcessors.foldLeft(documents)((df, p) => p(df))
-    val chunked = chunker(spark, processed)
-    chunkProcessors.foldLeft(chunked)((df, p) => p(df))
+  /** The one walk over the stages: reader → each document processor →
+    * chunker → each chunk processor, with `tap(df, stage, index)`
+    * applied at every stage boundary (`index` numbers the processors
+    * of one kind). */
+  private def walk(spark: SparkSession, documents: DataFrame)(
+      tap: (DataFrame, String, Option[Int]) => DataFrame): DataFrame = {
+    val processed = documentProcessors.zipWithIndex.foldLeft(
+      tap(documents, "reader", None)) { case (df, (p, i)) =>
+      tap(p(df), "documentProcessor", Some(i))
+    }
+    chunkProcessors.zipWithIndex.foldLeft(
+      tap(chunker(spark, processed), "chunker", None)) { case (df, (p, i)) =>
+      tap(p(df), "chunkProcessor", Some(i))
+    }
   }
+
+  /** Compose the full lazy plan: documents in, enriched chunks out. */
+  def chunks(spark: SparkSession, documents: DataFrame): DataFrame =
+    walk(spark, documents)((df, _, _) => df)
 
   /** `chunks` with per-stage observability — graft's twin of the
     * reference's per-stage Activity spans + document/chunk tags
@@ -73,18 +86,10 @@ final case class IngestionPipeline(
   def observedChunks(spark: SparkSession,
                      documents: DataFrame): (DataFrame, PipelineMetrics) = {
     val taps = Seq.newBuilder[(String, Observation)]
-    def tap(df: DataFrame, stage: String): DataFrame = {
+    val df = walk(spark, documents) { (df, stage, i) =>
       val obs = Observation() // auto-named; stage label kept alongside
-      taps += stage -> obs
+      taps += i.fold(stage)(n => s"$stage[$n]") -> obs
       df.observe(obs, count(lit(1)).as("rows"))
-    }
-    var df = tap(documents, "reader")
-    documentProcessors.zipWithIndex.foreach { case (p, i) =>
-      df = tap(p(df), s"documentProcessor[$i]")
-    }
-    df = tap(chunker(spark, df), "chunker")
-    chunkProcessors.zipWithIndex.foreach { case (p, i) =>
-      df = tap(p(df), s"chunkProcessor[$i]")
     }
     (df, PipelineMetrics(taps.result()))
   }
@@ -107,19 +112,11 @@ final case class IngestionPipeline(
     * `graft_reader`, `graft_documentProcessor_<i>`, `graft_chunker`,
     * `graft_chunkProcessor_<i>`, each a row with a `rows` field.
     */
-  def namedObservedChunks(spark: SparkSession, documents: DataFrame): DataFrame = {
-    def tap(df: DataFrame, stage: String): DataFrame =
-      df.observe(s"graft_$stage", count(lit(1)).as("rows"))
-    var df = tap(documents, "reader")
-    documentProcessors.zipWithIndex.foreach { case (p, i) =>
-      df = tap(p(df), s"documentProcessor_$i")
+  def namedObservedChunks(spark: SparkSession, documents: DataFrame): DataFrame =
+    walk(spark, documents) { (df, stage, i) =>
+      df.observe(i.fold(s"graft_$stage")(n => s"graft_${stage}_$n"),
+        count(lit(1)).as("rows"))
     }
-    df = tap(chunker(spark, df), "chunker")
-    chunkProcessors.zipWithIndex.foreach { case (p, i) =>
-      df = tap(p(df), s"chunkProcessor_$i")
-    }
-    df
-  }
 
   /** Run end-to-end into a vector store path. Enricher outputs (any
     * column beyond the chunk contract) ride along as record metadata.
@@ -129,7 +126,7 @@ final case class IngestionPipeline(
     runWith(spark, documents, { chunked =>
       val out = VectorStoreWriter.toVectorRecords(chunked, dim,
         metadataCols = IngestionPipeline.metadataColumns(chunked))
-      VectorStoreWriter.write(out, sinkPath)
+      VectorStoreWriter.writeWithLayout(out, sinkPath)
     })
 
   /** Run with a CUSTOM terminal writer — the twin of the reference's

@@ -34,8 +34,7 @@ import org.apache.spark.sql.functions._
 final case class VectorStoreWriterOptions(
     collectionName: String = "chunks",
     distanceFunction: String = VectorStoreWriter.Cosine,
-    incrementalIngestion: Boolean = true,
-    numBuckets: Int = VectorStoreWriter.NumBuckets) {
+    incrementalIngestion: Boolean = true) {
   require(collectionName.nonEmpty, "collectionName must not be empty") // VectorStoreWriterOptions.cs:18
   require(VectorStoreWriter.DistanceFunctions.contains(distanceFunction),
     s"unknown distanceFunction '$distanceFunction' " +
@@ -43,8 +42,6 @@ final case class VectorStoreWriterOptions(
 }
 
 object VectorStoreWriter {
-
-  val NumBuckets = 256
 
   /** Scale-adaptive creation-time layout (r12 optimization round):
     * sizing targets for [[chooseNumBuckets]]. ~64k records/bucket is
@@ -102,8 +99,8 @@ object VectorStoreWriter {
     */
   def write(records: DataFrame, root: String,
             options: VectorStoreWriterOptions): Unit =
-    write(records, collectionPath(root, options),
-      incremental = options.incrementalIngestion, numBuckets = options.numBuckets)
+    writeWithLayout(records, collectionPath(root, options),
+      incremental = options.incrementalIngestion)
 
   /** Chunks (doc_id, chunk_id, content, context) → vector records.
     * Embedding is the hermetic hash embedder (swap for a model UDF in
@@ -125,13 +122,16 @@ object VectorStoreWriter {
     ) ++ extras: _*)
   }
 
-  /** [[write]] with a creation-time PERSISTED bucket layout — the
-    * incremental-ingestion entry point (r12 optimization round). The
-    * bucket count is a correctness invariant of the store, not a
-    * tuning knob: `pmod(xxhash64(documentid), n)` must be stable
-    * across every batch or a re-ingested document's old records
-    * (hashed under a different modulus) would never be replaced. So
-    * the count is chosen ONCE, from the seed batch's size
+  /** Write records into the store at `path` with a creation-time
+    * PERSISTED bucket layout — the one store write that the pipeline
+    * run, the collection write and the streaming upsert all go through
+    * (r12 optimization round). `incremental` replaces re-ingested
+    * documents' records (see [[writeBucketed]]); off, the batch is
+    * appended as is. The bucket count is a correctness invariant of
+    * the store, not a tuning knob: `pmod(xxhash64(documentid), n)`
+    * must be stable across every batch or a re-ingested document's old
+    * records (hashed under a different modulus) would never be
+    * replaced. So the count is chosen ONCE, from the seed batch's size
     * ([[chooseNumBuckets]] — scale-adaptive instead of a constant 256
     * directories for stores of any size), recorded in
     * `_layout.json` (underscore-prefixed: parquet readers ignore it),
@@ -139,7 +139,8 @@ object VectorStoreWriter {
     * is written BEFORE the seed data so a crash between the two
     * leaves an empty store with a pinned layout that a re-run honors.
     */
-  def writeWithLayout(records: DataFrame, path: String): Unit = {
+  def writeWithLayout(records: DataFrame, path: String,
+                      incremental: Boolean = true): Unit = {
     val session = records.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(session.sparkContext.hadoopConfiguration)
@@ -160,7 +161,7 @@ object VectorStoreWriter {
         finally out.close()
         chosen
       }
-    write(records, path, incremental = true, numBuckets = n)
+    writeBucketed(records, path, incremental, n)
   }
 
   /** Write records bucketed by document. Incremental mode is a
@@ -170,11 +171,11 @@ object VectorStoreWriter {
     * dynamic-partition overwrite would wipe them). Rewrite cost is
     * bounded by the touched buckets, not the store size.
     */
-  def write(records: DataFrame, path: String, incremental: Boolean = true,
-            numBuckets: Int = NumBuckets): Unit = {
+  private def writeBucketed(records: DataFrame, path: String,
+                            incremental: Boolean, buckets: Int): Unit = {
     val session = records.sparkSession
     val bucketed = records
-      .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(numBuckets)))
+      .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(buckets)))
     val previous = session.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     session.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {

@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
+import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
+import scala.util.Using
 
 /** Stream-batch parity harness: runs a BATCH corpus through a real
   * Structured Streaming execution (file source → watermarked stateful
@@ -47,6 +49,10 @@ object StreamBatchParity {
     * event's session timeout (end + gap) and window close: one day. */
   private val SentinelGapSec = 86400L
 
+  /** The reserved event_type (and any other string column) of a
+    * sentinel row. */
+  private val SentinelTag = "\u0000sentinel"
+
   /** Time slices the corpus stages as — each is one real micro-batch
     * carrying state over to the next. */
   // private[graft] (not [streaming]): SparkEntry.streamCurateSql unrolls
@@ -54,98 +60,10 @@ object StreamBatchParity {
   // the harness from silently diverging if the batch count changes
   private[graft] val DataBatches = 4
 
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.deleteIfExists(f); () })
-    }
-  }
-
-  /** Write `df` as exactly one parquet file named `name` inside `dir`
-    * with the given mtime (the file source orders batches by mtime). */
-  private def stageFile(df: DataFrame, dir: Path, name: String,
-                        mtimeMs: Long): Unit = {
-    val staging = Files.createTempDirectory("graft-parity-stage")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = Files.list(staging).filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow(() => new IllegalStateException("no parquet part written"))
-      val target = dir.resolve(name)
-      Files.move(part, target)
-      Files.setLastModifiedTime(target, FileTime.fromMillis(mtimeMs))
-      ()
-    } finally deleteRecursively(staging)
-  }
-
-  /** [[stageFile]] for a json-source stream (the ingest stream's
-    * wire format): one json file named `name`, given mtime. */
-  private def stageJsonFile(df: DataFrame, dir: Path, name: String,
-                            mtimeMs: Long): Unit = {
-    val staging = Files.createTempDirectory("graft-parity-stage")
-    try {
-      df.coalesce(1).write.mode("overwrite").json(staging.toString)
-      val part = Files.list(staging).filter(_.getFileName.toString.endsWith(".json"))
-        .findFirst().orElseThrow(() => new IllegalStateException("no json part written"))
-      val target = dir.resolve(name)
-      Files.move(part, target)
-      Files.setLastModifiedTime(target, FileTime.fromMillis(mtimeMs))
-      ()
-    } finally deleteRecursively(staging)
-  }
-
-  /** Stage every listed slice of `df` (which must carry an integer
-    * `__slice` column) as ONE file per slice in `dir` via a SINGLE
-    * Spark job: a hash repartition on the slice value means exactly
-    * one task writes each slice, the partitioned write lays each out
-    * under `__slice=i/`, and the driver then just renames the part
-    * files into mtime-ordered position (r13 optimization round, guide
-    * §1.2: the per-slice filter+coalesce(1) staging paid one full
-    * plan→job cycle per micro-batch file — 4-6 driver round-trips per
-    * parity query — for work one partitioned write does in one pass).
-    * A slice with no rows (the curate harness stages a deliberate
-    * id-gap batch) produces no directory; it falls back to the
-    * single-file empty write so the staged batch SEQUENCE — and with
-    * it batch ids, watermark advancement and checkpoint offsets — is
-    * identical to the per-slice staging it replaces. */
-  private def stageSliced(df: DataFrame, dir: Path,
-                          files: Seq[(Int, String, Long)],
-                          json: Boolean): Unit = {
-    val staging = Files.createTempDirectory("graft-parity-stage")
-    try {
-      val w = df.repartition(col("__slice"))
-        .write.mode("overwrite").partitionBy("__slice")
-      if (json) w.json(staging.toString) else w.parquet(staging.toString)
-      val ext = if (json) ".json" else ".parquet"
-      for ((idx, name, mtimeMs) <- files) {
-        val pdir = staging.resolve(s"__slice=$idx")
-        val part =
-          if (Files.exists(pdir))
-            Files.list(pdir).filter(_.getFileName.toString.endsWith(ext))
-              .findFirst()
-          else java.util.Optional.empty[Path]()
-        if (part.isPresent) {
-          val target = dir.resolve(name)
-          Files.move(part.get, target)
-          Files.setLastModifiedTime(target, FileTime.fromMillis(mtimeMs))
-          ()
-        } else {
-          val empty = df.drop("__slice").where(lit(false))
-          if (json) stageJsonFile(empty, dir, name, mtimeMs)
-          else stageFile(empty, dir, name, mtimeMs)
-        }
-      }
-    } finally deleteRecursively(staging)
-  }
-
-  /** Slice index of an id/seq value for the id-range staging loops:
-    * slice i covers [lo0 + range*i/n, lo0 + range*(i+1)/n), the last
-    * unbounded above — exactly the per-slice filters it replaces. */
-  private def idSlice(id: org.apache.spark.sql.Column, lo0: Long,
-                      range: Long): org.apache.spark.sql.Column =
-    (1 until DataBatches).map(i => lo0 + range * i / DataBatches)
-      .zipWithIndex
-      .foldRight(lit(DataBatches - 1): org.apache.spark.sql.Column) {
-        case ((cut, i), acc) => when(id < cut, lit(i)).otherwise(acc)
+  private def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p))
+      Using.resource(Files.walk(p)) {
+        _.sorted(java.util.Comparator.reverseOrder()).forEach(f => { Files.deleteIfExists(f); () })
       }
 
   /** Run `body` (a streaming drain whose per-trigger batch jobs
@@ -160,102 +78,174 @@ object StreamBatchParity {
     try body finally spark.conf.set(confKey, previous)
   }
 
-  /** Stage corpus+sentinels as ordered micro-batch files, start the
-    * query `mkQuery(stream, outDir, ckptDir)` builds, drain it, and
-    * return the sink's contents pinned via localCheckpoint so the
-    * temp tree can be deleted before the caller materializes.
-    * `mkSentinel` builds the one-row sentinel from s1 (the far-future
-    * watermark-advancing event time). Returns (result, minSec, maxSec).
-    */
-  private def runStreamWith(spark: SparkSession, corpus: DataFrame,
-                            mkSentinel: Long => DataFrame)(
-      mkQuery: (DataFrame, String, String) =>
-        org.apache.spark.sql.streaming.StreamingQuery): (DataFrame, Long, Long) = {
-    val work = Files.createTempDirectory("graft-parity")
-    val in = Files.createDirectory(work.resolve("in"))
-    val schema: StructType = corpus.schema
-    // pin the corpus once: the slice staging and the partition sizing
-    // both read it — without the checkpoint every consumer re-executed
-    // the whole corpus pipeline (r12 optimization round, guide §5)
-    val pinned = corpus.localCheckpoint(true)
-    try {
-      val t0 = System.currentTimeMillis()
-      // ONE job computes the event-time bounds AND the row count (was
-      // three driver actions: a timeBounds agg over the UN-pinned
-      // corpus, then a count over the pinned one — r13 round)
-      val b = pinned.agg(min(unix_seconds(col("ts"))),
-        max(unix_seconds(col("ts"))), count(lit(1))).head()
-      val (minSec, maxSec, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      // time-sliced data batches: slice i holds [b_i, b_{i+1}) of the
-      // event-time range (first/last unbounded below/above, so the
-      // slices partition the corpus whatever min/max are), each its
-      // own micro-batch — state genuinely carries across triggers and
-      // no event can be late (batch i+1 is entirely newer than the
-      // watermark batch i left behind)
-      val range = maxSec - minSec
-      val sec = unix_seconds(col("ts"))
-      val cuts = (1 until DataBatches).map(i => minSec + range * i / DataBatches)
-      val slice = cuts.zipWithIndex.foldRight(lit(DataBatches - 1): org.apache.spark.sql.Column) {
-        case ((cut, i), acc) => when(sec < cut, lit(i)).otherwise(acc)
+  /** One parity stream's staging area under a fresh work directory:
+    * the stream reads `in/`, and every sink, index and checkpoint of
+    * the row lives beside it ([[path]]). `corpus` is pinned once — the
+    * bounds agg, the slice staging and any extra batch all read it;
+    * without the checkpoint every consumer re-executed the whole
+    * corpus pipeline (r12 optimization round, guide §5). Rows whose
+    * slice key is null are dropped first: no slice can hold them.
+    *
+    * A TIMESTAMP `key` slices the event-time range (bounds in epoch
+    * seconds, slice i holds [b_i, b_{i+1}), first/last unbounded
+    * below/above, so the slices partition the corpus whatever min/max
+    * are) and closes with the sentinel pair; an integer `key` slices
+    * the id/seq range [lo, hi] the same way (slice i covers
+    * [lo + range*i/n, lo + range*(i+1)/n), the cuts
+    * SparkEntry.streamCurateSqlFor unrolls). */
+  private[graft] final class StagedStream(spark: SparkSession, corpus: DataFrame,
+                                          keyName: String, json: Boolean = false) {
+    private val timeSliced = corpus.schema(keyName).dataType == TimestampType
+    private val key =
+      if (timeSliced) unix_seconds(col(keyName)) else col(keyName)
+    private val format = if (json) "json" else "parquet"
+    private val work: Path = Files.createTempDirectory("graft-parity")
+    val in: Path = Files.createDirectory(work.resolve("in"))
+    val pinned: DataFrame = corpus.where(key.isNotNull).localCheckpoint(true)
+    private val t0 = System.currentTimeMillis()
+    // ONE job computes the key bounds AND the row count (the stream
+    // width below); was a bounds agg over the UN-pinned corpus, then a
+    // count over the pinned one (r13 round)
+    private val bounds = pinned.agg(min(key), max(key), count(lit(1))).head()
+    private val lo = bounds.getLong(0)
+    /** Largest slice key staged (epoch seconds for a time-sliced row). */
+    val hi: Long = bounds.getLong(1)
+    private val nRows = bounds.getLong(2)
+    private val range = if (timeSliced) hi - lo else hi - lo + 1
+
+    /** Slice index of every pinned row. */
+    val slice: Column =
+      (1 until DataBatches).foldRight(lit(DataBatches - 1)) { (i, acc) =>
+        when(key < lo + range * i / DataBatches, lit(i - 1)).otherwise(acc)
       }
-      // two sentinel batches: the first advances the watermark past
-      // every real event, the second runs under it and flushes all
-      // remaining state. The first rides the staging job as the last
-      // slice; the second is byte-identical, so it is a driver-side
-      // file copy, not another Spark job.
-      val sentinel = mkSentinel(maxSec + SentinelGapSec)
-        .limit(1).toDF(corpus.columns: _*)
-      stageSliced(
-        pinned.withColumn("__slice", slice)
-          .unionByName(sentinel.withColumn("__slice", lit(DataBatches))),
-        in,
-        (0 until DataBatches).map(i =>
-          (i, f"$i%03d-corpus.parquet", t0 + i * 60000L)) :+
-          ((DataBatches, "900-sentinel.parquet", t0 + 600000L)),
-        json = false)
-      val s2 = in.resolve("901-sentinel.parquet")
-      Files.copy(in.resolve("900-sentinel.parquet"), s2)
-      Files.setLastModifiedTime(s2, FileTime.fromMillis(t0 + 1200000L))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-      // the streaming query runs at a data-derived state width
-      // (StreamingIngest.statePartitionsFor — streaming has no AQE
-      // coalescing, and this harness creates a fresh checkpoint per
-      // run, so the width is free to follow the staged corpus size);
-      // restored after the drain so batch queries are untouched
-      val confKey = "spark.sql.shuffle.partitions"
-      val previous = spark.conf.get(confKey)
-      spark.conf.set(confKey,
-        StreamingIngest.statePartitionsFor(spark, nRows).toString)
+
+    def path(name: String): String = work.resolve(name).toString
+
+    /** The parquet sink `name` the stream wrote under the work dir. */
+    def sink(name: String = "out"): DataFrame = spark.read.parquet(path(name))
+
+    /** The sentinel row at event time `s1`: every column takes the
+      * value its type reserves (−1 ids, the [[SentinelTag]] string,
+      * 0.0, the far-future timestamp). */
+    private def sentinel(s1: Long): DataFrame =
+      spark.range(1).select(corpus.schema.fields.toSeq.map { f =>
+        (f.dataType match {
+          case LongType => lit(-1L)
+          case StringType => lit(SentinelTag)
+          case DoubleType => lit(0.0)
+          case TimestampType => timestamp_seconds(lit(s1))
+          case other => throw new IllegalArgumentException(
+            s"no sentinel value for column ${f.name}: $other")
+        }).as(f.name)
+      }: _*)
+
+    /** Stage `slices` of the pinned corpus, plus the extra batch that
+      * follows them (a time-sliced row's sentinel, else `revision` of
+      * the pinned corpus, if any), as ONE file per batch in `in/` with
+      * mtime-ordered position — the file source's batch order — via a
+      * SINGLE Spark job: a hash repartition on the slice value means
+      * exactly one task writes each slice, the partitioned write lays
+      * each out under `__slice=i/`, and the driver then just renames
+      * the part files into place (r13 optimization round, guide §1.2:
+      * the per-slice filter+coalesce(1) staging paid one full
+      * plan→job cycle per micro-batch file — 4-6 driver round-trips per
+      * parity query — for work one partitioned write does in one pass).
+      * A slice with no rows (the curate harness stages a deliberate
+      * id-gap batch) produces no directory; it falls back to a
+      * single-file empty write so the staged batch SEQUENCE — and with
+      * it batch ids, watermark advancement and checkpoint offsets — is
+      * identical whatever the data. The sentinel is staged twice: the
+      * first advances the watermark past every real event, the second
+      * runs under it and flushes all remaining state; the second is
+      * byte-identical, so it is a driver-side file copy, not another
+      * Spark job. */
+    def stage(slices: Seq[Int],
+              revision: Option[DataFrame => DataFrame] = None): Unit = {
+      val extra =
+        if (timeSliced) Some(sentinel(hi + SentinelGapSec))
+        else revision.map(_(pinned))
+      val batches = extra.foldLeft(
+        pinned.withColumn("__slice", slice).where(col("__slice").isin(slices: _*))) {
+        (df, e) => df.unionByName(e.withColumn("__slice", lit(DataBatches)))
+      }
+      val ext = s".$format"
+      val staging = Files.createTempDirectory("graft-parity-stage")
       try {
-        val query = mkQuery(stream, work.resolve("out").toString,
-          work.resolve("ckpt").toString)
-        try {
-          query.processAllAvailable()
-        } finally query.stop()
-      } finally spark.conf.set(confKey, previous)
-      (spark.read.parquet(work.resolve("out").toString).localCheckpoint(true),
-        minSec, maxSec)
-    } finally {
+        batches.repartition(col("__slice"))
+          .write.mode("overwrite").partitionBy("__slice").format(format)
+          .save(staging.toString)
+        val files = slices.map(i => (i, f"$i%03d$ext", t0 + i * 60000L)) ++
+          extra.map(_ => (DataBatches, s"900$ext", t0 + 600000L))
+        for ((idx, name, mtimeMs) <- files) {
+          val pdir = staging.resolve(s"__slice=$idx")
+          if (!Files.exists(pdir))
+            batches.drop("__slice").where(lit(false)).coalesce(1)
+              .write.format(format).save(pdir.toString)
+          val part = Using.resource(Files.list(pdir)) {
+            _.filter(_.getFileName.toString.endsWith(ext)).findFirst()
+              .orElseThrow(() => new IllegalStateException(s"no $ext part for batch $idx"))
+          }
+          Files.move(part, in.resolve(name))
+          Files.setLastModifiedTime(in.resolve(name), FileTime.fromMillis(mtimeMs))
+        }
+        if (timeSliced) {
+          val s2 = Files.copy(in.resolve(s"900$ext"), in.resolve(s"901$ext"))
+          Files.setLastModifiedTime(s2, FileTime.fromMillis(t0 + 1200000L))
+        }
+      } finally deleteRecursively(staging)
+    }
+
+    /** Open the staged files as a stream, one file per trigger, start
+      * the query `start` builds over it and drain everything staged.
+      * The query runs at a data-derived state width
+      * ([[StreamingIngest.statePartitionsFor]] — streaming has no AQE
+      * coalescing, and this harness creates a fresh checkpoint per
+      * run, so the width is free to follow the staged corpus size);
+      * restored after the drain so batch queries are untouched. */
+    def drain(start: (DataFrame, StagedStream) => DataStreamWriter[Row]): Unit = {
+      val stream = spark.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", 1)
+        .format(format).load(in.toString)
+      withStreamWidth(spark, nRows) {
+        val query = start(stream, this).start()
+        try query.processAllAvailable() finally query.stop()
+      }
+    }
+
+    def close(): Unit = {
       pinned.unpersist()
       deleteRecursively(work)
     }
   }
 
-  /** [[runStreamWith]] specialized to an append-mode parquet sink over
-    * a plain streaming transform. */
-  private def runStream(spark: SparkSession, corpus: DataFrame,
-                        mkSentinel: Long => DataFrame,
-                        transform: DataFrame => DataFrame): (DataFrame, Long, Long) =
-    runStreamWith(spark, corpus, mkSentinel) { (stream, out, ckpt) =>
-      transform(stream).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .format("parquet")
-        .start()
-    }
+  /** The staged-stream driver every parity row runs on: pin `corpus`,
+    * stage all [[DataBatches]] slices of `key` plus the extra batch
+    * ([[StagedStream.stage]]), drain the query `start` builds
+    * ([[StagedStream.drain]]), and return `result` — the row's
+    * projection of what the stream left behind — pinned via
+    * localCheckpoint so the temp tree can be deleted before the
+    * caller materializes. */
+  private def stagedStream(spark: SparkSession, corpus: DataFrame, key: String,
+                           json: Boolean = false,
+                           revision: Option[DataFrame => DataFrame] = None)(
+      start: (DataFrame, StagedStream) => DataStreamWriter[Row])(
+      result: StagedStream => DataFrame): DataFrame = {
+    val staged = new StagedStream(spark, corpus, key, json)
+    try {
+      staged.stage(0 until DataBatches, revision)
+      staged.drain(start)
+      result(staged).localCheckpoint(true)
+    } finally staged.close()
+  }
+
+  /** An append-mode parquet sink `out/` over a plain streaming
+    * transform. */
+  private def appendSink(df: DataFrame, s: StagedStream): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", s.path("ckpt"))
+      .option("path", s.path("out"))
+      .format("parquet")
 
   /** Streaming sessionization of a batch events corpus, returned in
     * the q_sessionize shape (user_id, session_id, n_events, start_sec,
@@ -271,17 +261,17 @@ object StreamBatchParity {
     val corpus = events
       .select(col("user_id").cast("long").as("user_id"),
         timestamp_seconds(col("sec")).as("ts"))
-    val (closed, _, _) = runStream(spark, corpus,
-      s1 => spark.range(1)
-        .select(lit(-1L).as("user_id"), timestamp_seconds(lit(s1)).as("ts")),
-      st => StreamingIngest.sessionizeStream(spark, st, gapSeconds,
-        watermarkDelay = "30 minutes").toDF())
     val w = Window.partitionBy(col("user_id")).orderBy(col("start_sec"))
-    closed.where(col("user_id") >= 0)
-      .withColumn("session_id", row_number().over(w).cast("long"))
-      .select(col("user_id"), col("session_id"), col("n_events"),
-        col("start_sec"), col("end_sec"))
-      .orderBy(col("user_id"), col("session_id"))
+    stagedStream(spark, corpus, "ts") { (st, s) =>
+      appendSink(StreamingIngest.sessionizeStream(spark, st, gapSeconds,
+        watermarkDelay = "30 minutes").toDF(), s)
+    } {
+      _.sink().where(col("user_id") >= 0)
+        .withColumn("session_id", row_number().over(w).cast("long"))
+        .select(col("user_id"), col("session_id"), col("n_events"),
+          col("start_sec"), col("end_sec"))
+        .orderBy(col("user_id"), col("session_id"))
+    }
   }
 
   /** Streaming tumbling-window counts of a batch events corpus,
@@ -296,28 +286,19 @@ object StreamBatchParity {
       .select(col("event_type").cast("string").as("event_type"),
         col("value").cast("double").as("value"),
         timestamp_seconds(col("sec")).as("ts"))
-    val (wins, _, maxSec) = runStream(spark, corpus,
-      s1 => spark.range(1)
-        .select(lit("\u0000sentinel").as("event_type"), lit(0.0).as("value"),
-          timestamp_seconds(lit(s1)).as("ts")),
-      st => StreamingIngest.eventWindowCounts(st,
-        windowLen = "1 hour", watermark = "30 minutes"))
-    wins
-      .select(unix_seconds(col("window_start")).as("hour_start"),
-        col("event_type"), col("n_events"),
-        col("sum_value").cast("double").as("sum_value"))
-      .where(col("hour_start") <= maxSec && col("event_type") =!= "\u0000sentinel")
-      .orderBy(col("hour_start"), col("event_type"))
+    stagedStream(spark, corpus, "ts") { (st, s) =>
+      appendSink(StreamingIngest.eventWindowCounts(st,
+        windowLen = "1 hour", watermark = "30 minutes"), s)
+    } { s =>
+      s.sink()
+        .select(unix_seconds(col("window_start")).as("hour_start"),
+          col("event_type"), col("n_events"),
+          col("sum_value").cast("double").as("sum_value"))
+        .where(col("hour_start") <= s.hi && col("event_type") =!= SentinelTag)
+        .orderBy(col("hour_start"), col("event_type"))
+    }
   }
-  /** Streaming drift monitor over a batch events corpus, returned as
-    * finalized per-window PSI rows (hour_start, n_bins, t_new, psi):
-    * [[StreamingIngest.driftMonitor]] with 1-hour windows against the
-    * corpus's own overall value histogram as the static baseline —
-    * the foreachBatch (writer-shaped) streaming operator, so parity
-    * here also proves the batch-side join/smoothing inside the sink
-    * callback, not just the watermarked window state. `events` must
-    * carry (event_type: string, sec: long epoch seconds).
-    */
+
   /** Streaming dedup of an at-least-once event feed, returned in
     * exact-dedup shape (event_id, user_id, event_type):
     * [[StreamingIngest.dedupStream]] over the corpus plus INJECTED
@@ -344,25 +325,30 @@ object StreamBatchParity {
       .unionByName(original.where(col("event_id") % 3 === 0))
       .unionByName(original.where(col("event_id") % 5 === 0)
         .withColumn("ts", timestamp_seconds(unix_seconds(col("ts")) + 60)))
-    val (deduped, _, _) = runStream(spark, corpus,
-      s1 => spark.range(1)
-        .select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-          lit("\u0000sentinel").as("event_type"),
-          timestamp_seconds(lit(s1)).as("ts")),
-      st => StreamingIngest.dedupStream(st, Seq("event_id"),
-        tsCol = "ts", watermarkDelay = "30 minutes"))
-    // ts stays out of the result: which arrival survives a same-batch
-    // race is engine-internal, but its key attributes are identical
-    deduped.where(col("event_id") >= 0)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-      .orderBy(col("event_id"))
+    stagedStream(spark, corpus, "ts") { (st, s) =>
+      appendSink(StreamingIngest.dedupStream(st, Seq("event_id"),
+        tsCol = "ts", watermarkDelay = "30 minutes"), s)
+    } {
+      // ts stays out of the result: which arrival survives a same-batch
+      // race is engine-internal, but its key attributes are identical
+      _.sink().where(col("event_id") >= 0)
+        .select(col("event_id"), col("user_id"), col("event_type"))
+        .orderBy(col("event_id"))
+    }
   }
+
+  /** The documentSchema columns of a documents corpus. */
+  private def documentColumns(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id").cast("long"),
+      col("text").cast("string"), col("lang").cast("string"),
+      col("source").cast("string"))
 
   /** Streaming execution of the INGESTION PIPELINE itself — the
     * reference's own shape (its pipeline is an async stream over
     * documents): the documents corpus staged as id-range json
-    * micro-batch files, run through [[StreamingIngest.chunkStream]]
-    * (reader → chunker → enrichers, one micro-batch per file) into an
+    * micro-batch files, run through the canonical pipeline
+    * (reader → chunker → enrichers, one micro-batch per file, as
+    * [[StreamingIngest.chunkStream]] runs it) into an
     * append parquet sink, and the chunk rows returned so the driver
     * hash-gates them against the SAME batch SQL i_pipeline_e2e
     * passes. The pipeline is stateless per document, so parity here
@@ -371,44 +357,10 @@ object StreamBatchParity {
     * execution. `documents` must carry the documentSchema columns
     * (doc_id, text, lang, source).
     */
-  def ingestParity(spark: SparkSession, documents: DataFrame): DataFrame = {
-    val work = Files.createTempDirectory("graft-parity-ingest")
-    val in = Files.createDirectory(work.resolve("in"))
-    try {
-      val docs = documents.select(col("doc_id").cast("long"),
-        col("text").cast("string"), col("lang").cast("string"),
-        col("source").cast("string"))
-        // pinned: bounds agg + slice staging read it
-        .localCheckpoint(true)
-      // ONE job: id bounds + row count (partition sizing below)
-      val b = docs.agg(min(col("doc_id")), max(col("doc_id")),
-        count(lit(1))).head()
-      val (lo0, hi0, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      val range = hi0 - lo0 + 1
-      val t0 = System.currentTimeMillis()
-      stageSliced(docs.withColumn("__slice", idSlice(col("doc_id"), lo0, range)),
-        in,
-        (0 until DataBatches).map(i =>
-          (i, f"$i%03d-docs.json", t0 + i * 60000L)),
-        json = true)
-      val chunks = StreamingIngest.chunkStream(spark, in.toString,
-        maxFilesPerTrigger = 1)
-      // data-derived shuffle width for the per-trigger batch jobs, the
-      // same coalesce-down [[StreamingIngest.statePartitionsFor]]
-      // applies to the stateful streams (r12 verdict item 1: the
-      // custom staging loops never got the override)
-      withStreamWidth(spark, nRows) {
-        chunks.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", work.resolve("ckpt").toString)
-          .option("path", work.resolve("out").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .format("parquet")
-          .start().awaitTermination()
-      }
-      spark.read.parquet(work.resolve("out").toString).localCheckpoint(true)
-    } finally deleteRecursively(work)
-  }
+  def ingestParity(spark: SparkSession, documents: DataFrame): DataFrame =
+    stagedStream(spark, documentColumns(documents), "doc_id", json = true) { (st, s) =>
+      appendSink(graft.pipeline.IngestionPipeline.canonical.chunks(spark, st), s)
+    }(_.sink())
 
   /** Streaming UPSERT-writer parity — the reference's incremental
     * ingestion under streaming execution: the corpus staged as four
@@ -426,45 +378,18 @@ object StreamBatchParity {
     */
   def upsertWriterParity(spark: SparkSession, documents: DataFrame): DataFrame = {
     import graft.operators.{ChunkerOptions, Chunkers}
-    val work = Files.createTempDirectory("graft-parity-upsert")
-    val in = Files.createDirectory(work.resolve("in"))
-    try {
-      val docs = documents.select(col("doc_id").cast("long"),
-        col("text").cast("string"), col("lang").cast("string"),
-        col("source").cast("string"))
-        // pinned: bounds agg + slice staging read it
-        .localCheckpoint(true)
-      val b = docs.agg(min(col("doc_id")), max(col("doc_id")),
-        count(lit(1))).head()
-      val (lo0, hi0, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      val range = hi0 - lo0 + 1
-      val t0 = System.currentTimeMillis()
-      // the re-ingestion batch: revised copies under the SAME ids —
-      // the incremental writer must replace, not append. It rides the
-      // SAME staging job as the DataBatches slices (slice DataBatches).
-      val revised = docs.where(col("doc_id") % 10 === 0)
-        .withColumn("text", concat(col("text"), lit(" rev2")))
-      stageSliced(
-        docs.withColumn("__slice", idSlice(col("doc_id"), lo0, range))
-          .unionByName(revised.withColumn("__slice", lit(DataBatches))),
-        in,
-        (0 until DataBatches).map(i =>
-          (i, f"$i%03d-docs.json", t0 + i * 60000L)) :+
-          ((DataBatches, "900-revised.json", t0 + 600000L)),
-        json = true)
-      val stream = spark.readStream.schema(StreamingIngest.documentSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(in.toString)
-      val chunks = Chunkers.tokenChunks(stream,
+    // the re-ingestion batch: revised copies under the SAME ids — the
+    // incremental writer must replace, not append
+    val revised = (docs: DataFrame) => docs.where(col("doc_id") % 10 === 0)
+      .withColumn("text", concat(col("text"), lit(" rev2")))
+    stagedStream(spark, documentColumns(documents), "doc_id", json = true,
+        revision = Some(revised)) { (st, s) =>
+      val chunks = Chunkers.tokenChunks(st,
           ChunkerOptions(maxTokens = 64, overlap = 16))
         .withColumn("context", lit(""))
-      withStreamWidth(spark, nRows) {
-        StreamingIngest.incrementalWriter(chunks,
-          work.resolve("out").toString, work.resolve("ckpt").toString,
-          dim = 16).start().awaitTermination()
-      }
-      spark.read.parquet(work.resolve("out").toString).localCheckpoint(true)
-    } finally deleteRecursively(work)
+      StreamingIngest.incrementalWriter(chunks, s.path("out"), s.path("ckpt"),
+        dim = 16)
+    }(_.sink())
   }
 
   /** Stream-stream interval join parity, in the view→purchase
@@ -486,20 +411,18 @@ object StreamBatchParity {
       col("user_id").cast("long").as("user_id"),
       col("event_type").cast("string").as("event_type"),
       timestamp_seconds(col("sec")).as("ts"))
-    val (pairs, _, _) = runStream(spark, corpus,
-      s1 => spark.range(1)
-        .select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-          lit("\u0000sentinel").as("event_type"),
-          timestamp_seconds(lit(s1)).as("ts")),
-      st => StreamingIngest.streamStreamJoin(
+    stagedStream(spark, corpus, "ts") { (st, s) =>
+      appendSink(StreamingIngest.streamStreamJoin(
         st.where(col("event_type") === "view").drop("event_type"),
         st.where(col("event_type") === "purchase").drop("event_type"),
-        "user_id", within = "1 hour", watermark = "30 minutes"))
-    pairs.select(col("event_id").as("view_id"),
-        col("r_event_id").as("purchase_id"), col("user_id"),
-        unix_seconds(col("ts")).as("view_sec"),
-        unix_seconds(col("r_ts")).as("purchase_sec"))
-      .orderBy(col("view_id"), col("purchase_id"))
+        "user_id", within = "1 hour", watermark = "30 minutes"), s)
+    } {
+      _.sink().select(col("event_id").as("view_id"),
+          col("r_event_id").as("purchase_id"), col("user_id"),
+          unix_seconds(col("ts")).as("view_sec"),
+          unix_seconds(col("r_ts")).as("purchase_sec"))
+        .orderBy(col("view_id"), col("purchase_id"))
+    }
   }
 
   /** Stream-static enrichment parity: the events corpus streamed
@@ -527,16 +450,14 @@ object StreamBatchParity {
       count(lit(1)).as("n_total"),
       min(unix_seconds(col("ts"))).as("first_seen_sec"))
       .localCheckpoint(true)
-    val (enriched, _, _) = runStream(spark, corpus,
-      s1 => spark.range(1)
-        .select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-          lit("\u0000sentinel").as("event_type"),
-          timestamp_seconds(lit(s1)).as("ts")),
-      st => StreamingIngest.streamStaticEnrich(st, dim, "user_id"))
-    enriched.where(col("event_id") >= 0)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("n_total"), col("first_seen_sec"))
-      .orderBy(col("event_id"))
+    stagedStream(spark, corpus, "ts") { (st, s) =>
+      appendSink(StreamingIngest.streamStaticEnrich(st, dim, "user_id"), s)
+    } {
+      _.sink().where(col("event_id") >= 0)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("n_total"), col("first_seen_sec"))
+        .orderBy(col("event_id"))
+    }
   }
 
   /** Streaming CDC apply: the changelog staged as seq-range micro-
@@ -553,59 +474,53 @@ object StreamBatchParity {
     * (doc_id, seq: long, op: I/U/D, text).
     */
   def cdcParity(spark: SparkSession, base: DataFrame,
-                changes: DataFrame): DataFrame = {
-    val work = Files.createTempDirectory("graft-parity-cdc")
-    val in = Files.createDirectory(work.resolve("in"))
-    val snap = work.resolve("snap").toString
-    try {
+                changes: DataFrame): DataFrame =
+    stagedStream(spark, changes, "seq") { (st, s) =>
+      // the snapshot the changelog merges into starts as `base`
       base.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(snap)
-      // pinned: the bounds agg + slice staging read the (4-way-union)
-      // changelog
-      val changes2 = changes.localCheckpoint(true)
-      val b = changes2.agg(min(col("seq")), max(col("seq")),
-        count(lit(1))).head()
-      val (lo0, hi0, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      val range = hi0 - lo0 + 1
-      val t0 = System.currentTimeMillis()
-      stageSliced(changes2.withColumn("__slice", idSlice(col("seq"), lo0, range)),
-        in,
-        (0 until DataBatches).map(i =>
-          (i, f"$i%03d-changes.parquet", t0 + i * 60000L)),
-        json = false)
-      val stream = spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-      // AvailableNow honors maxFilesPerTrigger, so the drain is a real
-      // multi-batch incremental run, then the query stops itself
-      withStreamWidth(spark, nRows) {
-        StreamingIngest.cdcStream(stream, snap,
-          work.resolve("ckpt").toString).start().awaitTermination()
-      }
-      spark.read.parquet(snap).localCheckpoint(true)
-    } finally deleteRecursively(work)
-  }
+        .write.mode("overwrite").parquet(s.path("snap"))
+      StreamingIngest.cdcStream(st, s.path("snap"), s.path("ckpt"))
+    }(_.sink("snap"))
 
+  /** Streaming drift monitor over a batch events corpus, returned as
+    * finalized per-window PSI rows (hour_start, n_bins, t_new, psi):
+    * [[StreamingIngest.driftMonitor]] with 1-hour windows against the
+    * corpus's own overall value histogram as the static baseline —
+    * the foreachBatch (writer-shaped) streaming operator, so parity
+    * here also proves the batch-side join/smoothing inside the sink
+    * callback, not just the watermarked window state. `events` must
+    * carry (event_type: string, sec: long epoch seconds).
+    */
   def driftMonitorParity(spark: SparkSession, events: DataFrame): DataFrame = {
     val corpus = events
       .select(col("event_type").cast("string").as("event_type"),
         timestamp_seconds(col("sec")).as("ts"))
     val baseline = corpus.select(col("event_type"))
-    val (psi, _, maxSec) = runStreamWith(spark, corpus,
-      s1 => spark.range(1)
-        .select(lit("\u0000sentinel").as("event_type"),
-          timestamp_seconds(lit(s1)).as("ts"))) { (stream, out, ckpt) =>
-      StreamingIngest.driftMonitor(stream, baseline, "event_type",
-          sinkPath = out, checkpoint = ckpt,
-          windowLen = "1 hour", watermark = "30 minutes")
-        .start()
+    stagedStream(spark, corpus, "ts") { (st, s) =>
+      StreamingIngest.driftMonitor(st, baseline, "event_type",
+        sinkPath = s.path("out"), checkpoint = s.path("ckpt"),
+        windowLen = "1 hour", watermark = "30 minutes")
+    } { s =>
+      s.sink()
+        .select(unix_seconds(col("window_start")).as("hour_start"),
+          col("n_bins"), col("t_new"), col("psi"))
+        .where(col("hour_start") <= s.hi)
+        .orderBy(col("hour_start"))
     }
-    psi
-      .select(unix_seconds(col("window_start")).as("hour_start"),
-        col("n_bins"), col("t_new"), col("psi"))
-      .where(col("hour_start") <= maxSec)
-      .orderBy(col("hour_start"))
   }
+
+  /** The (doc_id, text) columns the curation rows stream. */
+  private def curateColumns(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id").cast("long"), col("text").cast("string"))
+
+  private def curateQuery(st: DataFrame, s: StagedStream): DataStreamWriter[Row] =
+    StreamingIngest.curateStream(st, s.path("idx"), s.path("accept"), s.path("ckpt"))
+
+  /** The final accept set (doc_id, batch) of a curation stream. */
+  private def accepted(s: StagedStream): DataFrame =
+    s.sink("accept")
+      .select(col("doc_id"), col("batch").cast("int").as("batch"))
+      .orderBy(col("doc_id"))
 
   /** Streaming index-backed curation parity — continuous near-dup
     * admission control under real incremental execution: the corpus
@@ -619,38 +534,8 @@ object StreamBatchParity {
     * streaming to the exact batch-sequential answer. `documents`
     * must carry (doc_id: long, text: string).
     */
-  def curateParity(spark: SparkSession, documents: DataFrame): DataFrame = {
-    val work = Files.createTempDirectory("graft-parity-curate")
-    val in = Files.createDirectory(work.resolve("in"))
-    try {
-      val docs = documents.select(col("doc_id").cast("long"),
-        col("text").cast("string"))
-        // pinned: bounds agg + slice staging read it
-        .localCheckpoint(true)
-      val b = docs.agg(min(col("doc_id")), max(col("doc_id")),
-        count(lit(1))).head()
-      val (lo0, hi0, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      val range = hi0 - lo0 + 1
-      val t0 = System.currentTimeMillis()
-      stageSliced(docs.withColumn("__slice", idSlice(col("doc_id"), lo0, range)),
-        in,
-        (0 until DataBatches).map(i =>
-          (i, f"$i%03d-docs.parquet", t0 + i * 60000L)),
-        json = false)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-      withStreamWidth(spark, nRows) {
-        StreamingIngest.curateStream(stream, work.resolve("idx").toString,
-          work.resolve("accept").toString, work.resolve("ckpt").toString)
-          .start().awaitTermination()
-      }
-      spark.read.parquet(work.resolve("accept").toString)
-        .select(col("doc_id"), col("batch").cast("int").as("batch"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally deleteRecursively(work)
-  }
+  def curateParity(spark: SparkSession, documents: DataFrame): DataFrame =
+    stagedStream(spark, curateColumns(documents), "doc_id")(curateQuery)(accepted)
 
   /** [[curateParity]] with a RETRACTION between the seed batch and the
     * rest of the stream — the right-to-be-forgotten composition
@@ -666,53 +551,22 @@ object StreamBatchParity {
     * signal, not history). The SQL oracle unrolls the same sequence
     * with the batch-0 store contribution filtered to odd ids. */
   def curateRetractParity(spark: SparkSession, documents: DataFrame): DataFrame = {
-    val work = Files.createTempDirectory("graft-parity-retract")
-    val in = Files.createDirectory(work.resolve("in"))
+    // pinned once: both staging passes read it (and the retraction
+    // re-filters the seed slice for the victim ids)
+    val staged = new StagedStream(spark, curateColumns(documents), "doc_id")
     try {
-      val docs = documents.select(col("doc_id").cast("long"),
-        col("text").cast("string"))
-        // pinned: bounds agg + both staging passes read it (and the
-        // retraction re-filters the seed range for the victim ids)
-        .localCheckpoint(true)
-      val b = docs.agg(min(col("doc_id")), max(col("doc_id")),
-        count(lit(1))).head()
-      val (lo0, hi0, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      val range = hi0 - lo0 + 1
-      val t0 = System.currentTimeMillis()
-      val cut1 = lo0 + range / DataBatches
-      def run(): Unit = {
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString)
-        withStreamWidth(spark, nRows) {
-          StreamingIngest.curateStream(stream, work.resolve("idx").toString,
-            work.resolve("accept").toString, work.resolve("ckpt").toString)
-            .start().awaitTermination()
-        }
-      }
-      // run 1: the seed batch alone (one single-file staging job)
-      stageFile(docs.where(col("doc_id") < cut1), in, "000-docs.parquet", t0)
-      run()
+      // run 1: the seed batch alone
+      staged.stage(Seq(0))
+      staged.drain(curateQuery)
       // the mid-stream retraction request
-      graft.operators.Dedup.removeFromDedupIndex(spark,
-        work.resolve("idx").toString,
-        docs.where(col("doc_id") < cut1 && col("doc_id") % 2 === 0)
+      graft.operators.Dedup.removeFromDedupIndex(spark, staged.path("idx"),
+        staged.pinned.where(staged.slice === 0 && col("doc_id") % 2 === 0)
           .select(col("doc_id")))
-      // run 2: the rest of the stream resumes from the checkpoint —
-      // slices 1..n staged by ONE partitioned-write job
-      stageSliced(
-        docs.where(col("doc_id") >= cut1)
-          .withColumn("__slice", idSlice(col("doc_id"), lo0, range)),
-        in,
-        (1 until DataBatches).map(i =>
-          (i, f"$i%03d-docs.parquet", t0 + i * 60000L)),
-        json = false)
-      run()
-      spark.read.parquet(work.resolve("accept").toString)
-        .select(col("doc_id"), col("batch").cast("int").as("batch"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally deleteRecursively(work)
+      // run 2: the rest of the stream resumes from the checkpoint
+      staged.stage(1 until DataBatches)
+      staged.drain(curateQuery)
+      accepted(staged).localCheckpoint(true)
+    } finally staged.close()
   }
 
   /** Streaming IVF maintenance parity — the ANN-index twin of
@@ -734,44 +588,22 @@ object StreamBatchParity {
                       nLists: Int = 8, nProbe: Int = 4,
                       k: Int = 5): DataFrame = {
     import graft.operators.Similarity
-    val work = Files.createTempDirectory("graft-parity-ivfup")
-    val in = Files.createDirectory(work.resolve("in"))
-    val idx = work.resolve("idx").toString
-    try {
-      val vecs = embeddings.select(col("vec_id").cast("long"), col("embedding"))
-        .localCheckpoint(true) // pinned: bounds agg + slice staging read it
-      val b = vecs.agg(min(col("vec_id")), max(col("vec_id")),
-        count(lit(1))).head()
-      val (lo0, hi0, nRows) = (b.getLong(0), b.getLong(1), b.getLong(2))
-      val range = hi0 - lo0 + 1
-      val t0 = System.currentTimeMillis()
-      // the re-ingestion batch: negated copies under the SAME ids —
-      // staged by the same single job as the DataBatches slices
-      val revised = vecs.where(col("vec_id") % 10 === 0)
-        .withColumn("embedding",
-          transform(col("embedding"), x => (-x).cast("float")))
-      stageSliced(
-        vecs.withColumn("__slice", idSlice(col("vec_id"), lo0, range))
-          .unionByName(revised.withColumn("__slice", lit(DataBatches))),
-        in,
-        (0 until DataBatches).map(i =>
-          (i, f"$i%03d-vecs.parquet", t0 + i * 60000L)) :+
-          ((DataBatches, "900-revised.parquet", t0 + 600000L)),
-        json = false)
-      val stream = spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
+    // the re-ingestion batch: negated copies under the SAME ids
+    val negated = (vecs: DataFrame) => vecs.where(col("vec_id") % 10 === 0)
+      .withColumn("embedding",
+        transform(col("embedding"), x => (-x).cast("float")))
+    stagedStream(spark, embeddings.select(col("vec_id").cast("long"), col("embedding")),
+        "vec_id", revision = Some(negated)) { (st, s) =>
       // retrainEvery = 0: this harness hash-gates the FROZEN-centroid
       // upsert semantics against a SQL oracle that replays exactly
       // that; the in-loop re-train policy (r12) is spec-gated
       // separately (IvfFramesSpec) where the partial Lloyd step can
       // be asserted against the operator itself rather than unrolled
       // in SQL
-      withStreamWidth(spark, nRows) {
-        StreamingIngest.ivfUpsertStream(stream, idx,
-          work.resolve("ckpt").toString, nLists, retrainEvery = 0)
-          .start().awaitTermination()
-      }
+      StreamingIngest.ivfUpsertStream(st, s.path("idx"), s.path("ckpt"),
+        nLists, retrainEvery = 0)
+    } { s =>
+      val idx = s.path("idx")
       // final answer from the persisted store through the production
       // probe path: per query, the top-nProbe lists' partitions scan
       // (self row dropped — cos(q,q)=1 always leads, so k+1 covers it)
@@ -798,7 +630,6 @@ object StreamBatchParity {
         .select(col("query_id"), col("rank"), col("nbr_id"),
           round(col("cos"), 6).as("cos"))
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint(true)
-    } finally deleteRecursively(work)
+    }
   }
 }

@@ -66,13 +66,17 @@ object StreamingIngest {
     */
   def chunkStream(spark: SparkSession, inputDir: String,
                   pipeline: IngestionPipeline = IngestionPipeline.canonical,
-                  maxFilesPerTrigger: Int = 32): DataFrame = {
-    val docs = spark.readStream
+                  maxFilesPerTrigger: Int = 32): DataFrame =
+    pipeline.chunks(spark, documentStream(spark, inputDir, maxFilesPerTrigger))
+
+  /** The json document stream [[chunkStream]] and
+    * [[observedChunkStream]] read. */
+  private def documentStream(spark: SparkSession, inputDir: String,
+                             maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream
       .schema(documentSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(inputDir)
-    pipeline.chunks(spark, docs)
-  }
 
   /** `chunkStream` with per-stage observability: stage boundaries are
     * tapped with named observe() calls, so every micro-batch's
@@ -84,13 +88,9 @@ object StreamingIngest {
     */
   def observedChunkStream(spark: SparkSession, inputDir: String,
                           pipeline: IngestionPipeline = IngestionPipeline.canonical,
-                          maxFilesPerTrigger: Int = 32): DataFrame = {
-    val docs = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(inputDir)
-    pipeline.namedObservedChunks(spark, docs)
-  }
+                          maxFilesPerTrigger: Int = 32): DataFrame =
+    pipeline.namedObservedChunks(spark,
+      documentStream(spark, inputDir, maxFilesPerTrigger))
 
   /** Crawl-shaped streaming ingest: watch a directory of MIXED-format
     * binary documents (markdown / HTML / DOCX / PDF), route each file

@@ -3,6 +3,7 @@ package graft
 import graft.operators.Processors
 import graft.pipeline.IngestionPipeline
 import graft.sinks.VectorStoreWriter
+import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -69,16 +70,22 @@ class PipelineSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft-vsw").toString
     val batch1 = Seq((1L, 0, "v1 content", ""), (2L, 0, "other doc", ""))
       .toDF("doc_id", "chunk_id", "content", "context")
-    VectorStoreWriter.write(VectorStoreWriter.toVectorRecords(batch1, 16), dir)
-    // re-ingest doc 1 with different content (same bucket → replaced;
-    // doc 2 lives in a different bucket → untouched)
+    VectorStoreWriter.writeWithLayout(VectorStoreWriter.toVectorRecords(batch1, 16), dir)
+    // re-ingest doc 1 with different content (its records are
+    // replaced; doc 2's survive, shared bucket or not)
     val batch2 = Seq((1L, 0, "v2 content", ""))
       .toDF("doc_id", "chunk_id", "content", "context")
-    VectorStoreWriter.write(VectorStoreWriter.toVectorRecords(batch2, 16), dir)
+    VectorStoreWriter.writeWithLayout(VectorStoreWriter.toVectorRecords(batch2, 16), dir)
     val after = spark.read.parquet(dir)
     val contents = after.select("documentid", "content").as[(String, String)].collect().toMap
     assert(contents("1") == "v2 content")
     assert(contents("2") == "other doc")
+  }
+
+  /** Pin a new store at `dir` to a one-bucket layout. */
+  private def oneBucketLayout(dir: String): Unit = {
+    Files.writeString(java.nio.file.Paths.get(dir, "_layout.json"), """{"numBuckets":1}""")
+    ()
   }
 
   test("incremental write preserves other docs in the SAME bucket (regression)") {
@@ -86,10 +93,11 @@ class PipelineSpec extends SparkSpecBase {
     def recs(rows: (Long, Int, String, String)*) =
       VectorStoreWriter.toVectorRecords(
         rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
-    // numBuckets=1 forces every document into one bucket
-    VectorStoreWriter.write(recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")),
-      dir, numBuckets = 1)
-    VectorStoreWriter.write(recs((1L, 0, "doc one v2", "")), dir, numBuckets = 1)
+    // a one-bucket layout forces every document into one bucket
+    oneBucketLayout(dir)
+    VectorStoreWriter.writeWithLayout(
+      recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")), dir)
+    VectorStoreWriter.writeWithLayout(recs((1L, 0, "doc one v2", "")), dir)
     val contents = spark.read.parquet(dir)
       .select("documentid", "content").as[(String, String)].collect().toMap
     assert(contents("1") == "doc one v2")
@@ -120,7 +128,7 @@ class PipelineSpec extends SparkSpecBase {
     val contents = spark.read.parquet(dir)
       .select("documentid", "content").as[(String, String)].collect().toMap
     assert(contents == Map("1" -> "doc one v2", "2" -> "doc two"))
-    // bucket-directory cardinality is the recorded layout's, not NumBuckets
+    // bucket-directory cardinality is the recorded layout's
     val bucketDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("doc_bucket="))
     assert(bucketDirs.length <= VectorStoreWriter.MinBuckets)
@@ -137,14 +145,15 @@ class PipelineSpec extends SparkSpecBase {
     def recs(rows: (Long, Int, String, String)*) =
       VectorStoreWriter.toVectorRecords(
         rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
-    VectorStoreWriter.write(recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")),
-      dir, numBuckets = 1)
+    oneBucketLayout(dir)
+    VectorStoreWriter.writeWithLayout(
+      recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")), dir)
     val poison = recs((1L, 0, "doc one v2", ""))
       .withColumn("content",
         when(col("key") === "1:0", raise_error(lit("simulated mid-write crash")))
           .otherwise(col("content")))
     intercept[Exception] {
-      VectorStoreWriter.write(poison, dir, numBuckets = 1)
+      VectorStoreWriter.writeWithLayout(poison, dir)
     }
     val contents = spark.read.parquet(dir)
       .select("documentid", "content").as[(String, String)].collect().toMap
@@ -181,6 +190,28 @@ class PipelineSpec extends SparkSpecBase {
     val out = spark.read.parquet(dir)
     assert(out.count() > 0)
     assert(out.columns.toSet.contains("embedding"))
+  }
+
+  test("pipeline run then streaming upsert: one bucket layout, no stale records") {
+    // run and incrementalWriter write through the same persisted
+    // layout, so the upsert finds and replaces every seeded record
+    val dir = Files.createTempDirectory("graft-run-upsert").toString
+    val in = Files.createTempDirectory("graft-run-upsert-in")
+    val ckpt = Files.createTempDirectory("graft-run-upsert-ckpt").toString
+    val ids = 1L to 40L
+    IngestionPipeline.canonical.run(spark,
+      ids.map(i => (i, s"# Doc $i\n\nfirst version of document $i")).toDF("doc_id", "text"),
+      dir)
+    Files.writeString(in.resolve("revised.json"), ids.map(i =>
+      s"""{"doc_id":$i,"text":"# Doc $i\\n\\nsecond version of document $i","lang":"en","source":"t"}"""
+    ).mkString("\n"))
+    StreamingIngest.incrementalWriter(StreamingIngest.chunkStream(spark, in.toString),
+      dir, ckpt).start().awaitTermination()
+    val store = spark.read.parquet(dir)
+    assert(store.select("key").distinct().count() == store.count())
+    assert(store.select("documentid").distinct().count() == ids.size)
+    assert(store.where(col("content").contains("first version")).isEmpty)
+    assert(store.where(col("content").contains("second version")).count() == ids.size)
   }
 
   // ------------------------------------------------- observability
