@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{TextFunctions, VectorFunctions}
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -899,7 +900,7 @@ object Dedup {
       // bounds aggregate is the subtree's ONLY consumer, so it runs
       // directly — the former localCheckpoint was one extra pass over
       // the victim signatures per retraction (r13 round)
-      val delBanded = spark.read.parquet(s"$path/signatures")
+      val delBanded = Tables.read(spark, s"$path/signatures")
         .join(ids, Seq("doc_id"), "left_semi")
         .withColumn("bands", TextFunctions.lshBandKeys(
           TextFunctions.minHashSignature(col("sh"), k),
@@ -955,7 +956,7 @@ object Dedup {
     * compaction cadence, not per append.
     */
   def compactDedupIndex(spark: SparkSession, path: String): Unit = {
-    val bands = spark.read.parquet(s"$path/bands")
+    val bands = Tables.read(spark, s"$path/bands")
       .select(col("band"), col("key"), col("doc_id"))
       .localCheckpoint(true) // materialize before overwriting its source
     bands
@@ -963,7 +964,7 @@ object Dedup {
       .sortWithinPartitions(col("band"), col("key"))
       .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
     bands.unpersist()
-    val sigs = spark.read.parquet(s"$path/signatures")
+    val sigs = Tables.read(spark, s"$path/signatures")
       .localCheckpoint(true)
     sigs.write.mode("overwrite").parquet(s"$path/signatures")
     sigs.unpersist()
@@ -1042,7 +1043,7 @@ object Dedup {
       col("band") === r.getInt(0) &&
         col("key") >= r.getLong(1) && col("key") <= r.getLong(2)
     }.reduce(_ || _)
-    val storeBanded = spark.read.parquet(s"$path/bands")
+    val storeBanded = Tables.read(spark, s"$path/bands")
       .where(prune)
       .select(col("band"), col("key"), col("doc_id"))
     // store↔delta candidates plus delta-internal candidates (x < y so
@@ -1060,7 +1061,7 @@ object Dedup {
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct()
-    val sigs = spark.read.parquet(s"$path/signatures")
+    val sigs = Tables.read(spark, s"$path/signatures")
       .unionByName(deltaRows.select(col("doc_id"), col("sh")))
     candidates
       .join(sigs.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))

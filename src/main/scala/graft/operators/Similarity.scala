@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -509,28 +510,16 @@ object Similarity {
     * ONLY those list partitions for the exact top-k — the reader half
     * of [[writeIvfIndex]]. The `list_id IN (...)` filter appears in
     * the scan's PartitionFilters (asserted in spec): unprobed lists
-    * are never listed, opened, or read.
+    * are never listed, opened, or read. A probe of an unchanged index
+    * runs that one scan and nothing else: the centroids come from
+    * [[centroidRows]]' driver memo and the lists open without a
+    * schema-inference job ([[graft.sources.Tables.read]]).
     */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     query: Array[Float], k: Int = 10, nProbe: Int = 4): DataFrame = {
-    def cosLocal(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1 }
-      val den = math.sqrt(na) * math.sqrt(nb)
-      if (den == 0.0) 0.0 else d / den
-    }
-    // centroid table is nLists rows by construction — driver-bounded,
-    // like any index's metadata read
-    val probeIds = spark.read.parquet(s"$path/centroids")
-      .select(col("list_id"), col("centroid")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .map { case (id, c) => (id, cosLocal(query, c)) }
-      .sortBy { case (id, cos) => (-cos, id) }
-      .take(nProbe).map(_._1)
+    val probeIds = probeLists(centroidRows(spark, path), query, nProbe)
     val q = typedlit(query.toSeq)
-    spark.read.parquet(s"$path/lists")
+    Tables.read(spark, s"$path/lists")
       .where(col("list_id").isin(probeIds: _*))
       .select(col("vec_id"),
         VectorFunctions.cosine(col("embedding"), q).as("cos"))
@@ -539,9 +528,8 @@ object Similarity {
   }
 
   /** [[probeIvfIndex]] for MANY queries in one pass (r13 optimization
-    * round): the centroid table is read ONCE (it was re-collected per
-    * query), every query's nProbe lists resolve driver-side from that
-    * one read, and a SINGLE partition-pruned scan of the union of
+    * round): every query's nProbe lists resolve driver-side from one
+    * centroid read, and a SINGLE partition-pruned scan of the union of
     * probed lists serves every query — per query, rows outside its
     * own probe set are filtered through the broadcast
     * (query_id → probe lists) table, and the per-query top-k keeps
@@ -553,23 +541,9 @@ object Similarity {
                          k: Int = 10, nProbe: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    def cosLocal(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1 }
-      val den = math.sqrt(na) * math.sqrt(nb)
-      if (den == 0.0) 0.0 else d / den
-    }
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("list_id"), col("centroid")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cents = centroidRows(spark, path)
     val rows = queries.map { case (qid, q) =>
-      val probeIds = cents
-        .map { case (id, c) => (id, cosLocal(q, c)) }
-        .sortBy { case (id, cos) => (-cos, id) }
-        .take(nProbe).map(_._1)
-      org.apache.spark.sql.Row(qid, q.toSeq, probeIds.toSeq)
+      org.apache.spark.sql.Row(qid, q.toSeq, probeLists(cents, q, nProbe).toSeq)
     }
     val qSchema = StructType(Seq(
       StructField("query_id", LongType),
@@ -582,7 +556,7 @@ object Similarity {
       .flatMap(i => rows(i).getSeq[Long](2)).distinct.sorted
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
-    spark.read.parquet(s"$path/lists")
+    Tables.read(spark, s"$path/lists")
       .where(col("list_id").isin(allLists: _*))
       .join(broadcast(qdf),
         array_contains(col("probe_lists"), col("list_id").cast("long")))
@@ -593,8 +567,64 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("cos"))
   }
 
+  /** The `nProbe` lists a query scans: its nearest centroids by cosine,
+    * ties to the lower list id. */
+  private def probeLists(centroids: Array[(Long, Array[Float])],
+                         query: Array[Float], nProbe: Int): Array[Long] = {
+    def cos(c: Array[Float]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      val n = math.min(query.length, c.length)
+      while (i < n) { d += query(i).toDouble * c(i); na += query(i).toDouble * query(i)
+        nb += c(i).toDouble * c(i); i += 1 }
+      val den = math.sqrt(na) * math.sqrt(nb)
+      if (den == 0.0) 0.0 else d / den
+    }
+    centroids
+      .map { case (id, c) => (id, cos(c)) }
+      .sortBy { case (id, c) => (-c, id) }
+      .take(nProbe).map(_._1)
+  }
+
+  /** An index's centroid rows and the centroid directory listing
+    * (name, length, mtime of each file) they were read under. */
+  private final case class Centroids(listing: Seq[(String, Long, Long)],
+                                     rows: Array[(Long, Array[Float])])
+
+  /** [[Centroids]] of the last few probed indexes, by qualified index
+    * path, least recently used first. */
+  private val centroidMemo =
+    new java.util.LinkedHashMap[String, Centroids](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Centroids]): Boolean =
+        size() > 8
+    }
+
+  /** The index's (list_id, centroid) rows — nLists rows by
+    * construction, driver-bounded like any index's metadata read.
+    * They are read once per centroid directory listing (name, length,
+    * mtime of each file): [[writeIvfIndex]] and [[maybeRetrainIvfIndex]]
+    * rewrite the centroids as new part files, so the first probe after
+    * either re-reads, and probes of an unchanged index read nothing. */
+  private def centroidRows(spark: SparkSession, path: String): Array[(Long, Array[Float])] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(new org.apache.hadoop.fs.Path(path)).toString
+    // listed BEFORE the read: a rewrite racing the read leaves an entry
+    // whose listing is already stale, so it can only cause a re-read
+    val listing = scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sorted.toSeq
+    centroidMemo.synchronized(Option(centroidMemo.get(key))) match {
+      case Some(c) if c.listing == listing => c.rows
+      case _ =>
+        val rows = Tables.read(spark, dir.toString)
+          .select(col("list_id"), col("centroid")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        centroidMemo.synchronized(centroidMemo.put(key, Centroids(listing, rows)))
+        rows
+    }
+  }
+
   /** Next drift generation for the index at `path`: the `_gen` marker
-    * (an underscore file parquet readers ignore, maintained by every
+    * (an underscore file parquet readers ignore, written before every
     * drift append) when present; a legacy store without one falls back
     * to the max-generation aggregate the marker replaced (one saved
     * Spark job per micro-batch in the streaming upsert loop). */
@@ -610,7 +640,7 @@ object Similarity {
       finally in.close()
       txt.toLong + 1L
     } else
-      spark.read.parquet(s"$path/drift")
+      Tables.read(spark, s"$path/drift")
         .agg(max(col("generation"))).head().getLong(0) + 1L
   }
 
@@ -651,7 +681,7 @@ object Similarity {
     */
   def appendToIvfIndex(spark: SparkSession, path: String,
                        newVectors: DataFrame): Unit = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = Tables.read(spark, s"$path/centroids")
     val centroidSet = foldCentroids(centroids).localCheckpoint(true)
     // in-batch id dedupe: replace-by-id promises at most ONE stored row
     // per vec_id, and the anti-join below only removes STORE copies —
@@ -670,7 +700,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("list_id"))
       .localCheckpoint(true) // consumers: touched ids, merge, drift
     centroidSet.unpersist()
-    val lists0 = spark.read.parquet(s"$path/lists")
+    val lists0 = Tables.read(spark, s"$path/lists")
     // UPSERT semantics (the reference's incremental ingestion replaces
     // re-ingested ids): a re-ingested vector's STALE version may live
     // in ANY list (its old embedding may have been assigned elsewhere),
@@ -729,28 +759,14 @@ object Similarity {
           spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
     }
-    // drift audit: post-append list mean vs the frozen centroid.
-    // Means round through FLOAT (the trained-IVF contract) so the
-    // audit is insensitive to double-sum association order. ONE
-    // aggregate over merged yields the drift means, the per-list
-    // added count (via the is_new tag — every merged row carries it,
-    // so counting movers costs nothing extra) AND the surviving-list
-    // set; it is COLLECTED once — ≤ touched lists of (mean, counts),
-    // the same driver-bounded index-metadata class as the centroid
-    // read — replacing a localCheckpoint job plus a second collect
-    // (r13: two more per-micro-batch driver jobs gone).
-    val dimsRows = merged.select(col("list_id"), col("is_new"),
-        posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("list_id"), col("d"))
-      .agg(sum(col("x").cast("double")).as("s"), count(lit(1)).as("n"),
-        sum(col("is_new")).as("nn"))
-      .groupBy(col("list_id"))
-      .agg(max(col("n")).as("list_n"), max(col("nn")).as("n_added"),
-        transform(
-          sort_array(collect_list(struct(col("d"), col("s"), col("n")))),
-          t => (t.getField("s") / t.getField("n")).cast("float"))
-          .as("list_mean"))
-      .collect()
+    // drift audit: post-append list mean vs the frozen centroid. ONE
+    // aggregate over merged yields the drift means, the per-list added
+    // count (via the is_new tag) AND the surviving-list set; it is
+    // COLLECTED once — ≤ touched lists of (mean, counts), the same
+    // driver-bounded index-metadata class as the centroid read —
+    // replacing a localCheckpoint job plus a second collect (r13: two
+    // more per-micro-batch driver jobs gone).
+    val dimsRows = listMeans(merged).collect()
     // dynamic overwrite only rewrites partitions PRESENT in the write:
     // a touched list whose every row was a stale copy of a re-ingested
     // id (and that received nothing new) has zero merged rows, so its
@@ -767,8 +783,11 @@ object Similarity {
       ()
     }
     // next generation from the _gen marker (one saved aggregate job
-    // per micro-batch; legacy stores fall back to the aggregate)
+    // per micro-batch; legacy stores fall back to the aggregate),
+    // claimed BEFORE the drift append: a replay after a crash between
+    // the two skips a generation instead of writing this one twice
     val gen = nextDriftGen(spark, path)
+    writeDriftGen(spark, path, gen)
     val dims = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(dimsRows.toSeq).asJava),
@@ -792,9 +811,31 @@ object Similarity {
         VectorFunctions.cosine(col("list_mean"), col("centroid"))
           .as("mean_cos"))
       .write.mode("append").parquet(s"$path/drift")
-    writeDriftGen(spark, path, gen)
     ()
   }
+
+  /** Per-list drift inputs of a rewritten index: (list_id, list_n,
+    * n_added, list_mean) from rows (list_id, embedding, is_new), where
+    * n_added sums the 0/1 `is_new` tag. Means round through FLOAT (the
+    * trained-IVF contract) so the audit is insensitive to double-sum
+    * association order. Each row also explodes one leading sentinel
+    * element, at d = -1, so the row counts include vectors whose
+    * embedding is empty — they add no dimension rows. */
+  private def listMeans(rows: DataFrame): DataFrame =
+    rows.select(col("list_id"), col("is_new"),
+        posexplode(concat(array(lit(null).cast("float")), col("embedding")))
+          .as(Seq("p", "x")))
+      .groupBy(col("list_id"), (col("p") - 1).as("d"))
+      .agg(sum(col("x").cast("double")).as("s"), count(lit(1)).as("n"),
+        sum(col("is_new")).as("nn"))
+      .groupBy(col("list_id"))
+      .agg(max(when(col("d") === -1, col("n"))).as("list_n"),
+        max(when(col("d") === -1, col("nn"))).as("n_added"),
+        transform(
+          sort_array(collect_list(
+            when(col("d") >= 0, struct(col("d"), col("s"), col("n"))))),
+          t => (t.getField("s") / t.getField("n")).cast("float"))
+          .as("list_mean"))
 
   /** Drift-triggered PARTIAL re-train of a persisted IVF index — the
     * policy consumer of the drift table [[appendToIvfIndex]] writes,
@@ -835,7 +876,7 @@ object Similarity {
     val driftPath = new org.apache.hadoop.fs.Path(s"$path/drift")
     val fs = driftPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(driftPath)) return Nil // nothing appended yet: no drift
-    val drift = spark.read.parquet(s"$path/drift")
+    val drift = Tables.read(spark, s"$path/drift")
     val latestW = Window.partitionBy(col("list_id"))
       .orderBy(col("generation").desc)
     val drifted = drift
@@ -844,8 +885,8 @@ object Similarity {
       .select(col("list_id").cast("long"))
       .collect().map(_.getLong(0)).sorted.toSeq
     if (drifted.isEmpty) return Nil
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val lists0 = spark.read.parquet(s"$path/lists")
+    val centroids = Tables.read(spark, s"$path/centroids")
+    val lists0 = Tables.read(spark, s"$path/lists")
     // drifted lists' vectors, tagged with their origin list (partition-
     // pruned read: only the drifted directories are opened)
     val driftedVecs = lists0.where(col("list_id").isin(drifted: _*))
@@ -884,13 +925,15 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         col("list_id").cast("long").as("list_id"))
       .localCheckpoint(true)
-    val merged = existing
-      .union(reassigned.select(col("vec_id"), col("embedding"), col("list_id")))
+    // is_new tags the vectors that CHANGED list, the drift log's n_added
+    val merged = existing.withColumn("is_new", lit(0L))
+      .union(reassigned.select(col("vec_id"), col("embedding"), col("list_id"),
+        (col("list_id") =!= col("orig_list")).cast("long").as("is_new")))
     val previous =
       spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      merged.repartition(col("list_id"))
+      merged.drop("is_new").repartition(col("list_id"))
         .sortWithinPartitions(col("list_id"), col("vec_id"))
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(s"$path/lists")
@@ -907,16 +950,7 @@ object Similarity {
     // merged rows only contain touched lists, so the old
     // where(isin(touched)) re-filter and the separate emptied-partition
     // count were both redundant passes)
-    val dims = merged
-      .select(col("list_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("list_id"), col("d"))
-      .agg(sum(col("x").cast("double")).as("s"), count(lit(1)).as("n"))
-      .groupBy(col("list_id"))
-      .agg(max(col("n")).as("list_n"),
-        transform(
-          sort_array(collect_list(struct(col("d"), col("s"), col("n")))),
-          t => (t.getField("s") / t.getField("n")).cast("float"))
-          .as("list_mean"))
+    val dims = listMeans(merged)
       .localCheckpoint(true) // consumers: emptied-dir check + drift write
     // a drifted list whose every vector moved elsewhere is gone — drop
     // its directory (same contract as the append path)
@@ -932,18 +966,16 @@ object Similarity {
     updated.write.mode("overwrite").parquet(s"$path/centroids")
     // log the retrain as the next generation so the trigger resets and
     // the policy history stays in one append-only table (generation
-    // from the _gen marker — kept in step with the append path)
+    // from the _gen marker, claimed before the append exactly as the
+    // append path does)
     val gen = nextDriftGen(spark, path)
-    val moved = reassigned.where(col("list_id") =!= col("orig_list"))
-      .groupBy(col("list_id")).agg(count(lit(1)).as("n_added"))
-    dims.join(moved, Seq("list_id"), "left")
-      .join(updated, Seq("list_id"))
+    writeDriftGen(spark, path, gen)
+    dims.join(updated, Seq("list_id"))
       .select(lit(gen).as("generation"), col("list_id"),
-        coalesce(col("n_added"), lit(0L)).as("n_added"), col("list_n"),
+        col("n_added"), col("list_n"),
         VectorFunctions.cosine(col("list_mean"), col("centroid"))
           .as("mean_cos"))
       .write.mode("append").parquet(s"$path/drift")
-    writeDriftGen(spark, path, gen)
     driftedVecs.unpersist(); reassigned.unpersist(); existing.unpersist()
     dims.unpersist()
     drifted

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.functions.VectorFunctions
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -197,7 +198,7 @@ object VectorStoreWriter {
           // overwrite a path we are still lazily reading from
           val touched = bucketed.select(col("doc_bucket")).distinct()
           val reingested = bucketed.select(col("documentid")).distinct()
-          val survivors = session.read.parquet(path)
+          val survivors = Tables.read(session, path)
             .join(broadcast(touched), Seq("doc_bucket"), "left_semi")
             .join(reingested, Seq("documentid"), "left_anti")
             .select(bucketed.columns.map(col): _*)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.pipeline.IngestionPipeline
 import graft.sinks.VectorStoreWriter
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -171,7 +172,7 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val base = spark.read.parquet(snapshotPath)
+        val base = Tables.read(spark, snapshotPath)
           .select(col("doc_id"), col("text"))
         val next = graft.operators.Corpus.applyChangelog(base, batch)
           .select(col("doc_id"), col("text"))

@@ -79,47 +79,22 @@ class AutoPlanesSpec extends SparkSpecBase {
     // auto-path construction schedules exactly one more job (the
     // count) than knownCount construction of the same operator.
     val v = vectors(512).localCheckpoint(true) // materialize input off the clock
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // listener events are async: drain the bus deterministically
-    // (r8 advice: a fixed sleep races under a loaded CI executor) —
-    // LiveListenerBus.waitUntilEmpty() is private[spark], reached via
-    // reflection; any eager job inside `body` has completed by the
-    // time body returns, so a drained bus ⇒ exact job counts
-    def drainListenerBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    def jobsOf(body: => Unit): Int = {
-      drainListenerBus()
-      jobs.set(0)
-      body
-      drainListenerBus()
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // knnLsh is fully lazy apart from the count: knownCount ⇒ 0 jobs
-      val q = v.where(col("vec_id") < 2)
-      assert(jobsOf(Similarity.knnLsh(v, q, dim = 32, k = 3, knownCount = 512L)) == 0)
-      // (a count under AQE may schedule 1-2 jobs, so deltas assert >)
-      val lshDelta = jobsOf(Similarity.knnLsh(v, q, dim = 32, k = 3))
-      assert(lshDelta >= 1, s"knnLsh auto path ran $lshDelta jobs (want the count job)")
-      val mkKnown = jobsOf(Similarity.mutualKnn(v, k = 2, knownCount = 512L))
-      val mkAuto = jobsOf(Similarity.mutualKnn(v, k = 2))
-      assert(mkAuto > mkKnown,
-        s"mutualKnn: auto $mkAuto vs known $mkKnown jobs (count not suppressed)")
-      val ecKnown = jobsOf(graft.operators.Dedup.embeddingCosinePairs(
-        v, threshold = 0.999, knownCount = 512L))
-      val ecAuto = jobsOf(graft.operators.Dedup.embeddingCosinePairs(v, threshold = 0.999))
-      assert(ecAuto > ecKnown,
-        s"embeddingCosinePairs: auto $ecAuto vs known $ecKnown jobs (count not suppressed)")
-      // and the derived plane count must equal the counted path's
-      assert(Similarity.autoPlanes(512L) == Similarity.autoPlanes(v.count()))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // knnLsh is fully lazy apart from the count: knownCount ⇒ 0 jobs
+    val q = v.where(col("vec_id") < 2)
+    assert(jobsOf(Similarity.knnLsh(v, q, dim = 32, k = 3, knownCount = 512L))._2 == 0)
+    // (a count under AQE may schedule 1-2 jobs, so deltas assert >)
+    val lshDelta = jobsOf(Similarity.knnLsh(v, q, dim = 32, k = 3))._2
+    assert(lshDelta >= 1, s"knnLsh auto path ran $lshDelta jobs (want the count job)")
+    val mkKnown = jobsOf(Similarity.mutualKnn(v, k = 2, knownCount = 512L))._2
+    val mkAuto = jobsOf(Similarity.mutualKnn(v, k = 2))._2
+    assert(mkAuto > mkKnown,
+      s"mutualKnn: auto $mkAuto vs known $mkKnown jobs (count not suppressed)")
+    val ecKnown = jobsOf(graft.operators.Dedup.embeddingCosinePairs(
+      v, threshold = 0.999, knownCount = 512L))._2
+    val ecAuto = jobsOf(graft.operators.Dedup.embeddingCosinePairs(v, threshold = 0.999))._2
+    assert(ecAuto > ecKnown,
+      s"embeddingCosinePairs: auto $ecAuto vs known $ecKnown jobs (count not suppressed)")
+    // and the derived plane count must equal the counted path's
+    assert(Similarity.autoPlanes(512L) == Similarity.autoPlanes(v.count()))
   }
 }

@@ -151,22 +151,12 @@ class CorpusSpec extends SparkSpecBase {
     // count the Spark jobs the local path schedules: must not scale
     // with nMerges (the whole point of the gate — 30k merges as jobs
     // would be 60k+ scheduled stages over a driver-sized table)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val local = try {
-      val r = Corpus.bpeMerges(corpus, nMerges = 12)
-      Thread.sleep(500) // listener bus is async; let job-start events drain
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (local, jobs) = jobsOf(Corpus.bpeMerges(corpus, nMerges = 12))
     assert(local == distributed, s"paths diverged:\nlocal       = $local\ndistributed = $distributed")
     assert(local.length == 12)
     // checkpoint + count + collect cost a constant handful of jobs;
     // the bound only has to be well under one-job-PER-MERGE (12+)
-    assert(jobs.get() <= 8, s"local path scheduled ${jobs.get()} jobs for 12 merges")
+    assert(jobs <= 8, s"local path scheduled $jobs jobs for 12 merges")
   }
 
   test("bpeEncode: iterative min-rank greedy, multi-level merges, leftmost-first rounds") {

@@ -6,6 +6,63 @@ import org.apache.spark.sql.functions._
 class IvfFramesSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** (list_id, centroid) rows of the index at `dir`, read from disk. */
+  private def centroidsOnDisk(dir: String): Seq[(Long, Array[Float])] =
+    spark.read.parquet(s"$dir/centroids")
+      .select(col("list_id").cast("long"), col("centroid"))
+      .as[(Long, Array[Float])].collect().toSeq
+
+  /** The lists a probe of `q` scans under `cents`: its `nProbe`
+    * nearest centroids by cosine, ties to the lower list id. */
+  private def nearestLists(cents: Seq[(Long, Array[Float])], q: Array[Float],
+                           nProbe: Int): Seq[Long] = {
+    def cos(c: Array[Float]): Double = {
+      val dot = q.zip(c).map { case (a, b) => a.toDouble * b }.sum
+      val den = math.sqrt(q.map(v => v.toDouble * v).sum) * math.sqrt(c.map(v => v.toDouble * v).sum)
+      if (den == 0.0) 0.0 else dot / den
+    }
+    cents.map { case (id, c) => (id, cos(c)) }
+      .sortBy { case (id, c) => (-c, id) }.take(nProbe).map(_._1)
+  }
+
+  /** Exact top-k vec_ids, (cos desc, vec_id asc), over the given lists
+    * of the index at `dir` (every list when `lists` is None). */
+  private def exactTopK(dir: String, q: Array[Float], lists: Option[Seq[Long]],
+                        k: Int = 5): Seq[Long] = {
+    val all = spark.read.parquet(s"$dir/lists")
+    lists.map(ls => all.where(col("list_id").isin(ls: _*))).getOrElse(all)
+      .select(col("vec_id"),
+        graft.functions.VectorFunctions.cosine(col("embedding"),
+          typedlit(q.toSeq)).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id").asc).limit(k)
+      .as[(Long, Double)].collect().map(_._1).toSeq
+  }
+
+  /** After the index at `dir` was rewritten, a probe follows the
+    * centroids now on disk, not the `stale` ones it was probed under
+    * before: for a stored vector whose one-list probe under the stale
+    * centroids would scan another list and return other rows, the
+    * probe equals the exact top-k over the list the current centroids
+    * pick; and a full probe equals brute force over the new contents. */
+  private def assertProbesFresh(dir: String, stale: Seq[(Long, Array[Float])],
+                                nLists: Int): Unit = {
+    val fresh = centroidsOnDisk(dir)
+    val stored = spark.read.parquet(s"$dir/lists")
+      .select("embedding").as[Array[Float]].collect()
+    val q = stored.find { v =>
+      val (now, before) = (nearestLists(fresh, v, 1), nearestLists(stale, v, 1))
+      now != before && exactTopK(dir, v, Some(now)) != exactTopK(dir, v, Some(before))
+    }
+    assert(q.isDefined, "no stored vector tells stale centroids from fresh ones")
+    val got = Similarity.probeIvfIndex(spark, dir, q.get, k = 5, nProbe = 1)
+      .as[(Long, Double)].collect().map(_._1).toSeq
+    assert(got == exactTopK(dir, q.get, Some(nearestLists(fresh, q.get, 1))),
+      "probe used stale centroids")
+    val full = Similarity.probeIvfIndex(spark, dir, q.get, k = 5, nProbe = nLists)
+      .as[(Long, Double)].collect().map(_._1).toSeq
+    assert(full == exactTopK(dir, q.get, None))
+  }
+
   test("knnIvf with full probing matches brute force exactly") {
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val queries = emb.where(col("vec_id") < 3)
@@ -41,6 +98,21 @@ class IvfFramesSpec extends SparkSpecBase {
       .orderBy(col("cos").desc, col("vec_id").asc).limit(5)
       .as[(Long, Double)].collect().map(_._1).toSeq
     assert(all == bf)
+    // a warm probe of an unchanged index runs ONE job, the pruned scan:
+    // its centroids come from the driver memo and its lists open
+    // without a schema-inference job; its rows are the batched probe's
+    val (warm, warmJobs) = jobsOf(
+      Similarity.probeIvfIndex(spark, dir, query, k = 5, nProbe = 2).collect().toSeq)
+    assert(warmJobs == 1, s"warm probe ran $warmJobs jobs")
+    val batched = Similarity.probeIvfIndexBatch(spark, dir, Seq((7L, query)),
+        k = 5, nProbe = 2)
+      .orderBy(col("cos").desc, col("vec_id").asc)
+      .select("vec_id", "cos").collect().toSeq
+    assert(warm == batched)
+    // the memo is not stale: overwrite the same path with other vectors
+    val stale = centroidsOnDisk(dir)
+    Similarity.writeIvfIndex(emb.where(col("vec_id") % 2 === 1), dir, nLists = 8)
+    assertProbesFresh(dir, stale, nLists = 8)
   }
 
   test("appendToIvfIndex: copy-on-write lists, rebuild-equal probe, drift recorded") {
@@ -185,6 +257,94 @@ class IvfFramesSpec extends SparkSpecBase {
     assert(gens == (0L to (gen2 + 1)).toSeq, gens.toString)
   }
 
+  test("Tables.read: spark.read.parquet's schema and errors, without its inference job") {
+    import graft.sources.Tables
+    val work = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    Similarity.writeIvfIndex(emb.where(col("vec_id") < 100), s"$work/ivf", nLists = 4)
+    // vector stores, float and double embeddings, written twice so the
+    // second write's survivor read goes through Tables.read too
+    def records(docs: Range, double: Boolean) = {
+      val e = typedlit(Seq(0.5f, -1.25f, 2f))
+      docs.map(d => (s"$d:0", s"text $d", "", d.toString)).toDF("key", "content", "context", "documentid")
+        .withColumn("embedding", if (double) e.cast("array<double>") else e)
+    }
+    for (double <- Seq(false, true)) {
+      val store = s"$work/store_$double"
+      graft.sinks.VectorStoreWriter.writeWithLayout(records(0 until 20, double), store)
+      graft.sinks.VectorStoreWriter.writeWithLayout(records(10 until 30, double), store)
+    }
+    val tables = Seq("ivf/lists", "ivf/centroids", "store_false", "store_true")
+    for (t <- tables) {
+      val path = s"$work/$t"
+      val (opened, jobs) = jobsOf(Tables.read(spark, path))
+      assert(jobs == 0, s"$t: opening ran $jobs jobs")
+      val inferred = spark.read.parquet(path)
+      assert(opened.schema == inferred.schema, s"$t: ${opened.schema} vs ${inferred.schema}")
+      assert(opened.count() == inferred.count())
+    }
+    assert(spark.read.parquet(s"$work/store_true").schema("embedding").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    assert(spark.read.parquet(s"$work/store_false").count() == 30)
+    // no data file: the same error as spark.read.parquet
+    val empty = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(work, "empty"))
+    val successOnly = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(work, "success"))
+    java.nio.file.Files.createFile(successOnly.resolve("_SUCCESS"))
+    for (dir <- Seq(empty.toString, successOnly.toString, s"$work/missing")) {
+      val want = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(dir))
+      val got = intercept[org.apache.spark.sql.AnalysisException](Tables.read(spark, dir))
+      assert(got.getMessage == want.getMessage)
+    }
+    // a session that merges schemas gets the merged schema, as before
+    val mixed = s"$work/mixed"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$mixed/part=1")
+    Seq((2L, 2.0)).toDF("id", "d").write.parquet(s"$mixed/part=2")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try assert(Tables.read(spark, mixed).schema == spark.read.parquet(mixed).schema &&
+      Tables.read(spark, mixed).columns.toSet == Set("id", "s", "d", "part"))
+    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert(Tables.read(spark, mixed).schema == spark.read.parquet(mixed).schema)
+  }
+
+  test("appendToIvfIndex: an empty embedding counts in its list's n_added and list_n") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    Similarity.writeIvfIndex(emb.where(col("vec_id") < 100), dir, nLists = 4)
+    Similarity.appendToIvfIndex(spark, dir,
+      Seq((9100L, Array.empty[Float])).toDF("vec_id", "embedding"))
+    val home = spark.read.parquet(s"$dir/lists").where(col("vec_id") === 9100L)
+      .select(col("list_id").cast("long")).as[Long].collect()
+    assert(home.length == 1, s"empty-embedding vector stored ${home.length} times")
+    val listSize = spark.read.parquet(s"$dir/lists")
+      .where(col("list_id") === home.head).count()
+    val drift = spark.read.parquet(s"$dir/drift")
+      .select(col("list_id").cast("long"), col("n_added"), col("list_n"))
+      .as[(Long, Long, Long)].collect()
+    assert(drift.toSeq == Seq((home.head, 1L, listSize)), drift.toSeq.toString)
+  }
+
+  test("appendToIvfIndex: a retry after a failed drift write uses a generation no earlier append used") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-gen").toString
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    Similarity.writeIvfIndex(emb.where(col("vec_id") < 100), dir, nLists = 4)
+    Similarity.appendToIvfIndex(spark, dir, emb.where(col("vec_id").between(100, 102)))
+    // a FILE where the drift write's staging directory goes: the lists
+    // rewrite and the generation claim succeed, the drift append throws
+    val blocker = new java.io.File(s"$dir/drift/_temporary")
+    assert(blocker.createNewFile())
+    val batch = emb.where(col("vec_id").between(103, 105))
+    intercept[Exception](Similarity.appendToIvfIndex(spark, dir, batch))
+    blocker.delete()
+    def gens() = spark.read.parquet(s"$dir/drift")
+      .select(col("generation")).distinct().as[Long].collect().sorted.toSeq
+    assert(gens() == Seq(0L), "the failed append wrote drift rows")
+    Similarity.appendToIvfIndex(spark, dir, batch)
+    // the failed attempt claimed generation 1; the retry must not reuse it
+    assert(gens() == Seq(0L, 2L), gens().toString)
+    val lists = spark.read.parquet(s"$dir/lists")
+    assert(lists.count() == 106 && lists.select("vec_id").distinct().count() == 106)
+  }
+
   test("maybeRetrainIvfIndex: fires only past the drift threshold, re-trains only drifted lists") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-retrain").toString
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
@@ -223,6 +383,8 @@ class IvfFramesSpec extends SparkSpecBase {
     // below it re-train
     val thr = minCos + 1e-9
     val expectDrifted = obs.filter(_._2 < thr).keys.toSeq.sorted
+    // a probe before the re-train holds the old centroids in the memo
+    Similarity.probeIvfIndex(spark, dir, centBefore.head._2, k = 5, nProbe = 1).collect()
     val got = Similarity.maybeRetrainIvfIndex(spark, dir, thr)
     assert(got == expectDrifted && got.nonEmpty, s"got $got vs $expectDrifted")
     // re-trained centroid moved; untouched lists' files are byte-identical
@@ -261,6 +423,8 @@ class IvfFramesSpec extends SparkSpecBase {
       .orderBy(col("cos").desc, col("vec_id").asc).limit(5)
       .as[(Long, Double)].collect().map(_._1).toSeq
     assert(probed == bf)
+    // … and a partial probe follows the re-trained centroids
+    assertProbesFresh(dir, centBefore.toSeq, nLists = 4)
     // the trigger reset: the re-trained lists do not fire again at the
     // same threshold (their centroid now sits on their mean)
     val second = Similarity.maybeRetrainIvfIndex(spark, dir, thr)
