@@ -3909,7 +3909,7 @@ object SparkEntry {
 
     "s_pairwise_dups" -> ((s, dir) => {
       // nPlanes pinned for oracle parity (library default auto-scales)
-      Similarity.pairwiseHighCosine(vecsWithDups(tbl(s, dir, "embeddings")),
+      Dedup.embeddingCosinePairs(vecsWithDups(tbl(s, dir, "embeddings")),
           threshold = 0.85, nPlanes = 8)
         .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
         .orderBy(col("a"), col("b"))

@@ -62,11 +62,16 @@ object Dedup {
                         threshold: Double = 0.8,
                         maxDocsPerShingle: Int = 1000): DataFrame =
     ngramPairCounts(documents, n, maxDocsPerShingle)
-      // jaccard >= t  ⇔  inter >= t * (na + nb - inter); basis-point
-      // scaling keeps integer arithmetic without quantizing the
-      // caller's threshold to whole percents
-      .where(col("inter") * lit(10000) >= lit((threshold * 10000).round) * (col("na") + col("nb") - col("inter")))
+      .where(jaccardAtLeast(lit((threshold * 10000).round)))
       .select(col("a"), col("b"), col("inter"), col("na"), col("nb"))
+
+  /** jaccard >= t  ⇔  inter >= t * (na + nb - inter), over the
+    * (inter, na, nb) columns of a sized pair set, with `tBps` the
+    * threshold in basis points: the scaling keeps integer arithmetic
+    * without quantizing the caller's threshold to whole percents. The
+    * one acceptance test of every n-gram Jaccard operator. */
+  private def jaccardAtLeast(tBps: Column): Column =
+    col("inter") * lit(10000) >= tBps * (col("na") + col("nb") - col("inter"))
 
   /** Dedup-aggressiveness sweep: pair and affected-document counts at
     * several Jaccard thresholds from ONE candidate pass — the tuning
@@ -79,8 +84,8 @@ object Dedup {
     * Scale shape: the shared [[ngramJaccardPairs]] candidate stage
     * runs once; the tiny threshold table broadcasts into an
     * inequality join against the pairs-bounded counts, and the
-    * acceptance test is the same integer basis-point arithmetic as
-    * the production operators — no float threshold can disagree with
+    * acceptance test is the production operators' own integer
+    * basis-point inequality — no float threshold can disagree with
     * what [[ngramJaccardPairs]] would actually keep.
     */
   def dedupSweep(documents: DataFrame, n: Int = 3,
@@ -90,8 +95,7 @@ object Dedup {
     import documents.sparkSession.implicits._
     val tdf = thresholdsBps.toDF("t_bps")
     val hits = ngramPairCounts(documents, n, maxDocsPerShingle)
-      .join(broadcast(tdf),
-        col("inter") * lit(10000) >= col("t_bps") * (col("na") + col("nb") - col("inter")))
+      .join(broadcast(tdf), jaccardAtLeast(col("t_bps")))
       .select(col("t_bps"), explode(array(col("a"), col("b"))).as("d"))
     val ag = hits.groupBy(col("t_bps")).agg(
       (count(lit(1)) / 2).cast("long").as("n_pairs"),
@@ -175,21 +179,13 @@ object Dedup {
       // deduped by x < y, which also drops self-pairs
       .where((!col("is_new") && col("x") =!= col("y")) ||
         (col("is_new") && col("x") < col("y")))
-    val pairCounts = pairsRaw
-      .groupBy(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .agg(count(lit(1)).as("inter"))
-      .localCheckpoint(true)
-    val pairDocs = pairCounts.select(col("a").as("doc_id"))
-      .union(pairCounts.select(col("b").as("doc_id"))).distinct()
-    val prunedSizes = sizes(corpus).unionByName(sizes(delta))
-      .join(pairDocs, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
-    pairCounts
-      .join(prunedSizes.select(col("doc_id").as("a"), col("n_sh").as("na")), Seq("a"))
-      .join(prunedSizes.select(col("doc_id").as("b"), col("n_sh").as("nb")), Seq("b"))
-      .where(col("inter") * lit(10000) >=
-        lit((threshold * 10000).round) * (col("na") + col("nb") - col("inter")))
+    sizedPairs(
+      pairsRaw
+        .groupBy(least(col("x"), col("y")).as("a"),
+          greatest(col("x"), col("y")).as("b"))
+        .agg(count(lit(1)).as("inter")),
+      sizes(corpus).unionByName(sizes(delta)))
+      .where(jaccardAtLeast(lit((threshold * 10000).round)))
       .select(col("a"), col("b"), col("inter"), col("na"), col("nb"))
   }
 
@@ -230,17 +226,25 @@ object Dedup {
           )
         }
       ))).as("p"))
+    sizedPairs(pairs
+      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(count(lit(1)).as("inter")), sizes)
+  }
+
+  /** The size tail shared by [[ngramPairCounts]] and
+    * [[incrementalNgramPairs]]: an (a, b, inter) pair set with both
+    * sides' distinct-shingle counts attached as (na, nb), from a
+    * (doc_id, n_sh) table. */
+  private def sizedPairs(counts: DataFrame, sizes: DataFrame): DataFrame = {
     // pairCounts has THREE consumers below (both pairDocs legs + the
     // final join input). ReuseExchange only dedups the shuffle WRITE —
-    // the collect_list bucket aggregate and the pair-gen explode sit
-    // ABOVE the shingle exchange and would re-execute per consumer
-    // (measured: 5 copies of the pair-gen pipeline in the un-checkpointed
-    // plan). Materializing the (a,b,inter) pair set — tiny relative to
-    // the corpus — runs the expensive stage exactly once.
-    val pairCounts = pairs
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("inter"))
-      .localCheckpoint(true)
+    // the candidate stage (e.g. the collect_list bucket aggregate and
+    // the pair-gen explode) sits ABOVE its exchange and would
+    // re-execute per consumer (measured: 5 copies of the pair-gen
+    // pipeline in the un-checkpointed plan). Materializing the
+    // (a,b,inter) pair set — tiny relative to the corpus — runs the
+    // expensive stage exactly once.
+    val pairCounts = counts.localCheckpoint(true)
     // Semi-join pruning: `sizes` is corpus-cardinality, so joining it to
     // the candidate pairs directly only stays broadcast while the CORPUS
     // fits the broadcast cap. Restricting sizes to doc ids that survived
@@ -255,7 +259,7 @@ object Dedup {
       .union(pairCounts.select(col("b").as("doc_id"))).distinct()
     // checkpointed for the same reason: prunedSizes feeds both the a-
     // and b-side rejoins, and without materialization the corpus-wide
-    // shingle-size scan above would execute once per side
+    // shingle-size scan would execute once per side
     val prunedSizes = sizes.join(pairDocs, Seq("doc_id"), "left_semi")
       .localCheckpoint(true)
     pairCounts
@@ -266,59 +270,21 @@ object Dedup {
   /** MinHash + LSH near-duplicate pairs: k-minhash signature, banded
     * into `k/rowsPerBand` keys; docs sharing a band key are candidates;
     * candidates are verified with true shingle Jaccard. One shuffle on
-    * band keys (tiny rows), one candidate-pair verify join.
+    * band keys (tiny rows), one candidate-pair verify join. These are
+    * the self-pairs of the persisted index's rows ([[indexRows]]), so
+    * the index probe and the streaming seed batch find the same pairs.
     */
   def minhashLshPairs(documents: DataFrame, n: Int = 3, k: Int = 16,
-                      rowsPerBand: Int = 4, threshold: Double = 0.8): DataFrame = {
-    val withSig = documents
-      // cheap pushdown-able predicate (text has a non-ws char ⇔ tokens
-      // exist); filtering on size(sh) would push the whole shingle
-      // expression into the scan as a DataFilter and re-evaluate it
-      .where(col("text").rlike("\\S"))
-      .select(
-        col("doc_id"),
-        TextFunctions.shingleHashes(col("text"), n).as("sh"))
-      .withColumn("bands", TextFunctions.lshBandKeys(
-        TextFunctions.minHashSignature(col("sh"), k), k, rowsPerBand))
-      // materialized ONCE: four consumers below (both sides of the
-      // banded self-join + both verify rejoins) would otherwise each
-      // re-run the full shingle+minhash+band pipeline (plus partial
-      // re-evaluations as inferred DataFilters pushed into the text
-      // scan). One materialization of (doc_id, shingles, bands) trades
-      // a corpus-sized spill for 4× the signature compute — the same
-      // trade a 1000-executor run wants.
-      .localCheckpoint(true)
-
-    // candidate generation on BARE IDS: the (band, key) self-join
-    // moves 3 longs per banded row — shingle arrays never enter the
-    // bucket exchange (they used to ride both sides, ~nBands × corpus
-    // shingle volume through the biggest shuffle of the pipeline).
-    val banded = withSig.select(
-      col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
-    val a = banded.select(col("band"), col("key"), col("doc_id").as("a"))
-    val b = banded.select(col("band"), col("key"), col("doc_id").as("b"))
-    val candidates = a.join(b, Seq("band", "key"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      // a pair can collide in ≤ k/rowsPerBand bands → dedup BEFORE the
-      // array verify so each pair fetches its shingle sets once; this
-      // shuffle carries 2 longs per row
-      .distinct()
-    // verify with two pairs-bounded rejoins against the checkpointed
-    // signature table: candidates ≪ corpus × bands after LSH, so AQE
-    // broadcasts the pair side and the (doc_id, sh) table never
-    // shuffles; the sort-merge fallback (a pathological boilerplate
-    // corpus) moves each shingle set once per rejoin — still ~4× less
-    // array volume than the old banded self-join at nBands = 4
-    val sig = withSig.select(col("doc_id"), col("sh"))
-    candidates
-      .join(sig.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(sig.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .select(col("a"), col("b"),
-        size(array_intersect(col("sha"), col("shb"))).as("inter"),
-        size(col("sha")).as("na"), size(col("shb")).as("nb"))
-      .where(col("inter").cast("double") / (col("na") + col("nb") - col("inter")) >= threshold)
-  }
+                      rowsPerBand: Int = 4, threshold: Double = 0.8): DataFrame =
+    // rows materialized ONCE: four consumers (both sides of the banded
+    // self-join + both verify rejoins) would otherwise each re-run the
+    // full shingle+minhash+band pipeline (plus partial re-evaluations
+    // as inferred DataFilters pushed into the text scan). One
+    // materialization of (doc_id, shingles, bands) trades a
+    // corpus-sized spill for 4× the signature compute — the same trade
+    // a 1000-executor run wants.
+    selfPairsFromRows(indexRows(documents, n, k, rowsPerBand).localCheckpoint(true),
+      threshold)
 
   /** SimHash near-duplicate pairs (Manku et al., "Detecting
     * Near-Duplicates for Web Crawling" — the multi-table wide-key
@@ -370,14 +336,8 @@ object Dedup {
     // df-cut: a dup-heavy corpus puts every copy of a popular page in
     // the same block bucket → quadratic fan-out in one join task. The
     // bucket key space is bounded (nBlocks * 2^blockWidth, ≤ 256K for
-    // maxHamming=3) so the over-cap set is map-side-combined, tiny, and
-    // broadcast; dropping hot buckets is the standard df-cut trade
-    // (those pairs are overwhelmingly exact dups — catch them with
-    // exactDedup first).
-    val hot = blocks.groupBy(col("blk"), col("key"))
-      .agg(count(lit(1)).as("cnt")).where(col("cnt") > maxDocsPerBucket)
-      .select(col("blk"), col("key"))
-    val capped = blocks.join(broadcast(hot), Seq("blk", "key"), "left_anti")
+    // maxHamming=3) so the over-cap set is tiny
+    val capped = dropHotBuckets(blocks, Seq("blk", "key"), maxDocsPerBucket)
     val a = capped.select(col("blk"), col("key"), col("doc_id").as("a"), col("sim").as("sima"))
     val b = capped.select(col("blk"), col("key"), col("doc_id").as("b"), col("sim").as("simb"))
     a.join(b, Seq("blk", "key"))
@@ -389,6 +349,20 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .select(col("a"), col("b"), col("hamming"))
       .dropDuplicates("a", "b")
+  }
+
+  /** `df` without the rows of buckets (rows sharing `keys`) holding
+    * more than `cap` rows — the quadratic-fan-out guard of every
+    * bucketed pair join. The bucket count is map-side combined over
+    * the keys alone and the over-cap set broadcasts into a left_anti
+    * join; dropping hot buckets is the standard df-cut trade (their
+    * pairs are overwhelmingly exact dups — catch them with exactDedup
+    * first). */
+  private def dropHotBuckets(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val hot = df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("cnt")).where(col("cnt") > cap)
+      .select(keys.map(col): _*)
+    df.join(broadcast(hot), keys, "left_anti")
   }
 
   /** Connected components over a near-duplicate pair set — the step
@@ -597,19 +571,6 @@ object Dedup {
       .join(dropped, Seq("vec_id"), "left_anti")
   }
 
-  /** Embedding-cosine near-duplicate pairs over a vector table
-    * (vec_id, embedding): random-hyperplane LSH buckets (same-bucket
-    * candidates only) verified by exact cosine.
-    *
-    * `nPlanes` trades recall for bucket size and MUST scale with the
-    * corpus: 2^nPlanes buckets means the within-bucket verify join is
-    * O((N/2^nPlanes)²) expected work. Size it so N/2^nPlanes stays near
-    * `maxDocsPerBucket` — 8 planes is for ~10⁵ vectors; a 100 TB corpus
-    * (10⁹–10¹⁰ vectors) needs ≥ 20–24 planes. `maxDocsPerBucket` is the
-    * backstop for skewed buckets (embedding-space hot spots): over-cap
-    * buckets are dropped via a broadcast anti-join (the bucket-count
-    * aggregate is map-side combined into ≤ 2^nPlanes rows).
-    */
   /** Fuzzy (edit-distance) near-duplicate pairs over a fixed-length
     * document head: (a, b, dist) with levenshtein(head_a, head_b) <=
     * maxDist, the classic small-edit catch (typo'd re-crawls, trailing
@@ -628,8 +589,8 @@ object Dedup {
     * Scale shape: one shuffle on the (slot, segment) key carrying
     * (doc_id, head) — heads are `headLen` chars, never whole
     * documents. Per-key fan-out is s² for a segment shared by s docs,
-    * so boilerplate-prefix hot segments are dropped via the same
-    * broadcast anti-join guard as [[embeddingCosinePairs]]. Catalyst
+    * so boilerplate-prefix hot segments are dropped by the shared
+    * [[dropHotBuckets]] guard. Catalyst
     * pushes the Levenshtein predicate INTO the candidate join (it is
     * a deterministic filter over the final grouping columns), so the
     * verify runs per candidate co-occurrence — at most `segments`×
@@ -643,6 +604,7 @@ object Dedup {
                      segments: Int = 3, maxDist: Int = 2,
                      maxDocsPerSegment: Int = 1000): DataFrame = {
     require(segments > maxDist, "pigeonhole blocking needs segments > maxDist")
+    require(headLen >= segments, "each of the segments needs at least one head char")
     val width = headLen / segments
     val slots = documents
       .select(col("doc_id"), substring(col("text"), 1, headLen).as("head"))
@@ -650,10 +612,7 @@ object Dedup {
         explode(sequence(lit(0), lit(segments - 1))).as("slot"))
       .withColumn("seg", expr(s"substring(head, slot * $width + 1, $width)"))
       .where(length(col("seg")) > 0)
-    val hot = slots.groupBy(col("slot"), col("seg"))
-      .agg(count(lit(1)).as("cnt")).where(col("cnt") > maxDocsPerSegment)
-      .select(col("slot"), col("seg"))
-    val capped = slots.join(broadcast(hot), Seq("slot", "seg"), "left_anti")
+    val capped = dropHotBuckets(slots, Seq("slot", "seg"), maxDocsPerSegment)
     val a = capped.select(col("slot"), col("seg"), col("doc_id").as("a"), col("head").as("ha"))
     val b = capped.select(col("slot"), col("seg"), col("doc_id").as("b"), col("head").as("hb"))
     a.join(b, Seq("slot", "seg"))
@@ -664,6 +623,19 @@ object Dedup {
       .select(col("a"), col("b"), col("dist"))
   }
 
+  /** Embedding-cosine near-duplicate pairs over a vector table
+    * (vec_id, embedding): random-hyperplane LSH buckets (same-bucket
+    * candidates only) verified by exact cosine.
+    *
+    * `nPlanes` trades recall for bucket size and MUST scale with the
+    * corpus: 2^nPlanes buckets means the within-bucket verify join is
+    * O((N/2^nPlanes)²) expected work. Size it so N/2^nPlanes stays near
+    * `maxDocsPerBucket` — 8 planes is for ~10⁵ vectors; a 100 TB corpus
+    * (10⁹–10¹⁰ vectors) needs ≥ 20–24 planes. `maxDocsPerBucket` is the
+    * backstop for skewed buckets (embedding-space hot spots): over-cap
+    * buckets are dropped via a broadcast anti-join (the bucket-count
+    * aggregate is map-side combined into ≤ 2^nPlanes rows).
+    */
   def embeddingCosinePairs(vectors: DataFrame,
                            threshold: Double = 0.95,
                            nPlanes: Int = 0,
@@ -703,10 +675,7 @@ object Dedup {
       .localCheckpoint(true)
     // the hot-bucket count aggregate is map-side partial on (bucket)
     // alone — no array reaches its exchange
-    val hot = bucketed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cnt")).where(col("cnt") > maxDocsPerBucket)
-      .select(col("bucket"))
-    val capped = bucketed.join(broadcast(hot), Seq("bucket"), "left_anti")
+    val capped = dropHotBuckets(bucketed, Seq("bucket"), maxDocsPerBucket)
     val a = capped.select(col("bucket"), col("vec_id").as("a"),
       col("embedding").as("ea"))
     val b = capped.select(col("bucket"), col("vec_id").as("b"),
@@ -793,55 +762,63 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** Hashed signature+band rows for `documents` — the persisted
-    * index's unit of storage and the probe's unit of work. The
-    * derivation is identical to [[minhashLshPairs]]'s, so a probe
-    * against the store reproduces the batch pipeline's candidates
-    * exactly. private[graft] so the streaming curation loop can
-    * compute a batch's rows ONCE and share them between probe and
-    * append: the batch text is scanned and shingled a single time,
-    * which at continuous-ingestion scale halves the curation path's
-    * CPU. */
+    * index's unit of storage and the probe's unit of work.
+    * [[minhashLshPairs]] pairs these same rows, so a probe against the
+    * store reproduces the batch pipeline's candidates exactly.
+    * private[graft] so the streaming curation loop can compute a
+    * batch's rows ONCE and share them between probe and append: the
+    * batch text is scanned and shingled a single time, which at
+    * continuous-ingestion scale halves the curation path's CPU. */
   private[graft] def indexRows(documents: DataFrame, n: Int = 3, k: Int = 16,
                                rowsPerBand: Int = 4): DataFrame =
     documents
+      // cheap pushdown-able predicate (text has a non-ws char ⇔ tokens
+      // exist); filtering on size(sh) would push the whole shingle
+      // expression into the scan as a DataFilter and re-evaluate it
       .where(col("text").rlike("\\S"))
       .select(col("doc_id"),
         TextFunctions.shingleHashes(col("text"), n).as("sh"))
-      .withColumn("bands", TextFunctions.lshBandKeys(
-        TextFunctions.minHashSignature(col("sh"), k), k, rowsPerBand))
+      .withColumn("bands", bandKeys(col("sh"), k, rowsPerBand))
+
+  /** LSH band keys of a shingle-hash set: the k-minhash signature cut
+    * into `k/rowsPerBand` bands. Index rows and retraction both derive
+    * keys here, so a retracted doc's recomputed keys match its stored
+    * ones. */
+  private def bandKeys(sh: Column, k: Int, rowsPerBand: Int): Column =
+    TextFunctions.lshBandKeys(TextFunctions.minHashSignature(sh, k), k, rowsPerBand)
+
+  /** (doc_id, band, key): one row per band of each index row. */
+  private def banded(rows: DataFrame): DataFrame =
+    rows.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "key")))
 
   /** Build the persisted index at `path`. One pass over the corpus
     * text, then the text is never needed again: probes and appends
     * touch only hashed longs. */
   def writeDedupIndex(documents: DataFrame, path: String, n: Int = 3,
-                      k: Int = 16, rowsPerBand: Int = 4): Unit = {
+                      k: Int = 16, rowsPerBand: Int = 4): Unit =
+    writeIndex(documents, path, n, k, rowsPerBand, "overwrite")
+
+  private def writeIndex(documents: DataFrame, path: String, n: Int, k: Int,
+                         rowsPerBand: Int, saveMode: String): Unit = {
     val rows = indexRows(documents, n, k, rowsPerBand)
       .localCheckpoint(true) // two writes below share one signature pass
-    writeIndexRows(rows, path, "overwrite")
+    writeIndexRows(rows, path, saveMode)
     rows.unpersist()
   }
 
-  /** Write precomputed [[indexRows]] as the index's two tables. */
-  private def writeIndexRows(rows: DataFrame, path: String,
-                             saveMode: String): Unit = {
-    rows.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band", "key")))
+  /** Write precomputed (already materialized) [[indexRows]] as the
+    * index's two tables. private[graft] for the curation loop: the
+    * same rows that fed its probe land in the store without a second
+    * text scan. */
+  private[graft] def writeIndexRows(rows: DataFrame, path: String,
+                                    saveMode: String): Unit = {
+    banded(rows)
       .repartition(col("band"))
       .sortWithinPartitions(col("band"), col("key"))
       .write.mode(saveMode).partitionBy("band").parquet(s"$path/bands")
     rows.select(col("doc_id"), col("sh"))
       .write.mode(saveMode).parquet(s"$path/signatures")
   }
-
-  /** [[writeDedupIndex]] / [[appendToDedupIndex]] from precomputed
-    * (already materialized) [[indexRows]] — the curation loop's path:
-    * the same rows that fed the probe land in the store without a
-    * second text scan. */
-  private[graft] def writeRowsAsDedupIndex(rows: DataFrame, path: String): Unit =
-    writeIndexRows(rows, path, "overwrite")
-
-  private[graft] def appendRowsToDedupIndex(rows: DataFrame, path: String): Unit =
-    writeIndexRows(rows, path, "append")
 
   /** APPEND new documents to a persisted index. Append-only contract:
     * doc_ids must be new (a changed document is a new id or a rebuild
@@ -852,12 +829,8 @@ object Dedup {
     */
   def appendToDedupIndex(spark: SparkSession, path: String,
                          newDocuments: DataFrame, n: Int = 3, k: Int = 16,
-                         rowsPerBand: Int = 4): Unit = {
-    val rows = indexRows(newDocuments, n, k, rowsPerBand)
-      .localCheckpoint(true)
-    writeIndexRows(rows, path, "append")
-    rows.unpersist()
-  }
+                         rowsPerBand: Int = 4): Unit =
+    writeIndex(newDocuments, path, n, k, rowsPerBand, "append")
 
   /** DELETE documents from a persisted index — the retraction leg the
     * lifecycle was missing (a CDC `D` op or right-to-be-forgotten
@@ -900,20 +873,13 @@ object Dedup {
       // bounds aggregate is the subtree's ONLY consumer, so it runs
       // directly — the former localCheckpoint was one extra pass over
       // the victim signatures per retraction (r13 round)
-      val delBanded = Tables.read(spark, s"$path/signatures")
+      val victims = Tables.read(spark, s"$path/signatures")
         .join(ids, Seq("doc_id"), "left_semi")
-        .withColumn("bands", TextFunctions.lshBandKeys(
-          TextFunctions.minHashSignature(col("sh"), k),
-          k, rowsPerBand))
-        .select(col("doc_id"),
-          posexplode(col("bands")).as(Seq("band", "key")))
-      val bounds = delBanded.groupBy(col("band"))
-        .agg(min(col("key")).as("lo"), max(col("key")).as("hi")).collect()
-      if (bounds.isEmpty) return 0
-      val prune = bounds.map { r =>
-        col("band") === r.getInt(0) &&
-          col("key") >= r.getLong(1) && col("key") <= r.getLong(2)
-      }.reduce(_ || _)
+        .withColumn("bands", bandKeys(col("sh"), k, rowsPerBand))
+      val prune = bandBoundsPrune(banded(victims)) match {
+        case Some(p) => p
+        case None => return 0
+      }
 
       // one table's COW cycle: find victim files, re-append survivors,
       // drop originals. Sorting restores the band table's row-group-
@@ -1023,26 +989,14 @@ object Dedup {
   private[graft] def probeDedupIndexRows(spark: SparkSession, path: String,
                                          deltaRows: DataFrame,
                                          threshold: Double): DataFrame = {
-    val deltaBanded = deltaRows.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("band", "key")))
-    // per-band key bounds (≤ k/rowsPerBand rows — driver-bounded like
-    // any index metadata read) become an explicit pushed filter on the
-    // store scan: band is the partition column and key is the files'
-    // sort order, so partition pruning + parquet row-group min/max
-    // stats skip bucket ranges no delta key can touch — a JOIN alone
-    // would scan every band file in full
-    val bounds = deltaBanded.groupBy(col("band"))
-      .agg(min(col("key")).as("lo"), max(col("key")).as("hi")).collect()
-    if (bounds.isEmpty) {
-      // blank or empty delta: nothing can pair
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Int, Int, Int)]
-        .toDF("a", "b", "inter", "na", "nb")
+    val deltaBanded = banded(deltaRows)
+    val prune = bandBoundsPrune(deltaBanded) match {
+      case Some(p) => p
+      case None => // blank or empty delta: nothing can pair
+        import spark.implicits._
+        return Seq.empty[(Long, Long, Int, Int, Int)]
+          .toDF("a", "b", "inter", "na", "nb")
     }
-    val prune = bounds.map { r =>
-      col("band") === r.getInt(0) &&
-        col("key") >= r.getLong(1) && col("key") <= r.getLong(2)
-    }.reduce(_ || _)
     val storeBanded = Tables.read(spark, s"$path/bands")
       .where(prune)
       .select(col("band"), col("key"), col("doc_id"))
@@ -1063,14 +1017,7 @@ object Dedup {
       .distinct()
     val sigs = Tables.read(spark, s"$path/signatures")
       .unionByName(deltaRows.select(col("doc_id"), col("sh")))
-    candidates
-      .join(sigs.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(sigs.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
-      .select(col("a"), col("b"),
-        size(array_intersect(col("sha"), col("shb"))).as("inter"),
-        size(col("sha")).as("na"), size(col("shb")).as("nb"))
-      .where(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")) >= threshold)
+    verifyJaccard(candidates, sigs, threshold)
       // a replayed (non-idempotent) append can leave a doc's signature
       // row in the store twice with identical content; the verify joins
       // then fan each such candidate into duplicate pair rows. Dedup
@@ -1081,28 +1028,63 @@ object Dedup {
       .dropDuplicates("a", "b")
   }
 
-  /** Within-set near-dup pairs from precomputed [[indexRows]] — the
-    * delta-delta leg of [[probeDedupIndexRows]] standing alone, i.e.
-    * [[minhashLshPairs]] without a second signature pass. Used by the
-    * curation loop's SEED batch (no store yet). */
+  /** Within-set near-dup pairs of (already materialized)
+    * [[indexRows]] — the delta-delta leg of [[probeDedupIndexRows]]
+    * standing alone, and the whole of [[minhashLshPairs]]. The curation
+    * loop's SEED batch (no store yet) calls it on the rows it also
+    * writes as the index. */
   private[graft] def selfPairsFromRows(rows: DataFrame,
                                        threshold: Double): DataFrame = {
-    val banded = rows.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("band", "key")))
-    val candidates = banded.select(col("band"), col("key"), col("doc_id").as("a"))
-      .join(banded.select(col("band"), col("key"), col("doc_id").as("b")),
+    // candidate generation on BARE IDS: the (band, key) self-join
+    // moves 3 longs per banded row — shingle arrays never enter the
+    // bucket exchange (they used to ride both sides, ~nBands × corpus
+    // shingle volume through the biggest shuffle of the pipeline).
+    val bandRows = banded(rows)
+    val candidates = bandRows.select(col("band"), col("key"), col("doc_id").as("a"))
+      .join(bandRows.select(col("band"), col("key"), col("doc_id").as("b")),
         Seq("band", "key"))
       .where(col("a") < col("b"))
       .select(col("a"), col("b"))
+      // a pair can collide in ≤ k/rowsPerBand bands → dedup BEFORE the
+      // array verify so each pair fetches its shingle sets once; this
+      // shuffle carries 2 longs per row
       .distinct()
-    val sig = rows.select(col("doc_id"), col("sh"))
+    verifyJaccard(candidates, rows.select(col("doc_id"), col("sh")), threshold)
+  }
+
+  /** Exact shingle-Jaccard verify of (a, b) candidate pairs against a
+    * (doc_id, sh) signature table: (a, b, inter, na, nb) for every
+    * pair at or above `threshold`. Two pairs-bounded rejoins:
+    * candidates ≪ corpus × bands after LSH, so AQE broadcasts the pair
+    * side and the signature table never shuffles; the sort-merge
+    * fallback (a pathological boilerplate corpus) moves each shingle
+    * set once per rejoin — still ~4× less array volume than a banded
+    * self-join carrying shingles at nBands = 4. */
+  private def verifyJaccard(candidates: DataFrame, sigs: DataFrame,
+                            threshold: Double): DataFrame =
     candidates
-      .join(sig.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
-      .join(sig.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
+      .join(sigs.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
+      .join(sigs.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
       .select(col("a"), col("b"),
         size(array_intersect(col("sha"), col("shb"))).as("inter"),
         size(col("sha")).as("na"), size(col("shb")).as("nb"))
       .where(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")) >= threshold)
+
+  /** Per-band key bounds of a (band, key) frame (≤ k/rowsPerBand rows —
+    * driver-bounded like any index metadata read) as one predicate for
+    * the bands-table scan, or None when the frame is empty. Band is
+    * the partition column and key is the files' sort order, so
+    * partition pruning + parquet row-group min/max stats skip bucket
+    * ranges no key of the frame can touch — a JOIN alone would scan
+    * every band file in full. */
+  private def bandBoundsPrune(bandRows: DataFrame): Option[Column] = {
+    val bounds = bandRows.groupBy(col("band"))
+      .agg(min(col("key")).as("lo"), max(col("key")).as("hi")).collect()
+    if (bounds.isEmpty) None
+    else Some(bounds.map { r =>
+      col("band") === r.getInt(0) &&
+        col("key") >= r.getLong(1) && col("key") <= r.getLong(2)
+    }.reduce(_ || _))
   }
 }

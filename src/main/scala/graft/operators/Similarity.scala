@@ -151,13 +151,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** All-pairs high-cosine detection — alias of the dedup primitive
-    * (bucket-prefiltered, never all-pairs).
-    */
-  def pairwiseHighCosine(vectors: DataFrame, threshold: Double,
-                         nPlanes: Int = 0): DataFrame =
-    Dedup.embeddingCosinePairs(vectors, threshold, nPlanes)
-
   /** IVF-style ANN: partition the corpus into `nLists` inverted lists
     * by nearest centroid, search only the `nProbe` lists whose
     * centroids are closest to the query.

@@ -335,9 +335,9 @@ object StreamingIngest {
     *     production, same caveat as [[cdcStream]]).
     *
     * The first non-empty micro-batch has no index yet: its within-batch
-    * pairs come from the delta-delta leg alone (identical
-    * candidate+verify semantics to [[graft.operators.Dedup
-    * .minhashLshPairs]]) and its survivors seed the index. Either way
+    * pairs come from the delta-delta leg alone — the same function
+    * [[graft.operators.Dedup.minhashLshPairs]] runs — and its
+    * survivors seed the index. Either way
     * the batch's signature rows are computed ONCE and shared between
     * the probe and the index write — one text scan per batch.
     */
@@ -393,10 +393,9 @@ object StreamingIngest {
           // writes no zero-file index a later read would choke on
           val survivorRows = rows
             .join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          if (!survivorRows.isEmpty) {
-            if (hasStore) Dedup.appendRowsToDedupIndex(survivorRows, indexPath)
-            else Dedup.writeRowsAsDedupIndex(survivorRows, indexPath)
-          }
+          if (!survivorRows.isEmpty)
+            Dedup.writeIndexRows(survivorRows, indexPath,
+              if (hasStore) "append" else "overwrite")
           survivors.select(col("doc_id"), lit(batchId).as("batch"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -384,6 +384,21 @@ class DedupSimilaritySpec extends SparkSpecBase {
       == ((4L, 4, 4)))
   }
 
+  test("incrementalNgramPairs equals ngramJaccardPairs over corpus ∪ delta, on pairs touching the delta") {
+    // disjoint ids: 1 and 4 exist, 2, 3 and 5 arrive — old×new (1,2),
+    // (1,3) and new×new (2,3) pairs all cross the split
+    val old = corpus.where(col("doc_id") % 3 === 1)
+    val delta = corpus.where(col("doc_id") % 3 =!= 1)
+    val deltaIds = delta.select("doc_id").as[Long].collect().toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("a", "b", "inter", "na", "nb").collect().toSet
+    val inc = rows(Dedup.incrementalNgramPairs(old, delta, n = 3, threshold = 0.8))
+    val full = rows(Dedup.ngramJaccardPairs(old.unionByName(delta), n = 3, threshold = 0.8))
+      .filter(r => deltaIds(r.getLong(0)) || deltaIds(r.getLong(1)))
+    assert(full.nonEmpty)
+    assert(inc == full, s"incremental-only: ${inc -- full}\nfull-only: ${full -- inc}")
+  }
+
   test("knnPq: coarse codebook still ranks the near-copy first") {
     val got = Similarity.knnPq(vecs, vecs.where(col("vec_id") === 0),
       k = 2, m = 2, nCodes = 3, dim = 4).orderBy("rank")
@@ -402,6 +417,10 @@ class DedupSimilaritySpec extends SparkSpecBase {
     val got = Dedup.fuzzyEditPairs(docs, headLen = 64, segments = 3, maxDist = 2)
     val pairs = got.select("a", "b", "dist").as[(Long, Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L, 1L), (1L, 3L, 0L), (2L, 3L, 1L)))
+    // a head shorter than the segment count has zero-width slices,
+    // which would block nothing and silently return no pairs
+    intercept[IllegalArgumentException](
+      Dedup.fuzzyEditPairs(docs, headLen = 2, segments = 3, maxDist = 2))
   }
 
   test("fuzzyEditPairs: edits in different slices still block via the untouched slice") {

@@ -141,14 +141,28 @@ class PlanSpec extends SparkSpecBase {
     val joins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)".r.findAllIn(plan).size
     assert(joins <= 2, s"expected only the two size rejoins:\n$plan")
     assert(!plan.contains("CartesianProduct"))
+    // the incremental path ends in the same size tail, so its pair set
+    // and pruned sizes are materialized the same way
+    val delta = docs.where(col("doc_id") % 10 === 0)
+      .select((col("doc_id") + 500000000L).as("doc_id"), col("text"))
+    val inc = executed(Dedup.incrementalNgramPairs(docs, delta, 3, 0.8)).toString
+    assert(!inc.contains("shinglehashes"),
+      s"corpus and delta size scans must be materialized once:\n$inc")
+    val incJoins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)".r.findAllIn(inc).size
+    assert(incJoins <= 2, s"expected only the two size rejoins:\n$inc")
+    assert(!inc.contains("CartesianProduct"))
   }
 
   test("dedup plans never contain a cartesian product") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
+    val delta = docs.where(col("doc_id") % 10 === 0)
+      .select((col("doc_id") + 500000000L).as("doc_id"), col("text"))
     for (df <- Seq(
       Dedup.ngramJaccardPairs(docs, 3, 0.8),
+      Dedup.incrementalNgramPairs(docs, delta, 3, 0.8),
       Dedup.minhashLshPairs(docs, 3, 16, 4, 0.8),
-      Dedup.simhashPairs(docs, 3))) {
+      Dedup.simhashPairs(docs, 3),
+      Dedup.fuzzyEditPairs(docs))) {
       val plan = executed(df).toString
       assert(!plan.contains("CartesianProduct"), "bucketed join expected, got cartesian")
     }
