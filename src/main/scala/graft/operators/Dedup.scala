@@ -641,17 +641,9 @@ object Dedup {
                            nPlanes: Int = 0,
                            maxDocsPerBucket: Int = 10000,
                            knownCount: Long = 0L): DataFrame = {
-    // nPlanes = 0 (default): derive ≈log₂(N/target-bucket) from one
-    // cheap count so bucket occupancy stays flat at any corpus size
-    // (Similarity.autoPlanes — the knob was documented but every call
-    // site used to pin a constant; r6 verdict item 6). The count is an
-    // EAGER job at construction time (it must run before bucketize);
-    // pass `knownCount` from a pipeline that already counted the
-    // corpus so composed LSH stages don't re-count it (r7 advice).
-    val planes =
-      if (nPlanes > 0) nPlanes
-      else Similarity.autoPlanes(
-        if (knownCount > 0) knownCount else vectors.count())
+    // nPlanes = 0 (default): auto-scaled from one eager count, see
+    // Similarity.lshPlanes
+    val planes = Similarity.lshPlanes(vectors, nPlanes, knownCount)
     // Embeddings ride EXACTLY ONE corpus-linear exchange (the bucket
     // shuffle, each embedding once per join side) and are scored
     // IN-JOIN, so no candidate-proportional stream ever materializes
@@ -796,13 +788,13 @@ object Dedup {
     * touch only hashed longs. */
   def writeDedupIndex(documents: DataFrame, path: String, n: Int = 3,
                       k: Int = 16, rowsPerBand: Int = 4): Unit =
-    writeIndex(documents, path, n, k, rowsPerBand, "overwrite")
+    writeIndex(documents, path, n, k, rowsPerBand, Tables.WriteMode.Overwrite)
 
   private def writeIndex(documents: DataFrame, path: String, n: Int, k: Int,
-                         rowsPerBand: Int, saveMode: String): Unit = {
+                         rowsPerBand: Int, mode: Tables.WriteMode): Unit = {
     val rows = indexRows(documents, n, k, rowsPerBand)
       .localCheckpoint(true) // two writes below share one signature pass
-    writeIndexRows(rows, path, saveMode)
+    writeIndexRows(rows, path, mode)
     rows.unpersist()
   }
 
@@ -811,13 +803,10 @@ object Dedup {
     * same rows that fed its probe land in the store without a second
     * text scan. */
   private[graft] def writeIndexRows(rows: DataFrame, path: String,
-                                    saveMode: String): Unit = {
-    banded(rows)
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("key"))
-      .write.mode(saveMode).partitionBy("band").parquet(s"$path/bands")
+                                    mode: Tables.WriteMode): Unit = {
+    Tables.write(banded(rows), s"$path/bands", "band", Seq("key"), mode)
     rows.select(col("doc_id"), col("sh"))
-      .write.mode(saveMode).parquet(s"$path/signatures")
+      .write.mode(mode.saveMode).parquet(s"$path/signatures")
   }
 
   /** APPEND new documents to a persisted index. Append-only contract:
@@ -830,7 +819,7 @@ object Dedup {
   def appendToDedupIndex(spark: SparkSession, path: String,
                          newDocuments: DataFrame, n: Int = 3, k: Int = 16,
                          rowsPerBand: Int = 4): Unit =
-    writeIndex(newDocuments, path, n, k, rowsPerBand, "append")
+    writeIndex(newDocuments, path, n, k, rowsPerBand, Tables.WriteMode.Append)
 
   /** DELETE documents from a persisted index — the retraction leg the
     * lifecycle was missing (a CDC `D` op or right-to-be-forgotten
@@ -925,10 +914,7 @@ object Dedup {
     val bands = Tables.read(spark, s"$path/bands")
       .select(col("band"), col("key"), col("doc_id"))
       .localCheckpoint(true) // materialize before overwriting its source
-    bands
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("key"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
+    Tables.write(bands, s"$path/bands", "band", Seq("key"), Tables.WriteMode.Overwrite)
     bands.unpersist()
     val sigs = Tables.read(spark, s"$path/signatures")
       .localCheckpoint(true)

@@ -2,17 +2,36 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.sources.Tables
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column.
+/** Similarity search over an embedding column, in five families:
   *
-  * Scale posture: the brute-force path broadcasts the (small) query
-  * set and scans the corpus once — a map + top-k aggregate, no corpus
-  * shuffle. The LSH path buckets both sides on hyperplane signatures so
-  * only same-bucket pairs are scored (one shuffle on bucket id). An IVF
-  * variant would cluster first; hyperplane LSH gives the same
-  * bucket-join shape without an iterative training step.
+  *  - brute force ([[knnBruteForce]], [[knnBruteForceBatch]],
+  *    [[semanticSearch]], [[mmrSearch]]): the query set is broadcast
+  *    and the corpus scanned once, a map stage and a per-query top-k
+  *    with no corpus shuffle;
+  *  - LSH ([[knnLsh]], [[mutualKnn]]): vectors bucket on `nTables`
+  *    independent hyperplane signatures and only same-bucket pairs are
+  *    scored, one shuffle on the bucket;
+  *  - IVF ([[knnIvf]]): each vector joins the list of its nearest
+  *    centroid (a map-only broadcast argmax) and a query scores only
+  *    its `nProbe` nearest lists;
+  *  - PQ ([[knnPq]], [[knnIvfPq]]): corpus vectors shrink to
+  *    product-quantization codes scored by asymmetric distance, over
+  *    the whole corpus or inside IVF's probed lists;
+  *  - persisted IVF ([[writeIvfIndex]], [[probeIvfIndex]],
+  *    [[appendToIvfIndex]], [[maybeRetrainIvfIndex]]): the IVF lists
+  *    as a parquet table partitioned by list, probed through partition
+  *    pruning, upserted copy-on-write, with a drift log that drives
+  *    per-list re-training.
+  *
+  * Every batch search ranks each query's neighbours by (score,
+  * neighbour id asc) through one [[topK]]. The embedding audits
+  * ([[dimStats]], [[labelCentroids]], [[sq8Audit]], [[silhouette]])
+  * live here too.
   */
 object Similarity {
 
@@ -35,8 +54,8 @@ object Similarity {
     * query sets that fit in a broadcast (≤ ~100 MB); for larger query
     * sets switch to knnLsh.
     */
-  def knnBruteForceBatch(corpus: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
-    val joined = corpus
+  def knnBruteForceBatch(corpus: DataFrame, queries: DataFrame, k: Int = 10): DataFrame =
+    corpus
       .select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_emb"))
       .crossJoin(broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))))
       .where(col("query_id") =!= col("nbr_id"))
@@ -44,10 +63,15 @@ object Similarity {
         col("query_id"), col("nbr_id"),
         VectorFunctions.cosine(col("q_emb"), col("nbr_emb")).as("cos")
       )
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    joined.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      .transform(topK(k, col("cos").desc, "nbr_id"))
+
+  /** The `k` best rows of each `query_id`, ordered by `score` and then
+    * by the neighbour id column `nbr` ascending, numbered 1..k in
+    * column `rank`: the per-query top-k of every batch search here. */
+  private def topK(k: Int, score: Column, nbr: String,
+                   rank: String = "rank")(rows: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(score, col(nbr).asc)
+    rows.withColumn(rank, row_number().over(w)).where(col(rank) <= k)
   }
 
   /** Auto-scaled hyperplane count — the documented nPlanes rule
@@ -67,13 +91,12 @@ object Similarity {
       math.log(math.max(1.0, corpusCount.toDouble / targetBucket)) /
         math.log(2.0)).toInt)
 
-  /** LSH-bucketed ANN: hyperplane-bucket both corpus and queries, score
-    * only same-bucket pairs, per-query top-k. Multi-probe via
-    * `nTables` plane sets with table-seeded weights — each table is an
-    * INDEPENDENT family (a mere plane-count change would nest the
-    * buckets and add zero recall); candidates are deduped before
-    * scoring. `nPlanes = 0` (the default) auto-scales from a corpus
-    * count ([[autoPlanes]]).
+  /** The hyperplane count of an LSH operator ([[knnLsh]],
+    * [[mutualKnn]], [[Dedup.embeddingCosinePairs]]): `nPlanes` when
+    * positive, else [[autoPlanes]] of the corpus size, `knownCount`
+    * when positive, else `corpus.count()`. With a fixed count, bucket
+    * occupancy and so the within-bucket pair work grow with the corpus
+    * (mutualKnn with 8 planes: 4 s at 1k vectors, 145 s at 66k).
     *
     * NOTE the auto path runs an EAGER `corpus.count()` Spark job at
     * DataFrame-construction time (before the lazy plan is returned) —
@@ -81,28 +104,37 @@ object Similarity {
     * input plan. A composed pipeline that already knows the corpus
     * size (or calls several LSH operators over the same corpus)
     * should pass `knownCount` so exactly one count job runs per
-    * pipeline (r7 advice; AutoPlanesSpec asserts the job count).
+    * pipeline (AutoPlanesSpec asserts the job count).
+    */
+  private[operators] def lshPlanes(corpus: DataFrame, nPlanes: Int, knownCount: Long): Int =
+    if (nPlanes > 0) nPlanes
+    else autoPlanes(if (knownCount > 0) knownCount else corpus.count())
+
+  /** `embedding`'s buckets in `nTables` hyperplane families of `planes`
+    * planes each, table t seeded with t: array<struct<`tableField`,
+    * bucket>>. Each table is an INDEPENDENT family (a mere plane-count
+    * change would nest the buckets and add zero recall). */
+  private def lshBuckets(planes: Int, nTables: Int, tableField: String): Column =
+    array((0 until nTables).map { t =>
+      struct(lit(t).as(tableField),
+        VectorFunctions.hyperplaneBucket(col("embedding"), planes, seed = t).as("bucket"))
+    }: _*)
+
+  /** LSH-bucketed ANN: hyperplane-bucket both corpus and queries, score
+    * only same-bucket pairs, per-query top-k. Multi-probe via
+    * `nTables` plane sets with table-seeded weights ([[lshBuckets]]);
+    * candidates are deduped before ranking. `nPlanes = 0` (the
+    * default) auto-scales from a corpus count ([[lshPlanes]]).
     */
   def knnLsh(corpus: DataFrame, queries: DataFrame, dim: Int, k: Int = 10,
              nPlanes: Int = 0, nTables: Int = 2,
              knownCount: Long = 0L): DataFrame = {
-    val planes =
-      if (nPlanes > 0) nPlanes
-      else autoPlanes(if (knownCount > 0) knownCount else corpus.count())
-    def bucketize(df: DataFrame, idName: String, embName: String): DataFrame = {
-      val buckets = array((0 until nTables).map { t =>
-        struct(
-          lit(t).as("table"),
-          VectorFunctions
-            .hyperplaneBucket(col("embedding"), planes, seed = t)
-            .as("bucket")
-        )
-      }: _*)
+    val buckets = lshBuckets(lshPlanes(corpus, nPlanes, knownCount), nTables, "table")
+    def bucketize(df: DataFrame, idName: String, embName: String): DataFrame =
       df.select(
         col("vec_id").as(idName), col("embedding").as(embName),
         explode(buckets).as("tb")
       ).select(col(idName), col(embName), col("tb.table"), col("tb.bucket"))
-    }
     val c = bucketize(corpus, "nbr_id", "nbr_emb")
     val q = bucketize(queries, "query_id", "q_emb")
     // query side broadcast (same contract as knnBruteForceBatch: the
@@ -111,18 +143,12 @@ object Similarity {
     // the candidate dedup: cosine is deterministic per pair, so the
     // dropDuplicates / top-k exchanges carry (query_id, nbr_id, cos) —
     // ids + one double — instead of two embedding arrays per candidate.
-    val candidates = broadcast(q).join(c, Seq("table", "bucket"))
+    broadcast(q).join(c, Seq("table", "bucket"))
       .where(col("query_id") =!= col("nbr_id"))
       .select(col("query_id"), col("nbr_id"),
         VectorFunctions.cosine(col("q_emb"), col("nbr_emb")).as("cos"))
       .dropDuplicates("query_id", "nbr_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
-    candidates
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("nbr_id"), col("cos"), col("rank"))
+      .transform(topK(k, col("cos").desc, "nbr_id"))
   }
 
   /** SemanticSearch.cs:13-27: top-k vector records for one query
@@ -181,9 +207,6 @@ object Similarity {
     val centroidSet = foldCentroids(trained).localCheckpoint(true)
     val listed = assignFolded(corpus, centroidSet, "nbr_id", "nbr_emb", probes = 1)
     val probed = assignFolded(queries, centroidSet, "query_id", "q_emb", probes = nProbe)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("nbr_id").asc)
     // query side broadcast (queries ≪ corpus by contract) so the probe
     // join never shuffles the corpus lists; score before the candidate
     // dedup so the dropDuplicates / top-k exchanges carry ids + one
@@ -193,32 +216,32 @@ object Similarity {
       .select(col("query_id"), col("nbr_id"),
         VectorFunctions.cosine(col("q_emb"), col("nbr_emb")).as("cos"))
       .dropDuplicates("query_id", "nbr_id")
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("nbr_id"), col("cos"), col("rank"))
+      .transform(topK(k, col("cos").desc, "nbr_id"))
   }
 
-  /** Deterministic centroid sample shared by the IVF family: one
-    * scalar count fixes step = N/nLists, vectors with vec_id % step
-    * == 0 feed a TakeOrderedAndProject (no global sort; only the
+  /** The deterministic id sample of the IVF and PQ families: one
+    * scalar count fixes step = N/n, and the first `n` rows in vec_id
+    * order with vec_id % step == 0 (≈ n rows whether ids are dense or
+    * hashed) feed a TakeOrderedAndProject (no global sort; only the
     * count's long reaches the driver). Structured id domains
     * (all-odd, strided, fixed low bits) can defeat the modulo sample
-    * entirely; fall back to the first nLists ids — still a
-    * TakeOrderedAndProject — rather than silently searching zero
-    * lists.
+    * entirely; it then falls back to the first `n` ids — still a
+    * TakeOrderedAndProject — rather than silently sampling nothing.
     */
-  private[operators] def sampleCentroids(corpus: DataFrame, nLists: Int): DataFrame = {
+  private def idSample(corpus: DataFrame, n: Int): DataFrame = {
     val nRows = corpus.agg(count(lit(1))).head().getLong(0)
-    val step = math.max(1L, nRows / nLists)
+    val step = math.max(1L, nRows / n)
     val sampled = corpus
       .where(pmod(col("vec_id"), lit(step)) === 0)
-      .orderBy(col("vec_id")).limit(nLists)
-      .select(col("vec_id").as("list_id"), col("embedding").as("centroid"))
-    if (sampled.isEmpty)
-      corpus.orderBy(col("vec_id")).limit(nLists)
-        .select(col("vec_id").as("list_id"), col("embedding").as("centroid"))
-    else sampled
+      .orderBy(col("vec_id")).limit(n)
+    if (sampled.isEmpty) corpus.orderBy(col("vec_id")).limit(n) else sampled
   }
+
+  /** The IVF family's centroids: the [[idSample]] of `nLists` vectors
+    * as (list_id, centroid). */
+  private[operators] def sampleCentroids(corpus: DataFrame, nLists: Int): DataFrame =
+    idSample(corpus, nLists)
+      .select(col("vec_id").as("list_id"), col("embedding").as("centroid"))
 
   /** Product-quantization codebooks (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search"): split the `dim`-wide
@@ -237,14 +260,7 @@ object Similarity {
   def pqCodebooks(corpus: DataFrame, m: Int, nCodes: Int, dim: Int): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val sub = dim / m
-    val nRows = corpus.agg(count(lit(1))).head().getLong(0)
-    val step = math.max(1L, nRows / nCodes)
-    val sampled = corpus
-      .where(pmod(col("vec_id"), lit(step)) === 0)
-      .orderBy(col("vec_id")).limit(nCodes)
-    val entries =
-      if (sampled.isEmpty) corpus.orderBy(col("vec_id")).limit(nCodes) else sampled
-    entries
+    idSample(corpus, nCodes)
       .groupBy()
       // collect_list order is nondeterministic; array_sort on the
       // (vec_id, embedding) struct restores id order = code order
@@ -284,15 +300,11 @@ object Similarity {
     val coded = corpus.select(col("vec_id").as("nbr_id"),
       graft.functions.native.pqEncode(col("embedding"), books).as("codes"))
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("dist").asc, col("nbr_id").asc)
     coded.crossJoin(broadcast(q))
       .where(col("query_id") =!= col("nbr_id"))
       .select(col("query_id"), col("nbr_id"),
         graft.functions.native.pqAdc(col("q_emb"), col("codes"), books).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("nbr_id"), col("dist"), col("rank"))
+      .transform(topK(k, col("dist").asc, "nbr_id"))
   }
 
   /** [[pqCodebooks]] pulled to the driver for the kernel paths: one
@@ -338,16 +350,12 @@ object Similarity {
           .as("list_id"),
         graft.functions.native.pqEncode(col("embedding"), books).as("codes"))
     val probed = assignFolded(queries, centroidSet, "query_id", "q_emb", probes = nProbe)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("dist").asc, col("nbr_id").asc)
     broadcast(probed).join(coded, Seq("list_id"))
       .where(col("query_id") =!= col("nbr_id"))
       .select(col("query_id"), col("nbr_id"),
         graft.functions.native.pqAdc(col("q_emb"), col("codes"), books).as("dist"))
       .dropDuplicates("query_id", "nbr_id")
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("nbr_id"), col("dist"), col("rank"))
+      .transform(topK(k, col("dist").asc, "nbr_id"))
   }
 
   /** MMR-diversified search (Carbonell & Goldstein, "The Use of MMR …
@@ -391,28 +399,16 @@ object Similarity {
     * trained centroids for better recall without changing the plan
     * shape"). Each iteration: assign every vector to its nearest
     * centroid (scan-stage expression, no shuffle), then recompute
-    * per-list means. The mean aggregate explodes dimensions BUT
-    * map-side partial aggregation collapses each partition to
-    * ≤ nLists × dim (list, dim, sum, count) rows before the exchange —
-    * the shuffle is cluster-width-bounded, not corpus-bounded. Empty
-    * lists keep their previous centroid (standard Lloyd fallback).
-    * Centroids are checkpointed per round: round N must not replay
-    * rounds 1..N-1.
+    * per-list means ([[lloydMeans]]). Empty lists keep their previous
+    * centroid (standard Lloyd fallback). Centroids are checkpointed
+    * per round: round N must not replay rounds 1..N-1.
     */
   def trainCentroids(corpus: DataFrame, seed: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 0)
     var centroids = seed
     for (_ <- 1 to iters) {
-      val assigned = assignFolded(corpus, foldCentroids(centroids).localCheckpoint(true),
-        "vec_id", "embedding", probes = 1)
-      val means = assigned
-        .select(col("list_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("list_id"), col("dim"))
-        .agg(sum(col("v").cast("double")).as("s"), count(lit(1)).as("c"))
-        .groupBy(col("list_id"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("s"), col("c")))).as("dims"))
-        .select(col("list_id"),
-          transform(col("dims"), d => (d("s") / d("c")).cast("float")).as("centroid"))
+      val means = lloydMeans(assignFolded(corpus, foldCentroids(centroids).localCheckpoint(true),
+        "vec_id", "embedding", probes = 1))
       centroids = means
         // empty lists vanish from `means`; keep their previous centroid
         .unionByName(centroids.join(means.select(col("list_id")), Seq("list_id"), "left_anti"))
@@ -420,6 +416,22 @@ object Similarity {
     }
     centroids
   }
+
+  /** One Lloyd step's centroids: the mean of each list's rows
+    * (list_id, embedding), as (list_id, centroid); a list with no rows
+    * has no mean. The aggregate explodes dimensions BUT map-side
+    * partial aggregation collapses each partition to ≤ lists × dim
+    * (list, dim, sum, count) rows before the exchange — the shuffle is
+    * cluster-width-bounded, not corpus-bounded. Means round through
+    * FLOAT (the trained-IVF contract). */
+  private def lloydMeans(rows: DataFrame): DataFrame =
+    rows.select(col("list_id"), posexplode(col("embedding")).as(Seq("d", "x")))
+      .groupBy(col("list_id"), col("d"))
+      .agg(sum(col("x").cast("double")).as("s"), count(lit(1)).as("n"))
+      .groupBy(col("list_id"))
+      .agg(transform(
+        sort_array(collect_list(struct(col("d"), col("s"), col("n")))),
+        t => (t.getField("s") / t.getField("n")).cast("float")).as("centroid"))
 
   /** Map-only IVF list assignment: fold the (small) centroid table into
     * ONE broadcast row holding array<struct<list_id, centroid>>, then
@@ -449,25 +461,6 @@ object Similarity {
         explode(VectorFunctions.nearestCentroids(col("embedding"), col("cents"), probes))
           .as("list_id"))
 
-  /** Per-label embedding prototype (class centroid) + cohesion audit:
-    * for every label, the mean vector and the member-to-centroid
-    * cosine distribution (n, avg, min, max) — the class-prototype
-    * computation behind SemDeDup-style cluster screening, few-shot
-    * classifiers, and embedding-drift monitoring (a label whose
-    * cohesion collapses is mislabeled or polluted).
-    *
-    * Scale shape: the per-(label, dim) component sums map-side
-    * combine to |labels|·dim rows; centroids reassemble label-bounded
-    * (dim structs per label) and broadcast back; the member-cosine
-    * pass is map-only; the final aggregate is |labels| rows. No
-    * corpus-sized shuffle at any point. Determinism contract:
-    * centroid components round through FLOAT (absorbing double-sum
-    * association noise, the trained-IVF mean contract), cosines fold
-    * sequentially in the native kernel exactly as the oracle's
-    * ordered list_reduce, and the cohesion moments aggregate exact
-    * integer MICRO-cosines (round(cos·10⁶)) so avg/min/max are
-    * order-free.
-    */
   /** Persist an IVF-partitioned ANN index: every vector is assigned
     * to its nearest-centroid list (the same map-only scan-stage
     * argmax as [[knnIvf]]) and written PARTITIONED BY list_id, with
@@ -480,20 +473,18 @@ object Similarity {
     * difference between touching 4 directories and scanning 100 TB.
     */
   def writeIvfIndex(vectors: DataFrame, path: String, nLists: Int = 16): Unit = {
+    // a rebuild starts a new drift log: the old one measured centroids
+    // this write replaces, and maybeRetrainIvfIndex would re-train on
+    // it. Deleted first, so a crash part-way leaves no stale drift
+    val driftDir = new Path(s"$path/drift")
+    driftDir.getFileSystem(vectors.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(driftDir, true)
     val centroids = sampleCentroids(vectors, nLists)
     val centroidSet = foldCentroids(centroids).localCheckpoint(true)
-    assignFolded(vectors, centroidSet, "vec_id", "embedding", probes = 1)
-      // hash-cluster by list before the partitioned write: otherwise
-      // every input task opens a file in every list directory it
-      // touches (O(tasks × lists) near-empty files per write); one
-      // shuffle of (id, embedding, list_id) rows bounds the file count
-      // by the list count
-      .repartition(col("list_id"))
-      // vec_id-clustered files: appendToIvfIndex's upsert staleness
-      // scan prunes on parquet row-group stats instead of reading
-      // every list
-      .sortWithinPartitions(col("list_id"), col("vec_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
+    // vec_id-clustered files: appendToIvfIndex's upsert staleness scan
+    // prunes on parquet row-group stats instead of reading every list
+    Tables.write(assignFolded(vectors, centroidSet, "vec_id", "embedding", probes = 1),
+      s"$path/lists", "list_id", Seq("vec_id"), Tables.WriteMode.Overwrite)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     centroidSet.unpersist()
   }
@@ -532,7 +523,6 @@ object Similarity {
   def probeIvfIndexBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                          queries: Seq[(Long, Array[Float])],
                          k: Int = 10, nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val cents = centroidRows(spark, path)
     val rows = queries.map { case (qid, q) =>
@@ -547,16 +537,13 @@ object Similarity {
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), qSchema)
     val allLists = queries.indices
       .flatMap(i => rows(i).getSeq[Long](2)).distinct.sorted
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
     Tables.read(spark, s"$path/lists")
       .where(col("list_id").isin(allLists: _*))
       .join(broadcast(qdf),
         array_contains(col("probe_lists"), col("list_id").cast("long")))
       .select(col("query_id"), col("vec_id"),
         VectorFunctions.cosine(col("embedding"), col("qemb")).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
+      .transform(topK(k, col("cos").desc, "vec_id", rank = "rk"))
       .select(col("query_id"), col("vec_id"), col("cos"))
   }
 
@@ -598,9 +585,9 @@ object Similarity {
     * rewrite the centroids as new part files, so the first probe after
     * either re-reads, and probes of an unchanged index read nothing. */
   private def centroidRows(spark: SparkSession, path: String): Array[(Long, Array[Float])] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
+    val dir = new Path(s"$path/centroids")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = fs.makeQualified(new org.apache.hadoop.fs.Path(path)).toString
+    val key = fs.makeQualified(new Path(path)).toString
     // listed BEFORE the read: a rewrite racing the read leaves an entry
     // whose listing is already stale, so it can only cause a re-read
     val listing = scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
@@ -623,10 +610,10 @@ object Similarity {
     * Spark job per micro-batch in the streaming upsert loop). */
   private def nextDriftGen(spark: org.apache.spark.sql.SparkSession,
                            path: String): Long = {
-    val driftDir = new org.apache.hadoop.fs.Path(s"$path/drift")
+    val driftDir = new Path(s"$path/drift")
     val fs = driftDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(driftDir)) return 0L
-    val marker = new org.apache.hadoop.fs.Path(s"$path/drift/_gen")
+    val marker = new Path(s"$path/drift/_gen")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
@@ -640,7 +627,7 @@ object Similarity {
   /** Record `gen` as the latest drift generation (see [[nextDriftGen]]). */
   private def writeDriftGen(spark: org.apache.spark.sql.SparkSession,
                             path: String, gen: Long): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/drift/_gen")
+    val marker = new Path(s"$path/drift/_gen")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(marker, true)
     try out.write(gen.toString.getBytes("UTF-8")) finally out.close()
@@ -732,79 +719,55 @@ object Similarity {
     // drops the tag
     val merged = existing.withColumn("is_new", lit(0L))
       .union(assigned.withColumn("is_new", lit(1L)))
-    val previous =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // cluster file contents by vec_id so the upsert's staleness
-      // semi-join (and any point lookup) prunes on row-group stats;
-      // repartition first so each touched list rewrites as one file,
-      // not one per feeding task (writeIvfIndex's discipline)
-      merged.drop("is_new").repartition(col("list_id"))
-        .sortWithinPartitions(col("list_id"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(s"$path/lists")
-    } finally {
-      previous match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-    // drift audit: post-append list mean vs the frozen centroid. ONE
-    // aggregate over merged yields the drift means, the per-list added
-    // count (via the is_new tag) AND the surviving-list set; it is
-    // COLLECTED once — ≤ touched lists of (mean, counts), the same
-    // driver-bounded index-metadata class as the centroid read —
-    // replacing a localCheckpoint job plus a second collect (r13: two
-    // more per-micro-batch driver jobs gone).
-    val dimsRows = listMeans(merged).collect()
-    // dynamic overwrite only rewrites partitions PRESENT in the write:
-    // a touched list whose every row was a stale copy of a re-ingested
-    // id (and that received nothing new) has zero merged rows, so its
-    // directory — now all-stale — survives the overwrite and a probe
-    // would return the dead copies alongside the new ones. Drop those
-    // emptied partitions explicitly (touched is ≤ nLists — index
-    // metadata, driver-bounded).
-    val nonEmpty = dimsRows.map(_.getLong(0)).toSet
-    val listsFs = new org.apache.hadoop.fs.Path(s"$path/lists")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    commitLists(spark, path, merged, touched.toSeq, centroids, newCentroids = false)
+  }
+
+  /** The tail [[appendToIvfIndex]] and [[maybeRetrainIvfIndex]] share,
+    * once `merged` holds every row (list_id, vec_id, embedding, is_new)
+    * of the `touched` lists:
+    *   1. the lists present in `merged` rewrite copy-on-write; untouched
+    *      list directories keep their files byte-identical;
+    *   2. ONE aggregate over `merged` ([[listMeans]]), COLLECTED once —
+    *      ≤ touched lists of (mean, counts), the same driver-bounded
+    *      index-metadata class as the centroid read — yields the drift
+    *      means, the per-list added count and the surviving-list set;
+    *   3. a touched list with no merged rows (every row a stale copy of
+    *      a re-ingested id, or moved away by a re-train) is absent from
+    *      the write, so its directory would survive the partition
+    *      overwrite and a probe would return the dead rows: it is
+    *      deleted;
+    *   4. with `newCentroids`, `centroids` replace the centroid table;
+    *   5. the next drift generation is claimed in the `_gen` marker
+    *      BEFORE the drift append: a replay after a crash between the
+    *      two skips a generation instead of writing this one twice;
+    *   6. each surviving touched list gets a drift row against
+    *      `centroids` — also a list rewritten only because stale copies
+    *      left (n_added = 0): its mean moved too, and a silent reindex
+    *      observable is no observable at all.
+    */
+  private def commitLists(spark: SparkSession, path: String, merged: DataFrame,
+                          touched: Seq[Long], centroids: DataFrame,
+                          newCentroids: Boolean): Unit = {
+    Tables.write(merged.drop("is_new"), s"$path/lists", "list_id", Seq("vec_id"),
+      Tables.WriteMode.ReplacePartitions)
+    val means = listMeans(merged)
+    val meanRows = means.collect()
+    val nonEmpty = meanRows.map(_.getLong(0)).toSet
+    val listsFs = new Path(s"$path/lists").getFileSystem(spark.sparkContext.hadoopConfiguration)
     touched.filterNot(nonEmpty).foreach { id =>
-      listsFs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/lists/list_id=$id"), true)
+      listsFs.delete(new Path(s"$path/lists/list_id=$id"), true)
       ()
     }
-    // next generation from the _gen marker (one saved aggregate job
-    // per micro-batch; legacy stores fall back to the aggregate),
-    // claimed BEFORE the drift append: a replay after a crash between
-    // the two skips a generation instead of writing this one twice
+    if (newCentroids) centroids.write.mode("overwrite").parquet(s"$path/centroids")
     val gen = nextDriftGen(spark, path)
     writeDriftGen(spark, path, gen)
-    val dims = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(dimsRows.toSeq).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("list_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("list_n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_added",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("list_mean",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-    // a list rewritten only because stale copies were removed (content
-    // changed, nothing added) still gets a drift row (n_added = 0) —
-    // its mean moved too, and a silent reindex observable is no
-    // observable at all
-    dims.join(centroids, Seq("list_id"))
+    spark.createDataFrame(java.util.Arrays.asList(meanRows: _*), means.schema)
+      .join(centroids, Seq("list_id"))
       .select(lit(gen).as("generation"), col("list_id"),
         col("n_added"), col("list_n"),
         VectorFunctions.cosine(col("list_mean"), col("centroid"))
           .as("mean_cos"))
       .write.mode("append").parquet(s"$path/drift")
-    ()
   }
 
   /** Per-list drift inputs of a rewritten index: (list_id, list_n,
@@ -865,8 +828,7 @@ object Similarity {
     */
   def maybeRetrainIvfIndex(spark: SparkSession, path: String,
                            minMeanCos: Double = 0.98): Seq[Long] = {
-    import org.apache.spark.sql.expressions.Window
-    val driftPath = new org.apache.hadoop.fs.Path(s"$path/drift")
+    val driftPath = new Path(s"$path/drift")
     val fs = driftPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(driftPath)) return Nil // nothing appended yet: no drift
     val drift = Tables.read(spark, s"$path/drift")
@@ -887,15 +849,8 @@ object Similarity {
         col("list_id").cast("long").as("orig_list"))
       .localCheckpoint(true)
     // Lloyd step: drifted centroids move to their current list means
-    val means = driftedVecs
-      .select(col("orig_list").as("list_id"),
-        posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("list_id"), col("d"))
-      .agg(sum(col("x").cast("double")).as("s"), count(lit(1)).as("n"))
-      .groupBy(col("list_id"))
-      .agg(transform(
-        sort_array(collect_list(struct(col("d"), col("s"), col("n")))),
-        t => (t.getField("s") / t.getField("n")).cast("float")).as("newc"))
+    val means = lloydMeans(driftedVecs.select(col("orig_list").as("list_id"), col("embedding")))
+      .select(col("list_id"), col("centroid").as("newc"))
     val updated = centroids
       .select(col("list_id").cast("long").as("list_id"), col("centroid"))
       .join(means, Seq("list_id"), "left")
@@ -922,55 +877,8 @@ object Similarity {
     val merged = existing.withColumn("is_new", lit(0L))
       .union(reassigned.select(col("vec_id"), col("embedding"), col("list_id"),
         (col("list_id") =!= col("orig_list")).cast("long").as("is_new")))
-    val previous =
-      spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      merged.drop("is_new").repartition(col("list_id"))
-        .sortWithinPartitions(col("list_id"), col("vec_id"))
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(s"$path/lists")
-    } finally {
-      previous match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-    // ONE aggregate over merged yields both the next drift generation's
-    // means and the surviving-list set (same fusion as the append path:
-    // merged rows only contain touched lists, so the old
-    // where(isin(touched)) re-filter and the separate emptied-partition
-    // count were both redundant passes)
-    val dims = listMeans(merged)
-      .localCheckpoint(true) // consumers: emptied-dir check + drift write
-    // a drifted list whose every vector moved elsewhere is gone — drop
-    // its directory (same contract as the append path)
-    val nonEmpty = dims.select(col("list_id"))
-      .collect().map(_.getLong(0)).toSet
-    val listsFs = new org.apache.hadoop.fs.Path(s"$path/lists")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(nonEmpty).foreach { id =>
-      listsFs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/lists/list_id=$id"), true)
-      ()
-    }
-    updated.write.mode("overwrite").parquet(s"$path/centroids")
-    // log the retrain as the next generation so the trigger resets and
-    // the policy history stays in one append-only table (generation
-    // from the _gen marker, claimed before the append exactly as the
-    // append path does)
-    val gen = nextDriftGen(spark, path)
-    writeDriftGen(spark, path, gen)
-    dims.join(updated, Seq("list_id"))
-      .select(lit(gen).as("generation"), col("list_id"),
-        col("n_added"), col("list_n"),
-        VectorFunctions.cosine(col("list_mean"), col("centroid"))
-          .as("mean_cos"))
-      .write.mode("append").parquet(s"$path/drift")
+    commitLists(spark, path, merged, touched, updated, newCentroids = true)
     driftedVecs.unpersist(); reassigned.unpersist(); existing.unpersist()
-    dims.unpersist()
     drifted
   }
 
@@ -1013,6 +921,25 @@ object Similarity {
         round(col("mxv").cast("double") / lit(1000000.0), 6).as("max_v"))
       .orderBy(col("d"))
 
+  /** Per-label embedding prototype (class centroid) + cohesion audit:
+    * for every label, the mean vector and the member-to-centroid
+    * cosine distribution (n, avg, min, max) — the class-prototype
+    * computation behind SemDeDup-style cluster screening, few-shot
+    * classifiers, and embedding-drift monitoring (a label whose
+    * cohesion collapses is mislabeled or polluted).
+    *
+    * Scale shape: the per-(label, dim) component sums map-side
+    * combine to |labels|·dim rows; centroids reassemble label-bounded
+    * (dim structs per label) and broadcast back; the member-cosine
+    * pass is map-only; the final aggregate is |labels| rows. No
+    * corpus-sized shuffle at any point. Determinism contract:
+    * centroid components round through FLOAT (absorbing double-sum
+    * association noise, the trained-IVF mean contract), cosines fold
+    * sequentially in the native kernel exactly as the oracle's
+    * ordered list_reduce, and the cohesion moments aggregate exact
+    * integer MICRO-cosines (round(cos·10⁶)) so avg/min/max are
+    * order-free.
+    */
   def labelCentroids(vectors: DataFrame, labelCol: String = "label"): DataFrame = {
     val sums = vectors
       .select(col(labelCol).as("lbl"), posexplode(col("embedding")).as(Seq("d", "v")))
@@ -1058,26 +985,8 @@ object Similarity {
                 nPlanes: Int = 0, nTables: Int = 2,
                 knownCount: Long = 0L,
                 maxDocsPerBucket: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // nPlanes must scale with the corpus (≈ log₂(N / target bucket
-    // size)): with fixed planes, bucket occupancy — and the candidate
-    // pair count — grows linearly with N, so the pair stage is
-    // quadratic per bucket (measured: 4s at 1k vectors, 145s at 66k
-    // with the demo's 8 planes before this restructure). nPlanes = 0
-    // (the default) derives the count from one cheap aggregate
-    // ([[autoPlanes]]) — an EAGER job at construction time; pass
-    // `knownCount` when the pipeline already counted this corpus so
-    // the count runs once per pipeline, not once per operator.
-    // Explicit nPlanes values remain for oracle parity.
-    val planes =
-      if (nPlanes > 0) nPlanes
-      else autoPlanes(if (knownCount > 0) knownCount else vectors.count())
     val banded = vectors.select(col("vec_id"),
-      explode(array((0 until nTables).map { t =>
-        struct(lit(t).as("t"),
-          VectorFunctions.hyperplaneBucket(col("embedding"), planes, seed = t)
-            .as("bucket"))
-      }: _*)).as("tb"))
+      explode(lshBuckets(lshPlanes(vectors, nPlanes, knownCount), nTables, "t")).as("tb"))
       .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
     // bare-id bucket join → DISTINCT pairs FIRST (2-long rows, the
     // cheapest possible exchange), then embeddings re-attach via two
@@ -1129,10 +1038,7 @@ object Similarity {
       .select(col("query_id"), col("nbr_id"),
         round(VectorFunctions.cosine(col("qe"), col("ne")) * 1000000.0)
           .cast("long").as("micro"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("micro").desc, col("nbr_id").asc)
-    val ranked = scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    val ranked = scored.transform(topK(k, col("micro").desc, "nbr_id"))
       .localCheckpoint(true)
     val r2 = ranked.select(col("query_id").as("nbr_id"),
       col("nbr_id").as("query_id"), col("rank").as("rank_ba"))
@@ -1201,7 +1107,6 @@ object Similarity {
     * rows, an nLists-row-per-vector window, one micro-int aggregate.
     */
   def silhouette(vectors: DataFrame, nLists: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = sampleCentroids(vectors, nLists)
     val rows = vectors.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("list_id"),

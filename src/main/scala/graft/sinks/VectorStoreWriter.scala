@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.functions.VectorFunctions
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Vector-store writer — the Spark twin of Writers/VectorStoreWriter.cs.
@@ -177,58 +177,33 @@ object VectorStoreWriter {
     val session = records.sparkSession
     val bucketed = records
       .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(buckets)))
-    val previous = session.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    session.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(session.sparkContext.hadoopConfiguration)
-      // data presence, not directory presence: metadata files
-      // (_layout.json, _SUCCESS) alone must not trigger the survivor
-      // read of an empty store
-      val sinkExists = fs.exists(new org.apache.hadoop.fs.Path(path)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(path)).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-      val toWrite =
-        if (!incremental || !sinkExists) bucketed
-        else {
-          // survivors: rows in touched buckets that belong to OTHER
-          // documents; materialized (localCheckpoint) so we never
-          // overwrite a path we are still lazily reading from
-          val touched = bucketed.select(col("doc_bucket")).distinct()
-          val reingested = bucketed.select(col("documentid")).distinct()
-          val survivors = Tables.read(session, path)
-            .join(broadcast(touched), Seq("doc_bucket"), "left_semi")
-            .join(reingested, Seq("documentid"), "left_anti")
-            .select(bucketed.columns.map(col): _*)
-            .localCheckpoint(true)
-          bucketed.union(survivors)
-        }
-      toWrite
-        // hash-cluster rows by bucket before the partitioned write
-        // (the write.distribution-mode=hash discipline): without it
-        // every task holding rows of a bucket opens its own file in
-        // that bucket's directory, so one incremental batch writes
-        // O(tasks × buckets) near-empty files and the NEXT batch's
-        // survivor scan re-lists and re-opens them all — file count
-        // (and the per-batch listing) now stays bounded by the bucket
-        // count however many tasks feed the writer
-        .repartition(col("doc_bucket"))
-        // cluster each output file by (documentid, key): parquet
-        // row-group min/max stats then prune documentid point lookups
-        // (the incremental path's per-document delete/replace) without
-        // reading the bucket's whole file set
-        .sortWithinPartitions(col("doc_bucket"), col("documentid"), col("key"))
-        .write
-        .mode(if (incremental) SaveMode.Overwrite else SaveMode.Append)
-        .partitionBy("doc_bucket")
-        .parquet(path)
-    } finally {
-      previous match {
-        case Some(v) => session.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => session.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(session.sparkContext.hadoopConfiguration)
+    // data presence, not directory presence: metadata files
+    // (_layout.json, _SUCCESS) alone must not trigger the survivor
+    // read of an empty store
+    val sinkExists = fs.exists(root) && fs.listStatus(root).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
     }
+    val toWrite =
+      if (!incremental || !sinkExists) bucketed
+      else {
+        // survivors: rows in touched buckets that belong to OTHER
+        // documents; materialized (localCheckpoint) so we never
+        // overwrite a path we are still lazily reading from
+        val touched = bucketed.select(col("doc_bucket")).distinct()
+        val reingested = bucketed.select(col("documentid")).distinct()
+        val survivors = Tables.read(session, path)
+          .join(broadcast(touched), Seq("doc_bucket"), "left_semi")
+          .join(reingested, Seq("documentid"), "left_anti")
+          .select(bucketed.columns.map(col): _*)
+          .localCheckpoint(true)
+        bucketed.union(survivors)
+      }
+    // one file per bucket, clustered by (documentid, key): row-group
+    // stats then prune the incremental path's per-document replace
+    Tables.write(toWrite, path, "doc_bucket", Seq("documentid", "key"),
+      if (incremental) Tables.WriteMode.ReplacePartitions else Tables.WriteMode.Append)
   }
 }

@@ -3,14 +3,16 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.util.Try
 
 /** Opens the parquet tables graft itself persists (IVF lists, centroids
   * and drift, dedup-index bands and signatures, vector stores,
-  * snapshots) without Spark's schema-inference job.
+  * snapshots) without Spark's schema-inference job, and writes the
+  * partitioned ones ([[write]]).
   *
   * `spark.read.parquet(dir)` runs one Spark job per open just to read a
   * footer: with `mergeSchema` off, Spark's inferred data schema is the
@@ -37,6 +39,42 @@ object Tables {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
+
+  /** How [[write]] treats the files already in the table. */
+  private[graft] sealed abstract class WriteMode(val saveMode: SaveMode)
+  private[graft] object WriteMode {
+    /** New files beside the existing ones. */
+    case object Append extends WriteMode(SaveMode.Append)
+    /** The whole table replaced (a rebuild). */
+    case object Overwrite extends WriteMode(SaveMode.Overwrite)
+    /** Only the partitions the written rows fall in replaced: the
+      * copy-on-write upsert of the vector store and the IVF lists. */
+    case object ReplacePartitions extends WriteMode(SaveMode.Overwrite)
+  }
+
+  /** Write `df` as a parquet table partitioned by `partitionCol`, each
+    * partition one file sorted by `sortCols`. Rows are hash-clustered
+    * by partition before the write: otherwise every input task opens a
+    * file in every partition it holds rows of, O(tasks × partitions)
+    * near-empty files per write that the next read lists and opens.
+    * The sort lets parquet row-group stats prune point lookups and
+    * semi-joins on the leading sort column.
+    *
+    * Static or dynamic partition overwrite is the writer's own option,
+    * never the session's `spark.sql.sources.partitionOverwriteMode`:
+    * that conf is shared by every thread on the session, so setting it
+    * around one write would change what a concurrent rebuild deletes. */
+  private[graft] def write(df: DataFrame, path: String, partitionCol: String,
+                           sortCols: Seq[String], mode: WriteMode): Unit = {
+    val writer = df.repartition(col(partitionCol))
+      .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
+      .write.mode(mode.saveMode).partitionBy(partitionCol)
+    (mode match {
+      case WriteMode.Append => writer
+      case WriteMode.Overwrite => writer.option("partitionOverwriteMode", "static")
+      case WriteMode.ReplacePartitions => writer.option("partitionOverwriteMode", "dynamic")
+    }).parquet(path)
+  }
 
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
     if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) None

@@ -395,7 +395,7 @@ object StreamingIngest {
             .join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
           if (!survivorRows.isEmpty)
             Dedup.writeIndexRows(survivorRows, indexPath,
-              if (hasStore) "append" else "overwrite")
+              if (hasStore) Tables.WriteMode.Append else Tables.WriteMode.Overwrite)
           survivors.select(col("doc_id"), lit(batchId).as("batch"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

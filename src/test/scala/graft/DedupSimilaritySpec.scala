@@ -167,6 +167,11 @@ class DedupSimilaritySpec extends SparkSpecBase {
       .toDF("vec_id", "embedding")
     val got = Similarity.knnIvf(odd, odd.where(col("vec_id") === 1), k = 3, nLists = 4, nProbe = 4)
     assert(got.count() > 0)
+    // PQ codebooks come from the same sample and its first-N fallback
+    val q = odd.where(col("vec_id") === 1)
+    assert(Similarity.knnPq(odd, q, k = 3, m = 2, nCodes = 4, dim = 4).count() > 0)
+    assert(Similarity.knnIvfPq(odd, q, k = 3, nLists = 4, nProbe = 4,
+      m = 2, nCodes = 4, dim = 4).count() > 0)
   }
 
   test("dedupByPairs keeps one survivor per cluster, unpaired docs untouched") {

@@ -345,6 +345,30 @@ class IvfFramesSpec extends SparkSpecBase {
     assert(lists.count() == 106 && lists.select("vec_id").distinct().count() == 106)
   }
 
+  test("writeIvfIndex: a rebuild drops the old index's drift log and generation marker") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-rebuild").toString
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    val base = emb.where(col("vec_id") < 100)
+    Similarity.writeIvfIndex(base, dir, nLists = 4)
+    Similarity.appendToIvfIndex(spark, dir,
+      emb.where(col("vec_id") >= 400 && col("vec_id") < 450))
+    // a threshold the old drift log fires at
+    val thr = spark.read.parquet(s"$dir/drift")
+      .agg(min(col("mean_cos"))).head().getDouble(0) + 1e-9
+    // the same vectors sample the same list ids: only a stale drift
+    // log could make the fresh index re-train
+    Similarity.writeIvfIndex(base, dir, nLists = 4)
+    val retrained = Similarity.maybeRetrainIvfIndex(spark, dir, thr)
+    assert(retrained.isEmpty, s"the rebuilt index re-trained lists $retrained")
+    assert(!new java.io.File(s"$dir/drift").exists())
+    // the next append opens the new log at generation 0
+    Similarity.appendToIvfIndex(spark, dir,
+      emb.where(col("vec_id") >= 400 && col("vec_id") < 403))
+    val gens = spark.read.parquet(s"$dir/drift")
+      .select("generation").distinct().as[Long].collect().toSeq
+    assert(gens == Seq(0L))
+  }
+
   test("maybeRetrainIvfIndex: fires only past the drift threshold, re-trains only drifted lists") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-retrain").toString
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")

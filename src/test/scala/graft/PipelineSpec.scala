@@ -160,6 +160,36 @@ class PipelineSpec extends SparkSpecBase {
     assert(contents == Map("1" -> "doc one v1", "2" -> "doc two"))
   }
 
+  test("incremental write: replaces buckets without touching the session's partitionOverwriteMode") {
+    // the session conf is shared by every thread on the session: a
+    // static rebuild running beside the upsert must keep seeing the
+    // caller's value, so the UDF reads it from inside the write's tasks
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val dir = Files.createTempDirectory("graft-vsw-conf").toString
+    def recs(rows: (Long, Int, String, String)*) =
+      VectorStoreWriter.toVectorRecords(
+        rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
+    oneBucketLayout(dir)
+    VectorStoreWriter.writeWithLayout(
+      recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")), dir)
+    val callerValue = spark.conf.get(key)
+    OverwriteModeProbe.session = spark
+    OverwriteModeProbe.seen.clear()
+    val probe = udf { (s: String) =>
+      OverwriteModeProbe.seen.add(OverwriteModeProbe.session.conf.get(key))
+      s
+    }
+    VectorStoreWriter.writeWithLayout(
+      recs((1L, 0, "doc one v2", "")).withColumn("content", probe(col("content"))), dir)
+    val seen = OverwriteModeProbe.seen.toArray.toSet
+    assert(seen == Set(callerValue), s"tasks saw $seen, the caller set $callerValue")
+    assert(spark.conf.get(key) == callerValue)
+    // ...and the upsert still replaced only document 1
+    val contents = spark.read.parquet(dir)
+      .select("documentid", "content").as[(String, String)].collect().toMap
+    assert(contents == Map("1" -> "doc one v2", "2" -> "doc two"))
+  }
+
   test("runWith: custom terminal writer receives the composed chunk plan (reference QAWriter shape)") {
     val dir = Files.createTempDirectory("graft-custom-writer").toString
     // a QAWriter-style custom sink: derive new records per chunk (here a
@@ -289,4 +319,11 @@ class PipelineSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](
       VectorStoreWriter.distance("hamming", col("embedding"), col("embedding")))
   }
+}
+
+/** The driver session, for a UDF that reads the session conf from inside
+  * a task: local mode runs tasks in the driver's JVM. */
+private object OverwriteModeProbe {
+  @volatile var session: org.apache.spark.sql.SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
