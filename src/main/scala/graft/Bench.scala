@@ -11,7 +11,7 @@ import scala.collection.immutable.ListMap
   * (30-160 s, root-caused in SURVEY §5) that inflate 1-3 random
   * queries per full run and mask real regressions. After the main
   * loop, any query whose wall exceeds 2.5× its family median (family =
-  * first key character: q/i/d/s/t/m/x — q01/q03 must share the q
+  * first key character: q/i/d/s/t/m/x/g — q01/q03 must share the q
   * family or they'd be un-retimeable singletons) is re-timed once and
   * the MINIMUM is reported; the re-timed values are surfaced in a
   * "retimed" map so the artifact shows exactly which numbers were

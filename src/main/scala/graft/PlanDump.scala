@@ -76,7 +76,7 @@ object PlanDump {
           .forEach(q => Files.deleteIfExists(q))
       }
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), out.toString)
+    Files.writeString(Paths.get("PLANS.md"), out.toString) // in the working directory
     spark.stop()
   }
 }

@@ -385,7 +385,7 @@ object native {
   /** Random-hyperplane LSH bucket (twin of
     * VectorFunctions.hyperplaneBucket): deterministic ±1 plane weights
     * from [[planeSign]], mirrored constant-for-constant by the oracle
-    * replay (SparkEntry.sqlBucket inlines the signs this emits).
+    * replay (queries.SqlText.sqlBucket inlines the signs this emits).
     */
   def hyperplaneBucket(vec: ArrayData, isDouble: Boolean, nPlanes: Int,
                        seed: Int): Long = {

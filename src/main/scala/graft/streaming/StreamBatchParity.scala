@@ -55,9 +55,10 @@ object StreamBatchParity {
 
   /** Time slices the corpus stages as — each is one real micro-batch
     * carrying state over to the next. */
-  // private[graft] (not [streaming]): SparkEntry.streamCurateSql unrolls
-  // exactly this many batch CTEs — deriving it here keeps the oracle and
-  // the harness from silently diverging if the batch count changes
+  // private[graft] (not [streaming]): queries.StreamQueries.streamCurateSql
+  // unrolls exactly this many batch CTEs — deriving it here keeps the
+  // oracle and the harness from silently diverging if the batch count
+  // changes
   private[graft] val DataBatches = 4
 
   private def deleteRecursively(p: Path): Unit =
@@ -92,7 +93,7 @@ object StreamBatchParity {
     * are) and closes with the sentinel pair; an integer `key` slices
     * the id/seq range [lo, hi] the same way (slice i covers
     * [lo + range*i/n, lo + range*(i+1)/n), the cuts
-    * SparkEntry.streamCurateSqlFor unrolls). */
+    * queries.StreamQueries.streamCurateSqlFor unrolls). */
   private[graft] final class StagedStream(spark: SparkSession, corpus: DataFrame,
                                           keyName: String, json: Boolean = false) {
     private val timeSliced = corpus.schema(keyName).dataType == TimestampType

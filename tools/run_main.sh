@@ -3,7 +3,7 @@
 #   tools/run_main.sh <mainClass> [args...]
 # Mirrors build.sbt's javaOptions (JDK17 add-opens + 32g heap).
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."   # the checkout this script belongs to
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
