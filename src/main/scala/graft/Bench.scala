@@ -34,7 +34,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = GraftSession.sfDir("sf0.1")
     val spark = GraftSession.get()
     spark.range(1000).selectExpr("sum(id)").collect() // session warm-up off the clock
     var errors = List.empty[String]

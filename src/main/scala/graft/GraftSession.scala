@@ -33,6 +33,13 @@ object GraftSession {
     cfg(b, "spark.ui.enabled", "false")
   }
 
+  /** The scale-factor data directory of the harness mains (Bench,
+    * PlanSnap, PlanDump) and of the smoke query `SparkEntry.entry`:
+    * SPARK_GRAFT_SF_DIR when set, else the `scale` set under the
+    * test-data root (TESTDATA.md). */
+  private[graft] def sfDir(scale: String): String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"/root/testdata/$scale")
+
   def get(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

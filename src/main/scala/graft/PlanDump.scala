@@ -3,13 +3,13 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get()
-    val dir = "/root/testdata/sf0.01"
+    val dir = GraftSession.sfDir("sf0.01")
     val out = new StringBuilder
     val picks = Seq(
       ("q05_region_revenue", "5-way star join: every dimension side is a BroadcastHashJoin; the single fact-fact join (lineitem ⋈ orders) shuffles once; aggregation is partial before the exchange."),
       ("q01_pricing_summary", "Scan→filter→agg: PushedFilters reaches the parquet scan, ReadSchema is pruned to 7 of 11 columns, HashAggregate is map-side partial."),
       ("i_chunk_token", "Token chunker: a single Project/Generate pipeline — zero Exchange; 100 TB of documents chunk as a map-only stage."),
-      ("d_dedup_ngram", "N-gram dedup: pairs are generated inside grouped shingle buckets (bare doc-id payloads) and MATERIALIZED once (localCheckpoint — the Scan ExistingRDDs below; without it the bucket pipeline re-executed once per consumer, 5 copies in the plan); per-doc size columns rejoin AFTER pair-gen via two broadcast joins."),
+      ("d_dedup_ngram", "N-gram dedup: pairs are generated inside grouped shingle buckets (bare doc-id payloads) and MATERIALIZED once (localCheckpoint — the Scan ExistingRDDs below; without it the bucket pipeline re-executed once per consumer, 5 copies in the plan); per-doc size columns rejoin AFTER pair-gen via two broadcast joins. Inside the checkpointed stage the shingle exchange is an explicit-count repartition (REPARTITION_BY_NUM at spark.sql.shuffle.partitions) that AQE does not merge by bytes, and each task pairs its shingle-sorted runs in one streaming pass (Sort + MapPartitions, no collect_list buffers), so the CPU-bound pairing runs on every task slot."),
       ("d_dedup_url", "URL-canonical dedup: the regex canonicalization chain is evaluated map-side inside the partial aggregate — ONE hash exchange on the canonical key, no raw-URL shuffle."),
       ("d_dedup_minhash", "MinHash LSH: signatures MATERIALIZED once (every consumer reads Scan ExistingRDD); the (band, key) bucket self-join carries bare ids (3 longs — shingle arrays never enter the candidate exchange), candidate (a, b) pairs dedup as 2-long rows, and the true-Jaccard verify is two pairs-bounded rejoins against the checkpointed signature table that AQE realizes as broadcasts."),
       ("d_dedup_simhash", "SimHash combo tables (Manku-style): one 60-bit signature per doc, exploded into C(6,3)=20 tables keyed on packed 3-block (~30-bit) combinations — complete for hamming ≤ 3 by pigeonhole, spread enough that template-heavy corpora don't pile into the df-cut; hamming verified before the pair-dedup exchange."),
@@ -47,8 +47,8 @@ object PlanDump {
       ("q_skyline", "Pareto skyline: the corpus reduces map-side to the supplier aggregate; a broadcast coarse-bucket min table prunes dominated points BEFORE the exact pass, so the global sort window runs over the frontier-dense residual, not the corpus."),
       ("d_dedup_index!probe", "Persisted-index probe (r11; the LIVE probe plan — the driver row pins its result before deleting the scratch index, which would dump as a bare RDD scan): the store scan's PushedFilters carries the delta's per-band key bounds (band is the partition column, key the files' sort order — partition pruning + row-group min/max stats skip bucket ranges no delta key can touch); candidate and verify exchanges carry ids + longs, and stored corpus TEXT is never read — probe IO is O(delta + matched buckets) however large the index.")
     )
-    out.append("# PLANS — physical-plan evidence (sf0.01, local[32])\n\n")
-    out.append("Regenerate with `sbt \"runMain graft.PlanDump\"`.\n")
+    out.append(s"# PLANS — physical-plan evidence (${Paths.get(dir).getFileName}, local[32])\n\n")
+    out.append("Regenerate with `sbt \"runMain graft.PlanDump\"` (data: SPARK_GRAFT_SF_DIR, default sf0.01).\n")
     for ((name, note) <- picks) {
       var scratch: Option[java.nio.file.Path] = None
       val df = if (name == "d_dedup_index!probe") {

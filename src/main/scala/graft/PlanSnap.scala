@@ -18,7 +18,7 @@ object PlanSnap {
     Files.createDirectories(outDir)
     val suffix = args(1)
     val names = args.drop(2)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = GraftSession.sfDir("sf0.1")
     val spark = GraftSession.get()
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")

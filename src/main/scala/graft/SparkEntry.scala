@@ -29,7 +29,7 @@ object SparkEntry {
   // ⋈supplier) with broadcast dims — driver smoke-checks rows > 0.
   // ==================================================================
   def entry(spark: SparkSession): DataFrame =
-    RelationalQueries.q05(spark, "/root/testdata/sf0.001")
+    RelationalQueries.q05(spark, GraftSession.sfDir("sf0.001"))
 
   /** What Bench times. Identical to [[queries]] except where a
     * CORRECTNESS entry folds oracle-contract VERIFICATION work (exact

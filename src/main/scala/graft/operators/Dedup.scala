@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines.
@@ -195,40 +195,64 @@ object Dedup {
     * sizes attached. */
   private def ngramPairCounts(documents: DataFrame, n: Int,
                               maxDocsPerShingle: Int): DataFrame = {
-    val shingled = documents
+    import documents.sparkSession.implicits._
+    val shingled = documents.where(col("doc_id").isNotNull)
       .select(col("doc_id"), explode(TextFunctions.shingleHashes(col("text"), n)).as("shingle"))
     // per-doc distinct-shingle counts: computed map-only straight from
     // the corpus (tiny (doc_id, n_sh) rows) and joined back AFTER pair
     // generation, so the per-shingle buckets below carry bare doc ids —
-    // one long each — instead of (doc_id, n_sh) structs. Halving the
-    // collect_list payload matters: those aggregation buffers were the
-    // heap hog that GC-collapsed the round-1 bench.
+    // one long each — instead of (doc_id, n_sh) structs.
     val sizes = documents.select(
       col("doc_id"), size(TextFunctions.shingleHashes(col("text"), n)).as("n_sh"))
-    // ONE corpus shuffle: group docs per shingle and generate pairs
-    // inside the bucket (collect_list is bounded by the df-cut, which
-    // doubles as skew protection — a hot shingle is dropped, not
-    // sorted). A self-join formulation would scan + shuffle the
+    // ONE corpus shuffle: the (shingle, doc_id) stream hash-partitions
+    // and sorts on the shingle, and each run of one shingle — its
+    // bucket — yields its doc pairs in a single streaming pass that
+    // holds at most maxDocsPerShingle + 1 ids (the df-cut, which
+    // doubles as skew protection: a hot shingle is dropped, never
+    // paired). A self-join formulation would scan + shuffle the
     // shingles twice and a count-window df-cut can't skew-split under
-    // AQE.
-    val buckets = shingled
-      .groupBy(col("shingle"))
-      .agg(collect_list(col("doc_id")).as("docs"))
-      .where(size(col("docs")) >= 2 && size(col("docs")) <= maxDocsPerShingle)
-    val pairs = buckets.select(
-      explode(flatten(transform(
-        sequence(lit(0), size(col("docs")) - 2),
-        i => {
-          val x = element_at(col("docs"), i + 1)
-          transform(
-            slice(col("docs"), i + 2, size(col("docs"))),
-            y => struct(least(x, y).as("a"), greatest(x, y).as("b"))
-          )
-        }
-      ))).as("p"))
-    sizedPairs(pairs
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(count(lit(1)).as("inter")), sizes)
+    // AQE; a collect_list aggregate builds, serializes and merges one
+    // buffer per shingle, three times the CPU of the sorted pass. The
+    // exchange has an explicit partition count (the session's
+    // spark.sql.shuffle.partitions): AQE sizes shuffle partitions by
+    // BYTES and would merge this one — a few bytes per shingle
+    // occurrence — into a single partition, but the pairing above it is
+    // CPU-bound per byte, and on one task it leaves every other task
+    // slot idle.
+    val pairs = shingled
+      .repartition(
+        documents.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("shingle"))
+      .sortWithinPartitions(col("shingle"))
+      .select(col("shingle"), col("doc_id")).as[(Long, Long)]
+      .mapPartitions(rows => bucketPairs(rows, maxDocsPerShingle))
+      .toDF("a", "b")
+    sizedPairs(pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter")), sizes)
+  }
+
+  /** The doc pairs of a shingle-sorted (shingle, doc_id) stream: for
+    * each run of one shingle holding 2 to `cap` docs, every unordered
+    * pair of them as (least, greatest); a longer run is dropped. Holds
+    * at most cap + 1 ids, whatever the run length. */
+  private def bucketPairs(rows: Iterator[(Long, Long)], cap: Int): Iterator[(Long, Long)] = {
+    val in = rows.buffered
+    val held = new scala.collection.mutable.ArrayBuffer[Long]
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val shingle = in.head._1
+      held.clear()
+      var docs = 0
+      while (in.hasNext && in.head._1 == shingle) {
+        val d = in.next()._2
+        if (docs <= cap) held += d
+        docs += 1
+      }
+      if (docs < 2 || docs > cap) Iterator.empty
+      else {
+        val ids = held.toArray
+        for (i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator)
+          yield (math.min(ids(i), ids(j)), math.max(ids(i), ids(j)))
+      }
+    }
   }
 
   /** The size tail shared by [[ngramPairCounts]] and
@@ -858,14 +882,14 @@ object Dedup {
       .distinct().localCheckpoint(true)
     try {
       // victims' stored signatures → recomputed band keys → the same
-      // pushed per-band bounds the probe uses (≤ nBands rows). The
-      // bounds aggregate is the subtree's ONLY consumer, so it runs
-      // directly — the former localCheckpoint was one extra pass over
-      // the victim signatures per retraction (r13 round)
-      val victims = Tables.read(spark, s"$path/signatures")
+      // pushed per-band bounds the probe uses, observed on the one job
+      // that reads the victims (the rows themselves have no other
+      // consumer, so they drop right away)
+      val (victims, bounds) = pinWithBounds(Tables.read(spark, s"$path/signatures")
         .join(ids, Seq("doc_id"), "left_semi")
-        .withColumn("bands", bandKeys(col("sh"), k, rowsPerBand))
-      val prune = bandBoundsPrune(banded(victims)) match {
+        .withColumn("bands", bandKeys(col("sh"), k, rowsPerBand)), k, rowsPerBand)
+      victims.unpersist()
+      val prune = bounds match {
         case Some(p) => p
         case None => return 0
       }
@@ -959,45 +983,51 @@ object Dedup {
     * the stored band rows (ids + 2 longs on the exchange, key-sorted
     * files so row-group stats prune non-matching buckets); the verify
     * leg fetches stored signatures for CANDIDATE ids only
-    * (pairs-bounded semi-join, AQE broadcasts the pair side).
+    * (pairs-bounded semi-join, AQE broadcasts the pair side). The
+    * per-band key bounds pushed into the store scan come from
+    * [[pinWithBounds]]: they are observed on the job that materializes
+    * the delta's index rows, so they cost no job of their own.
     */
   def probeDedupIndex(spark: SparkSession, path: String, delta: DataFrame,
                       n: Int = 3, k: Int = 16, rowsPerBand: Int = 4,
                       threshold: Double = 0.8): DataFrame = {
-    val deltaRows = indexRows(delta, n, k, rowsPerBand)
-      .localCheckpoint(true) // banded probe + delta-side verify share it
-    probeDedupIndexRows(spark, path, deltaRows, threshold)
+    // banded probe + delta-side verify share the materialized rows
+    val (deltaRows, bounds) = pinWithBounds(indexRows(delta, n, k, rowsPerBand),
+      k, rowsPerBand)
+    probeDedupIndexRows(spark, path, deltaRows, bounds, threshold)
   }
 
-  /** [[probeDedupIndex]] from precomputed (already materialized)
-    * [[indexRows]] — lets the curation loop share one signature pass
-    * between probe and append. */
+  /** [[probeDedupIndex]] from precomputed [[indexRows]] and their
+    * bounds, both from [[pinWithBounds]] — lets the curation loop share
+    * one signature pass between probe and append. */
   private[graft] def probeDedupIndexRows(spark: SparkSession, path: String,
                                          deltaRows: DataFrame,
+                                         bounds: Option[Column],
                                          threshold: Double): DataFrame = {
-    val deltaBanded = banded(deltaRows)
-    val prune = bandBoundsPrune(deltaBanded) match {
+    val prune = bounds match {
       case Some(p) => p
       case None => // blank or empty delta: nothing can pair
         import spark.implicits._
         return Seq.empty[(Long, Long, Int, Int, Int)]
           .toDF("a", "b", "inter", "na", "nb")
     }
+    val deltaBanded = banded(deltaRows)
     val storeBanded = Tables.read(spark, s"$path/bands")
       .where(prune)
       .select(col("band"), col("key"), col("doc_id"))
-    // store↔delta candidates plus delta-internal candidates (x < y so
-    // a pair appears once and self-pairs drop); a store doc never
-    // pairs with another store doc — that dedup already ran at build
-    val storeDelta = storeBanded.select(col("band"), col("key"), col("doc_id").as("x"))
+    // ONE candidate join: every band row that can pair — stored and
+    // delta, tagged by side — against the delta's band rows. A store
+    // doc pairs with any other doc (x ≠ y; store↔store pairs never
+    // form, that dedup already ran at build); a delta doc only with a
+    // greater id (x < y, so a delta-internal pair appears once and
+    // self-pairs drop)
+    val candidates = storeBanded.withColumn("stored", lit(true))
+      .unionByName(deltaBanded.withColumn("stored", lit(false)))
+      .select(col("band"), col("key"), col("doc_id").as("x"), col("stored"))
       .join(deltaBanded.select(col("band"), col("key"), col("doc_id").as("y")),
         Seq("band", "key"))
-      .where(col("x") =!= col("y"))
-    val deltaDelta = deltaBanded.select(col("band"), col("key"), col("doc_id").as("x"))
-      .join(deltaBanded.select(col("band"), col("key"), col("doc_id").as("y")),
-        Seq("band", "key"))
-      .where(col("x") < col("y"))
-    val candidates = storeDelta.unionByName(deltaDelta)
+      .where((col("stored") && col("x") =!= col("y")) ||
+        (!col("stored") && col("x") < col("y")))
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct()
@@ -1015,7 +1045,7 @@ object Dedup {
   }
 
   /** Within-set near-dup pairs of (already materialized)
-    * [[indexRows]] — the delta-delta leg of [[probeDedupIndexRows]]
+    * [[indexRows]] — the delta-internal pairs of [[probeDedupIndexRows]]
     * standing alone, and the whole of [[minhashLshPairs]]. The curation
     * loop's SEED batch (no store yet) calls it on the rows it also
     * writes as the index. */
@@ -1057,20 +1087,26 @@ object Dedup {
       .where(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")) >= threshold)
 
-  /** Per-band key bounds of a (band, key) frame (≤ k/rowsPerBand rows —
-    * driver-bounded like any index metadata read) as one predicate for
-    * the bands-table scan, or None when the frame is empty. Band is
-    * the partition column and key is the files' sort order, so
+  /** `rows` (any frame with the k/rowsPerBand-key `bands` column of
+    * [[indexRows]]) materialized, with their per-band key bounds as one
+    * predicate for the bands-table scan, or None when `rows` is empty.
+    * The bounds are a `Dataset.observe` on the job that materializes
+    * the rows, so they add no job (a grouped min/max would add two).
+    * Band is the partition column and key the files' sort order, so
     * partition pruning + parquet row-group min/max stats skip bucket
-    * ranges no key of the frame can touch — a JOIN alone would scan
-    * every band file in full. */
-  private def bandBoundsPrune(bandRows: DataFrame): Option[Column] = {
-    val bounds = bandRows.groupBy(col("band"))
-      .agg(min(col("key")).as("lo"), max(col("key")).as("hi")).collect()
-    if (bounds.isEmpty) None
-    else Some(bounds.map { r =>
-      col("band") === r.getInt(0) &&
-        col("key") >= r.getLong(1) && col("key") <= r.getLong(2)
-    }.reduce(_ || _))
+    * ranges no key of `rows` can touch — a JOIN alone would scan every
+    * band file in full. The probe, the curation loop and the
+    * retraction all take their bounds here. */
+  private[graft] def pinWithBounds(rows: DataFrame, k: Int = 16,
+                                   rowsPerBand: Int = 4): (DataFrame, Option[Column]) = {
+    val nBands = k / rowsPerBand
+    val obs = Observation()
+    val aggs = (0 until nBands).flatMap(b =>
+      Seq(min(col("bands")(b)).as(s"lo$b"), max(col("bands")(b)).as(s"hi$b")))
+    val pinned = rows.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val m = obs.get
+    val perBand = (0 until nBands).flatMap(b => Option(m(s"lo$b")).map(lo =>
+      col("band") === b && col("key") >= lo && col("key") <= m(s"hi$b")))
+    (pinned, perBand.reduceOption(_ || _))
   }
 }

@@ -357,14 +357,15 @@ object StreamingIngest {
           val hasStore = storeExists(spark, indexPath, "bands")
           // ONE signature pass per batch: the same materialized rows
           // feed the probe AND the survivors' index append — the batch
-          // text is scanned and shingled once, not twice
-          val rows = Dedup.indexRows(pinned).localCheckpoint(true)
+          // text is scanned and shingled once, not twice; the probe's
+          // per-band key bounds are observed on that same job
+          val (rows, bounds) = Dedup.pinWithBounds(Dedup.indexRows(pinned))
           // the pair set feeds exactly ONE consumer now (the dropped-id
           // projection below), so it needs no checkpoint of its own —
           // one saved per-micro-batch driver job (r13 round)
           val pairs =
             if (hasStore) Dedup.probeDedupIndexRows(spark, indexPath, rows,
-              threshold)
+              bounds, threshold)
             else Dedup.selfPairsFromRows(rows, threshold)
           val bids = pinned.select(col("doc_id"))
           // pair sides flagged by batch membership (ids + booleans on

@@ -244,6 +244,60 @@ class DedupIndexSpec extends SparkSpecBase {
     assert(got.columns.toSeq == Seq("a", "b", "inter", "na", "nb"))
   }
 
+  test("probeDedupIndex: a warm probe runs five jobs — bounds ride the delta checkpoint, one candidate join") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-didx-jobs").toString
+    val delta = docs.where(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+    Dedup.writeDedupIndex(docs.where(col("doc_id") % 3 =!= 0), dir)
+    def probe(): Unit = Dedup.probeDedupIndex(spark, dir, delta)
+      .write.format("noop").mode("overwrite").save()
+    probe() // cold run off the count
+    // one job materializes the delta's index rows (and observes their
+    // per-band key bounds); the candidate join and the verify take the
+    // other four — no grouped-bounds jobs, no second candidate join
+    val (_, jobs) = jobsOf(probe())
+    assert(jobs == 5, s"warm probe ran $jobs jobs")
+  }
+
+  test("pinWithBounds: bounds cost no job and admit exactly each band's [min, max] keys") {
+    val rows = Dedup.indexRows(docs.where(col("doc_id") % 4 === 0))
+    val plainJobs = jobsOf(rows.localCheckpoint(true))._2
+    val ((pinned, bounds), jobs) = jobsOf(Dedup.pinWithBounds(rows))
+    assert(jobs == plainJobs, s"bounds added ${jobs - plainJobs} jobs")
+    // reference: the grouped per-band min/max of the pinned rows' keys
+    val ref = pinned.select(posexplode(col("bands")).as(Seq("band", "key")))
+      .groupBy(col("band")).agg(min(col("key")), max(col("key")))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    assert(ref.length == 4)
+    val edges = ref.toSeq.flatMap { case (b, lo, hi) =>
+      Seq((b, lo - 1, false), (b, lo, true), (b, hi, true), (b, hi + 1, false))
+    } :+ ((4, ref.head._2, false)) // a band the rows do not have
+    val admitted = edges.toDF("band", "key", "want").where(bounds.get)
+      .select(col("band"), col("key")).as[(Int, Long)].collect().toSet
+    assert(admitted == edges.filter(_._3).map(e => (e._1, e._2)).toSet)
+    pinned.unpersist()
+    // blank or empty rows have no bounds
+    val blank = Seq((1L, "  "), (2L, "")).toDF("doc_id", "text")
+    assert(Dedup.pinWithBounds(Dedup.indexRows(blank))._2.isEmpty)
+    assert(Dedup.pinWithBounds(Dedup.indexRows(docs.where(lit(false))))._2.isEmpty)
+  }
+
+  test("curateParity: an all-blank batch against a live index admits without touching it") {
+    // ids 0..38 slice at 9/19/29 → batches {0,5},{12,15},{22},{38}
+    val a = (1 to 40).map(i => s"alpha$i").mkString(" ")
+    val bT = (1 to 40).map(i => s"beta$i").mkString(" ")
+    val cT = (1 to 40).map(i => s"gamma$i").mkString(" ")
+    val corpus = Seq(
+      (0L, a), (5L, bT), // batch 0 seeds the index
+      (12L, " "), (15L, ""), // batch 1: no index rows, so no bounds — admitted, never indexed
+      (22L, a), // batch 2: dup of the batch-0 survivor → dropped
+      (38L, cT) // batch 3 survivor
+    ).toDF("doc_id", "text")
+    val got = graft.streaming.StreamBatchParity.curateParity(spark, corpus)
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(got == Set((0L, 0), (5L, 0), (12L, 1), (15L, 1), (38L, 3)))
+  }
+
   test("removeFromDedupIndex: probe-after-delete equals rebuild-without, untouched files byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft-didx-del").toString
     val store = docs.where(col("doc_id") % 3 =!= 0)

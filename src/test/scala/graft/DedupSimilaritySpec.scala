@@ -85,6 +85,57 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(!got.exists { case (a, b) => a >= 4L || b >= 4L })
   }
 
+  test("ngramJaccardPairs: the shingle exchange keeps spark.sql.shuffle.partitions partitions") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan; () }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobsOf drains the listener bus, so every plan has arrived
+    try jobsOf(Dedup.ngramJaccardPairs(corpus, n = 3, threshold = 0.5).collect())
+    finally spark.listenerManager.unregister(listener)
+    def shingleStage(p: SparkPlan): Boolean = p match {
+      case s: ShuffleQueryStageExec => s.shuffle.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == "shingle"))
+        case _ => false
+      }
+      case _ => false
+    }
+    object Walk extends AdaptiveSparkPlanHelper
+    val stages = plans.toSeq.flatMap(p => Walk.collect(p) {
+      case s: ShuffleQueryStageExec if shingleStage(s) => s.shuffle.numPartitions
+    })
+    // a reader over the shingle stage would be AQE merging its partitions
+    val reads = plans.toSeq.flatMap(p => Walk.collect(p) {
+      case r: AQEShuffleReadExec if shingleStage(r.child) => r.partitionSpecs.size
+    })
+    assert(stages.nonEmpty, "no shingle exchange ran")
+    assert((stages ++ reads).forall(_ == nParts),
+      s"shingle stage partitions ${stages.mkString(",")}, read as ${reads.mkString(",")}; want $nParts")
+  }
+
+  test("ngramJaccardPairs: the df-cut drops a shingle held by more than maxDocsPerShingle docs") {
+    val text = "alpha beta gamma delta epsilon"
+    // four copies share every shingle; one more pair shares its own
+    val docs = ((1L to 4L).map(i => (i, text)) ++ Seq(
+      (5L, "one two three four five six"), (6L, "one two three four five six"))
+    ).toDF("doc_id", "text")
+    def pairs(cap: Int): Set[(Long, Long)] =
+      Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.5, maxDocsPerShingle = cap)
+        .select("a", "b").as[(Long, Long)].collect().toSet
+    val copies = for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)
+    assert(pairs(4) == copies.toSet + ((5L, 6L))) // a run of exactly cap docs pairs
+    assert(pairs(3) == Set((5L, 6L)))
+    assert(pairs(1).isEmpty)
+  }
+
   test("dedupSweep counts agree with per-threshold ngramJaccardPairs") {
     val ths = Seq(5000, 6000, 7000, 8000, 9000)
     val got = Dedup.dedupSweep(corpus, n = 3, thresholdsBps = ths)
