@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.{Chunk, DocElement}
-import graft.sources.MarkdownElementReader
+import graft.sources.{AutoElementReader, ElementFrame, MarkdownElementReader}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -288,24 +288,11 @@ object Chunkers {
                         idCol: String = "doc_id",
                         contentCol: String = "content",
                         metaCols: Seq[String] = Nil,
-                        opts: ChunkerOptions = ChunkerOptions()): Dataset[Chunk] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(contentCol).cast("binary")) ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val bytes =
-        if (row.isNullAt(1)) Array.empty[Byte] else row.getAs[Array[Byte]](1)
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(2 + i) => name -> row.getString(2 + i)
-      }.toMap
-      packDocElements(id,
-        graft.sources.AutoElementReader.docElements(id, bytes, meta), opts)
+                        opts: ChunkerOptions = ChunkerOptions()): Dataset[Chunk] =
+    ElementFrame.binary(documents, idCol, contentCol, None, metaCols) {
+      (id, bytes, _, meta) =>
+        packDocElements(id, AutoElementReader.docElements(id, bytes, meta), opts)
     }
-  }
 
   // --------------------------------------------------------------- header
   /** HeaderChunker.cs: walk elements in order; headers update a level

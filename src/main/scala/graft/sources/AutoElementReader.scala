@@ -29,11 +29,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *     `<html`, fragments)
   *   - anything else      → [[MarkdownElementReader]] (UTF-8 text)
   *
-  * Every reader emits the same (kind, level, markdown, text) stream,
-  * so a mixed corpus yields ONE uniform element table — the
-  * reader-agnostic claim made structural (the i_auto_elements driver
-  * row proves the readers emit identical canonical rows for the
-  * same logical document).
+  * Every reader emits the same (kind, level, markdown, text) stream
+  * and turns it into rows through the one [[ElementFrame]] (row
+  * projection, numbering, table render, whitespace collapse), so a
+  * mixed corpus yields ONE uniform element table — the reader-agnostic
+  * claim made structural (the i_auto_elements driver row proves the
+  * readers emit identical canonical rows for the same logical
+  * document).
   */
 object AutoElementReader {
 
@@ -121,46 +123,30 @@ object AutoElementReader {
     if (i < bytes.length && bytes(i) == '<') "html" else "markdown"
   }
 
-  /** Parse with a KNOWN format — the per-format dispatch body shared
-    * by [[parseBlocks]] and the fallback path in [[docElements]]. */
-  private def parseAs(fmt: String,
-      bytes: Array[Byte]): Seq[(String, Int, String, String, Option[Int])] =
+  /** One document's elements in a KNOWN format, numbered by the shared
+    * [[ElementFrame]] helpers — the per-format dispatch shared by
+    * [[parseBlocks]] and both paths of [[docElements]]. */
+  private def elementsAs(fmt: String, id: Long, bytes: Array[Byte],
+                         meta: Map[String, String]): Seq[DocElement] = {
+    def utf8 = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
     fmt match {
-      case "pdf" =>
-        PdfElementReader.parseBlocks(bytes).map {
-          case (k, l, m, t, p) => (k, l, m, t, Some(p))
-        }
-      case "docx" =>
-        DocxElementReader.parseBlocks(bytes).map {
-          case (k, l, m, t) => (k, l, m, t, None)
-        }
-      case "xlsx" =>
-        XlsxElementReader.parseBlocks(bytes).map {
-          case (k, l, m, t) => (k, l, m, t, None)
-        }
-      case "pptx" =>
-        PptxElementReader.parseBlocks(bytes).map {
-          case (k, l, m, t, slide) => (k, l, m, t, Some(slide))
-        }
-      case "html" =>
-        HtmlElementReader.parseBlocks(
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)).map {
-          case (k, l, m, t) => (k, l, m, t, None)
-        }
-      case _ =>
-        MarkdownElementReader.parseBlocks(
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)).map {
-          case (k, l, m, t) => (k, l, m, t, None)
-        }
+      case "pdf" => ElementFrame.paged(id, PdfElementReader.parseBlocks(bytes), meta)
+      case "pptx" => ElementFrame.paged(id, PptxElementReader.parseBlocks(bytes), meta)
+      case "docx" => ElementFrame.numbered(id, DocxElementReader.parseBlocks(bytes), None, meta)
+      case "xlsx" => ElementFrame.numbered(id, XlsxElementReader.parseBlocks(bytes), None, meta)
+      case "html" => ElementFrame.numbered(id, HtmlElementReader.parseBlocks(utf8), None, meta)
+      case _ => ElementFrame.numbered(id, MarkdownElementReader.parseBlocks(utf8), None, meta)
     }
+  }
 
   /** Parse one binary into the shared element tuple stream (page is
-    * None for the pageless formats, the PDF page number otherwise).
-    * Sniff-and-parse only — the zero-element fallback lives in
-    * [[docElements]] where recovery can be recorded in metadata. */
+    * None for the pageless formats, the PDF page or PPTX slide number
+    * otherwise). Sniff-and-parse only — the zero-element fallback lives
+    * in [[docElements]] where recovery can be recorded in metadata. */
   def parseBlocks(
       bytes: Array[Byte]): Seq[(String, Int, String, String, Option[Int])] =
-    parseAs(detect(bytes), bytes)
+    elementsAs(detect(bytes), 0L, bytes, Map.empty)
+      .map(e => (e.kind, e.level, e.markdown, e.text, e.page_number))
 
   /** One binary document → its ordered [[DocElement]]s (detected
     * format recorded in metadata under "format") — the per-row body of
@@ -187,19 +173,13 @@ object AutoElementReader {
   def docElements(id: Long, bytes: Array[Byte],
                   baseMeta: Map[String, String] = Map.empty): Seq[DocElement] = {
     val fmt = detect(bytes)
-    val blocks = parseAs(fmt, bytes)
-    def emit(bs: Seq[(String, Int, String, String, Option[Int])],
-             meta: Map[String, String]): Seq[DocElement] =
-      bs.zipWithIndex.map {
-        case ((kind, level, md, txt, page), seq) =>
-          DocElement(id, seq, kind, level, md, txt, page, meta)
-      }
-    if (blocks.nonEmpty) emit(blocks, baseMeta + ("format" -> fmt))
+    val sniffed = elementsAs(fmt, id, bytes, baseMeta + ("format" -> fmt))
+    if (sniffed.nonEmpty) sniffed
     // markdown is the terminal text path: zero elements there means
     // genuinely empty/whitespace content — nothing was lost
     else if (fmt == "markdown" || bytes == null || bytes.isEmpty) Nil
     else {
-      val recovered: Option[(String, Seq[(String, Int, String, String, Option[Int])])] =
+      val recovered: Option[Seq[DocElement]] =
         if (!looksTextual(bytes)) None
         else {
           // try the text formats in sniff order, markdown last (it is
@@ -208,17 +188,13 @@ object AutoElementReader {
           val candidates =
             (if (fb0 == fmt) Nil else Seq(fb0)) :+ "markdown"
           candidates.distinct.iterator
-            .map(f => f -> parseAs(f, bytes))
-            .find(_._2.nonEmpty)
+            .map(fb => elementsAs(fb, id, bytes,
+              baseMeta ++ Map("format" -> fb, "format_fallback" -> fmt)))
+            .find(_.nonEmpty)
         }
-      recovered match {
-        case Some((fb, fbBlocks)) =>
-          emit(fbBlocks,
-            baseMeta ++ Map("format" -> fb, "format_fallback" -> fmt))
-        case None =>
-          Seq(DocElement(id, 0, "unparsed", 0, "", "", None,
-            baseMeta ++ Map("format" -> fmt, "parse_failed" -> "true")))
-      }
+      recovered.getOrElse(
+        Seq(DocElement(id, 0, "unparsed", 0, "", "", None,
+          baseMeta ++ Map("format" -> fmt, "parse_failed" -> "true"))))
     }
   }
 
@@ -228,21 +204,8 @@ object AutoElementReader {
     * downstream stages can filter/audit by source type. */
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", contentCol: String = "content",
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(contentCol).cast("binary")) ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val bytes =
-        if (row.isNullAt(1)) Array.empty[Byte] else row.getAs[Array[Byte]](1)
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(2 + i) => name -> row.getString(2 + i)
-      }.toMap
-      docElements(id, bytes, meta)
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.binary(documents, idCol, contentCol, None, metaCols) {
+      (id, bytes, _, meta) => docElements(id, bytes, meta)
     }
-  }
 }

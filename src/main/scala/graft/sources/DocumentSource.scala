@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-based document loading — the Spark twin of the reference's
@@ -12,15 +12,27 @@ import org.apache.spark.sql.functions._
   * `wholetext` keeps one file per row (a document is the parse unit);
   * Spark still parallelizes across files and a 100 TB corpus of small
   * files is bounded by listing + IO, not by this operator. The stable
-  * document id is a 64-bit hash of the relative path so re-ingestion
-  * of the same file overwrites rather than duplicates (the reference's
+  * document id is a 64-bit hash of the file's full URI
+  * (`input_file_name()`, e.g. `file:///data/a.md`) so re-ingestion of
+  * the same file overwrites rather than duplicates (the reference's
   * incremental-ingestion key is the source file identity too,
-  * VectorStoreWriter.cs IncrementalIngestion).
+  * VectorStoreWriter.cs IncrementalIngestion). All four directory
+  * readers — text or binary, batch or stream — key a file the same
+  * way, through [[fileDocument]].
   */
 object DocumentSource {
 
+  /** (doc_id, <content>, source) for a file-source row: source is the
+    * file URI `input_file_name()` gives, doc_id its xxhash64. The one
+    * document identity of [[readDir]], [[streamDir]], [[readBinaryDir]]
+    * and [[streamBinaryDir]] (binaryFile's own `path` column spells the
+    * same file `file:/data/a.md`, which would key it twice). */
+  private def fileDocument(content: Column): Seq[Column] =
+    Seq(xxhash64(input_file_name()).as("doc_id"), content,
+      input_file_name().as("source"))
+
   /** Read every file matching `glob` under `dir` as one document row:
-    * (doc_id, text, source).
+    * (doc_id, text, source), keyed by [[fileDocument]].
     */
   def readDir(spark: SparkSession, dir: String, glob: String = "*.md"): DataFrame =
     spark.read
@@ -28,11 +40,7 @@ object DocumentSource {
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
       .text(dir)
-      .select(
-        xxhash64(input_file_name()).as("doc_id"),
-        col("value").as("text"),
-        input_file_name().as("source")
-      )
+      .select(fileDocument(col("value").as("text")): _*)
 
   /** JSONL corpus reader — one JSON object per line, the dominant
     * interchange format for LLM training corpora. `textField` becomes
@@ -80,11 +88,7 @@ object DocumentSource {
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .select(
-        xxhash64(col("path")).as("doc_id"),
-        col("content"),
-        col("path").as("source")
-      )
+      .select(fileDocument(col("content")): _*)
 
   /** Streaming variant of [[readBinaryDir]]: watch `dir` and emit new
     * binary files as (doc_id, content, source) rows. */
@@ -107,11 +111,7 @@ object DocumentSource {
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(dir)
-      .select(
-        xxhash64(col("path")).as("doc_id"),
-        col("content"),
-        col("path").as("source")
-      )
+      .select(fileDocument(col("content")): _*)
 
   /** Streaming variant: watch `dir` and emit new files as documents. */
   def streamDir(spark: SparkSession, dir: String, glob: String = "*.md",
@@ -122,9 +122,5 @@ object DocumentSource {
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(dir)
-      .select(
-        xxhash64(input_file_name()).as("doc_id"),
-        col("value").as("text"),
-        input_file_name().as("source")
-      )
+      .select(fileDocument(col("value").as("text")): _*)
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model.DocElement
+import graft.sources.ElementFrame.{collapse, tableFromGrid}
 import graft.sources.Ooxml._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import scala.collection.mutable.ArrayBuffer
@@ -335,31 +336,10 @@ object DocxElementReader {
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", contentCol: String = "content",
                pageCol: Option[String] = None,
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(contentCol).cast("binary")) ++
-        pageCol.map(c => col(c).cast("int")).toSeq ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    val hasPage = pageCol.isDefined
-    val metaOffset = if (hasPage) 3 else 2
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val bytes =
-        if (row.isNullAt(1)) Array.empty[Byte] else row.getAs[Array[Byte]](1)
-      val page = if (hasPage && !row.isNullAt(2)) Some(row.getInt(2)) else None
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(metaOffset + i) =>
-          name -> row.getString(metaOffset + i)
-      }.toMap
-      parseBlocks(bytes).zipWithIndex.map {
-        case ((kind, level, md, txt), seq) =>
-          DocElement(id, seq, kind, level, md, txt, page, meta)
-      }
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.binary(documents, idCol, contentCol, pageCol, metaCols) {
+      (id, bytes, page, meta) => ElementFrame.numbered(id, parseBlocks(bytes), page, meta)
     }
-  }
 
   // ------------------------------------------------------------------
   // Deterministic synthesis (specs + the i_docx_elements driver row):
@@ -397,9 +377,7 @@ object DocxElementReader {
       val run = s"""<w:r>$rPr<w:t xml:space="preserve">${xesc(r.text)}</w:t></w:r>"""
       r.link match {
         case Some(url) =>
-          val id = relId(
-            "http://schemas.openxmlformats.org/officeDocument/2006/relationships/hyperlink",
-            url)
+          val id = relId("hyperlink", url)
           s"""<w:hyperlink r:id="$id">$run</w:hyperlink>"""
         case None => run
       }
@@ -421,9 +399,7 @@ object DocxElementReader {
       case SList(items) =>
         items.map(t => pXml(None, numbered = true, Seq(SRun(t)))).mkString
       case SImage(alt) =>
-        val id = relId(
-          "http://schemas.openxmlformats.org/officeDocument/2006/relationships/image",
-          "media/image1.png")
+        val id = relId("image", "media/image1.png")
         s"""<w:p><w:r><w:drawing><wp:inline><wp:docPr id="1" name="Picture 1" descr="${xesc(alt)}"/>""" +
           s"""<a:graphic><a:graphicData><pic:pic><pic:blipFill><a:blip r:embed="$id"/>""" +
           """</pic:blipFill></pic:pic></a:graphicData></a:graphic></wp:inline></w:drawing></w:r></w:p>"""
@@ -440,28 +416,17 @@ object DocxElementReader {
         pXml(Some("Code"), numbered = false, Seq(SRun(text)))
     }.mkString
     val documentXml =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      XmlDecl +
         """<w:document xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main"""" +
         """ xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"""" +
         """ xmlns:wp="http://schemas.openxmlformats.org/drawingml/2006/wordprocessingDrawing"""" +
         """ xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main"""" +
         """ xmlns:pic="http://schemas.openxmlformats.org/drawingml/2006/picture">""" +
         s"<w:body>$bodyXml</w:body></w:document>"
-    val relsXml =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-        rels.map { case (id, tpe, target) =>
-          s"""<Relationship Id="$id" Type="$tpe" Target="$target"/>"""
-        }.mkString + "</Relationships>"
-    val contentTypes =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-        """<Default Extension="xml" ContentType="application/xml"/>""" +
-        """<Override PartName="/word/document.xml" ContentType="application/vnd.openxmlformats-officedocument.wordprocessingml.document.main+xml"/>""" +
-        "</Types>"
     zipPackage(Seq(
-      "[Content_Types].xml" -> contentTypes,
+      "[Content_Types].xml" -> contentTypesXml("/word/document.xml",
+        "application/vnd.openxmlformats-officedocument.wordprocessingml.document.main+xml"),
       "word/document.xml" -> documentXml,
-      "word/_rels/document.xml.rels" -> relsXml))
+      "word/_rels/document.xml.rels" -> relsXml(rels.toSeq)))
   }
 }

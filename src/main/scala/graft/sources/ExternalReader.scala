@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Adapter for external document-conversion services — the Spark twin
   * of the reference's MarkItDownReader / AzureAIDocumentIntelligence
@@ -53,29 +54,34 @@ object ExternalReader {
   final case class ConvertedDoc(doc_id: Long, text: String, source: String, error: String)
   final case class ConvertedPage(doc_id: Long, page: Int, text: String, source: String, error: String)
 
+  /** The batched conversion loop both readers share: each partition
+    * is one client, fed `batchSize` files at a time, every file turned
+    * into its output rows by `convert`. */
+  private def converted[T <: Product : TypeTag](files: DataFrame, batchSize: Int)(
+      convert: RawFile => Seq[T]): DataFrame = {
+    import files.sparkSession.implicits._
+    files.select(col("file_id"), col("content"), col("media_type"), col("source"))
+      .as[RawFile]
+      .mapPartitions { rows =>
+        // per-partition client setup would happen here
+        rows.grouped(batchSize).flatMap(_.flatMap(convert))
+      }(Encoders.product[T])
+      .toDF()
+  }
+
   /** Convert raw files to documents: (doc_id, text, source, error).
     * Conversion failures land in `error` instead of killing the job —
     * at corpus scale some documents are always malformed.
     */
   def read(spark: SparkSession, files: DataFrame,
            converter: MarkdownConverter = PassthroughConverter,
-           batchSize: Int = 16): DataFrame = {
-    import spark.implicits._
-    files.select(col("file_id"), col("content"), col("media_type"), col("source"))
-      .as[RawFile]
-      .mapPartitions { rows =>
-        // per-partition client setup would happen here
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { f =>
-            try ConvertedDoc(f.file_id, converter.convert(f.content, f.media_type), f.source, null)
-            // e.toString, not getMessage: a null message would make the
-            // failure row indistinguishable from a success with null text
-            catch { case e: Exception => ConvertedDoc(f.file_id, null, f.source, e.toString) }
-          }
-        }
-      }
-      .toDF()
-  }
+           batchSize: Int = 16): DataFrame =
+    converted(files, batchSize) { f =>
+      try Seq(ConvertedDoc(f.file_id, converter.convert(f.content, f.media_type), f.source, null))
+      // e.toString, not getMessage: a null message would make the
+      // failure row indistinguishable from a success with null text
+      catch { case e: Exception => Seq(ConvertedDoc(f.file_id, null, f.source, e.toString)) }
+    }
 
   /** Paged conversion: one output row per (document, page), 1-based
     * page numbers — feed straight into
@@ -86,22 +92,13 @@ object ExternalReader {
     */
   def readPaged(spark: SparkSession, files: DataFrame,
                 converter: PagedMarkdownConverter = FormFeedPagedConverter,
-                batchSize: Int = 16): DataFrame = {
-    import spark.implicits._
-    files.select(col("file_id"), col("content"), col("media_type"), col("source"))
-      .as[RawFile]
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.flatMap { f =>
-            try converter.convertPages(f.content, f.media_type).zipWithIndex.map {
-              case (page, i) => ConvertedPage(f.file_id, i + 1, page, f.source, null)
-            }
-            catch { case e: Exception =>
-              Seq(ConvertedPage(f.file_id, 0, null, f.source, e.toString))
-            }
-          }
-        }
+                batchSize: Int = 16): DataFrame =
+    converted(files, batchSize) { f =>
+      try converter.convertPages(f.content, f.media_type).zipWithIndex.map {
+        case (page, i) => ConvertedPage(f.file_id, i + 1, page, f.source, null)
       }
-      .toDF()
-  }
+      catch { case e: Exception =>
+        Seq(ConvertedPage(f.file_id, 0, null, f.source, e.toString))
+      }
+    }
 }

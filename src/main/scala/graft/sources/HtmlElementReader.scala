@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model.DocElement
+import graft.sources.ElementFrame.{collapse, tableFromGrid}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import scala.collection.mutable.ArrayBuffer
 
@@ -349,10 +350,6 @@ object HtmlElementReader {
     sb.toString
   }
 
-  private val WsRun = java.util.regex.Pattern.compile("\\s+")
-  private def collapse(s: String): String =
-    WsRun.matcher(s).replaceAll(" ").trim
-
   // ------------------------------------------------------------------
   // Inline rendering: markdown + plain text
   // ------------------------------------------------------------------
@@ -486,17 +483,8 @@ object HtmlElementReader {
         case _ =>
       }
       collectRows(t)
-      if (rows.nonEmpty) {
-        val header = rows.head
-        val md = new StringBuilder
-        md.append(header.map(_._1).mkString("| ", " | ", " |"))
-        md.append('\n')
-        md.append(Seq.fill(header.size)("---").mkString("| ", " | ", " |"))
-        rows.tail.foreach { r =>
-          md.append('\n').append(r.map(_._1).mkString("| ", " | ", " |"))
-        }
-        val text = collapse(rows.flatMap(_.map(_._2)).filter(_.nonEmpty).mkString(" "))
-        emit("table", 0, md.toString, text)
+      tableFromGrid(rows.toSeq).foreach { case (kind, level, md, text) =>
+        emit(kind, level, md, text)
       }
     }
 
@@ -644,28 +632,8 @@ object HtmlElementReader {
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", textCol: String = "html",
                pageCol: Option[String] = None,
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(textCol).cast("string")) ++
-        pageCol.map(c => col(c).cast("int")).toSeq ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    val hasPage = pageCol.isDefined
-    val metaOffset = if (hasPage) 3 else 2
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val html = if (row.isNullAt(1)) "" else row.getString(1)
-      val page = if (hasPage && !row.isNullAt(2)) Some(row.getInt(2)) else None
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(metaOffset + i) =>
-          name -> row.getString(metaOffset + i)
-      }.toMap
-      parseBlocks(html).zipWithIndex.map {
-        case ((kind, level, md, txt), seq) =>
-          DocElement(id, seq, kind, level, md, txt, page, meta)
-      }
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.text(documents, idCol, textCol, pageCol, metaCols) {
+      (id, html, page, meta) => ElementFrame.numbered(id, parseBlocks(html), page, meta)
     }
-  }
 }

@@ -225,27 +225,8 @@ object MarkdownElementReader {
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", textCol: String = "text",
                pageCol: Option[String] = None,
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols // stable copy captured by the closure
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(textCol).cast("string")) ++
-        pageCol.map(c => col(c).cast("int")).toSeq ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    val hasPage = pageCol.isDefined
-    val metaOffset = if (hasPage) 3 else 2
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val text = if (row.isNullAt(1)) "" else row.getString(1)
-      val page = if (hasPage && !row.isNullAt(2)) Some(row.getInt(2)) else None
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(metaOffset + i) => name -> row.getString(metaOffset + i)
-      }.toMap
-      parseBlocks(text).zipWithIndex.map {
-        case ((kind, level, md, txt), seq) =>
-          DocElement(id, seq, kind, level, md, txt, page, meta)
-      }
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.text(documents, idCol, textCol, pageCol, metaCols) {
+      (id, text, page, meta) => ElementFrame.numbered(id, parseBlocks(text), page, meta)
     }
-  }
 }

@@ -8,8 +8,9 @@ import scala.collection.mutable.ArrayBuffer
   * conversion step (src/Microsoft.Extensions.DataIngestion.MarkItDown/
   * MarkItDownReader.cs:51-74); graft parses each in-process, and every
   * OOXML format is the same physical shape — a zip of XML parts — so
-  * the container handling, the secured StAX parse, and the
-  * namespace-stripped tree live here once.
+  * the container handling, the secured StAX parse, the
+  * namespace-stripped tree and the synthesizers' package parts live
+  * here once.
   *
   * Security contract (crawled documents are untrusted): per-part
   * decompression is capped ([[MaxPartBytes]] — zip bombs), DTDs and
@@ -194,31 +195,6 @@ private[graft] object Ooxml {
     }
   }
 
-  private val WsRun = java.util.regex.Pattern.compile("\\s+")
-
-  /** Collapse whitespace runs — the shared cell/paragraph text
-    * normalization all readers apply. */
-  def collapse(s: String): String = WsRun.matcher(s).replaceAll(" ").trim
-
-  /** Render a grid of (markdown, text) cells as one pipe-markdown
-    * table element: first row is the header, `---` separator, cells
-    * joined for text — the shared contract of the DOCX/HTML/XLSX/PPTX
-    * table paths. None when the grid is empty. */
-  def tableFromGrid(rows: Seq[Seq[(String, String)]])
-      : Option[(String, Int, String, String)] = {
-    val nonEmpty = rows.filter(_.nonEmpty)
-    if (nonEmpty.isEmpty) return None
-    val header = nonEmpty.head
-    val md = new StringBuilder
-    md.append(header.map(_._1).mkString("| ", " | ", " |")).append('\n')
-    md.append(Seq.fill(header.size)("---").mkString("| ", " | ", " |"))
-    nonEmpty.tail.foreach { r =>
-      md.append('\n').append(r.map(_._1).mkString("| ", " | ", " |"))
-    }
-    val text = collapse(nonEmpty.flatMap(_.map(_._2)).filter(_.nonEmpty).mkString(" "))
-    Some(("table", 0, md.toString, text))
-  }
-
   /** XML-escape for the deterministic synthesizers. */
   def xesc(s: String): String = {
     val sb = new StringBuilder
@@ -231,6 +207,28 @@ private[graft] object Ooxml {
     }
     sb.toString
   }
+
+  /** The XML declaration every synthesized part starts with. */
+  val XmlDecl = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+
+  /** `[Content_Types].xml` for a synthesized package: xml parts by
+    * default, plus the one main part's override. */
+  def contentTypesXml(mainPart: String, contentType: String): String =
+    XmlDecl +
+      """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+      """<Default Extension="xml" ContentType="application/xml"/>""" +
+      s"""<Override PartName="$mainPart" ContentType="$contentType"/>""" +
+      "</Types>"
+
+  /** An OPC relationships part from (id, type, target) triples; `type`
+    * is the last segment of the officeDocument relationship URI
+    * ("hyperlink", "image", "worksheet", "slide", "notesSlide"). */
+  def relsXml(rels: Seq[(String, String, String)]): String =
+    XmlDecl +
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+      rels.map { case (id, tpe, target) =>
+        s"""<Relationship Id="$id" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/$tpe" Target="$target"/>"""
+      }.mkString + "</Relationships>"
 
   /** Deterministic zip writer for the synthesizers: pinned entry
     * times, fixed insertion order, BEST_SPEED (the parse side still

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model.DocElement
+import graft.sources.ElementFrame.{collapse, tableFromGrid}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import scala.collection.mutable.ArrayBuffer
 
@@ -1093,14 +1094,9 @@ object PdfElementReader {
       cells.map(cell =>
         collapse(cell.sortBy(_.x).map(_.text).mkString(" "))).toSeq
     }.toSeq
-    if (rows.flatten.count(_.nonEmpty) < 2) return None
-    val md = new StringBuilder
-    md.append(rows.head.mkString("| ", " | ", " |")).append('\n')
-    md.append(Seq.fill(nCols)("---").mkString("| ", " | ", " |"))
-    rows.tail.foreach(r => md.append('\n').append(r.mkString("| ", " | ", " |")))
-    val text = collapse(rows.flatten.filter(_.nonEmpty).mkString(" "))
-    Some((RuledTable(yTop, x0, md.toString, text),
-      slab.map(_._2).toSet, GridBox(x0, xm, yBot, yTop)))
+    gridTable(rows).map { case (md, text) =>
+      (RuledTable(yTop, x0, md, text), slab.map(_._2).toSet, GridBox(x0, xm, yBot, yTop))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -1202,16 +1198,12 @@ object PdfElementReader {
       cells.map(cell =>
         collapse(cell.sortBy(_.x).map(_.text).mkString(" "))).toSeq
     }
-    if (rows.flatten.count(_.nonEmpty) < 2) return None
-    val md = new StringBuilder
-    md.append(rows.head.mkString("| ", " | ", " |")).append('\n')
-    md.append(Seq.fill(nCols)("---").mkString("| ", " | ", " |"))
-    rows.tail.foreach(r => md.append('\n').append(r.mkString("| ", " | ", " |")))
-    val text = collapse(rows.flatten.filter(_.nonEmpty).mkString(" "))
     // topY one pitch above the first baseline — where a top rule would
     // sit — so the table splices before the blocks below it
-    Some((RuledTable(yTop + med, x0, md.toString, text),
-      run.flatten.map(_._2).toSet, GridBox(x0, xm, yBot, yTop)))
+    gridTable(rows).map { case (md, text) =>
+      (RuledTable(yTop + med, x0, md, text), run.flatten.map(_._2).toSet,
+        GridBox(x0, xm, yBot, yTop))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -1303,15 +1295,9 @@ object PdfElementReader {
     }
     val rows = cells.map(_.map(cell =>
       collapse(cell.sortBy(s => (-s.y, s.x)).map(_.text).mkString(" "))).toSeq).toSeq
-    if (rows.flatten.count(_.nonEmpty) < 2) return None
-    // same pipe-markdown shape as the DOCX/HTML table elements
-    val md = new StringBuilder
-    md.append(rows.head.mkString("| ", " | ", " |")).append('\n')
-    md.append(Seq.fill(nCols)("---").mkString("| ", " | ", " |"))
-    rows.tail.foreach(r => md.append('\n').append(r.mkString("| ", " | ", " |")))
-    val text = collapse(rows.flatten.filter(_.nonEmpty).mkString(" "))
-    Some((RuledTable(yTop, x0, md.toString, text), consumed.toSet,
-      GridBox(x0, xm, yBot, yTop)))
+    gridTable(rows).map { case (md, text) =>
+      (RuledTable(yTop, x0, md, text), consumed.toSet, GridBox(x0, xm, yBot, yTop))
+    }
   }
 
   /** Rebuild lines from the shows a detected table did NOT consume —
@@ -1337,8 +1323,12 @@ object PdfElementReader {
   // ------------------------------------------------------------------
   // Document assembly
   // ------------------------------------------------------------------
-  private def collapse(s: String): String =
-    s.replaceAll("\\s+", " ").trim
+  /** A detected grid's (markdown, text) through the shared table
+    * render, or None when fewer than two cells hold text — a fake
+    * table is worse than none. Every row has the grid's column count. */
+  private def gridTable(rows: Seq[Seq[String]]): Option[(String, String)] =
+    if (rows.flatten.count(_.nonEmpty) < 2) None
+    else tableFromGrid(rows.map(_.map(c => (c, c)))).map(t => (t._3, t._4))
 
   /** Parse one PDF binary into ordered
     * (kind, level, markdown, text, page) tuples — the shared reader
@@ -1661,26 +1651,10 @@ object PdfElementReader {
     * page_number derived from the PDF's own page tree. */
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", contentCol: String = "content",
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(contentCol).cast("binary")) ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val bytes =
-        if (row.isNullAt(1)) Array.empty[Byte] else row.getAs[Array[Byte]](1)
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(2 + i) => name -> row.getString(2 + i)
-      }.toMap
-      parseBlocks(bytes).zipWithIndex.map {
-        case ((kind, level, md, txt, page), seq) =>
-          DocElement(id, seq, kind, level, md, txt, Some(page), meta)
-      }
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.binary(documents, idCol, contentCol, None, metaCols) {
+      (id, bytes, _, meta) => ElementFrame.paged(id, parseBlocks(bytes), meta)
     }
-  }
 
   // ------------------------------------------------------------------
   // Deterministic synthesis (specs + the i_pdf_elements driver row):

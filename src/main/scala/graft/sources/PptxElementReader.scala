@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model.DocElement
+import graft.sources.ElementFrame.{collapse, tableFromGrid}
 import graft.sources.Ooxml._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import scala.collection.mutable.ArrayBuffer
@@ -207,26 +208,10 @@ object PptxElementReader {
     * number as page_number — the [[PdfElementReader.elements]] twin. */
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", contentCol: String = "content",
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(contentCol).cast("binary")) ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val bytes =
-        if (row.isNullAt(1)) Array.empty[Byte] else row.getAs[Array[Byte]](1)
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(2 + i) => name -> row.getString(2 + i)
-      }.toMap
-      parseBlocks(bytes).zipWithIndex.map {
-        case ((kind, level, md, txt, slide), seq) =>
-          DocElement(id, seq, kind, level, md, txt, Some(slide), meta)
-      }
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.binary(documents, idCol, contentCol, None, metaCols) {
+      (id, bytes, _, meta) => ElementFrame.paged(id, parseBlocks(bytes), meta)
     }
-  }
 
   // ------------------------------------------------------------------
   // Deterministic synthesis (specs + the i_pptx_elements driver row) —
@@ -278,7 +263,7 @@ object PptxElementReader {
         }
       }.mkString
       val slideXml =
-        """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+        XmlDecl +
           """<p:sld xmlns:p="http://schemas.openxmlformats.org/presentationml/2006/main"""" +
           """ xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main"""" +
           """ xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">""" +
@@ -286,42 +271,29 @@ object PptxElementReader {
       slideParts += (s"ppt/slides/slide$n.xml" -> slideXml)
       if (slide.notes.nonEmpty) {
         val notesXml =
-          """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+          XmlDecl +
             """<p:notes xmlns:p="http://schemas.openxmlformats.org/presentationml/2006/main"""" +
             """ xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main">""" +
             s"""<p:cSld><p:spTree>${sp("body", 2, slide.notes)}</p:spTree></p:cSld></p:notes>"""
         slideParts += (s"ppt/notesSlides/notesSlide$n.xml" -> notesXml)
-        val slideRels =
-          """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-            """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-            s"""<Relationship Id="rIdN$n" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/notesSlide" Target="../notesSlides/notesSlide$n.xml"/>""" +
-            "</Relationships>"
-        slideParts += (s"ppt/slides/_rels/slide$n.xml.rels" -> slideRels)
+        slideParts += (s"ppt/slides/_rels/slide$n.xml.rels" ->
+          relsXml(Seq((s"rIdN$n", "notesSlide", s"../notesSlides/notesSlide$n.xml"))))
       }
     }
     val sldIds = slides.indices.map { i =>
       s"""<p:sldId id="${256 + i}" r:id="rId${i + 1}"/>"""
     }.mkString
     val presXml =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      XmlDecl +
         """<p:presentation xmlns:p="http://schemas.openxmlformats.org/presentationml/2006/main"""" +
         """ xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">""" +
         s"""<p:sldIdLst>$sldIds</p:sldIdLst></p:presentation>"""
-    val presRels =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-        slides.indices.map { i =>
-          s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/slide" Target="slides/slide${i + 1}.xml"/>"""
-        }.mkString + "</Relationships>"
-    val contentTypes =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-        """<Default Extension="xml" ContentType="application/xml"/>""" +
-        """<Override PartName="/ppt/presentation.xml" ContentType="application/vnd.openxmlformats-officedocument.presentationml.presentation.main+xml"/>""" +
-        "</Types>"
     zipPackage(
-      Seq("[Content_Types].xml" -> contentTypes,
+      Seq("[Content_Types].xml" -> contentTypesXml("/ppt/presentation.xml",
+          "application/vnd.openxmlformats-officedocument.presentationml.presentation.main+xml"),
         "ppt/presentation.xml" -> presXml,
-        "ppt/_rels/presentation.xml.rels" -> presRels) ++ slideParts)
+        "ppt/_rels/presentation.xml.rels" -> relsXml(slides.indices.map { i =>
+          (s"rId${i + 1}", "slide", s"slides/slide${i + 1}.xml")
+        })) ++ slideParts)
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.model.DocElement
+import graft.sources.ElementFrame.{collapse, tableFromGrid}
 import graft.sources.Ooxml._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import scala.collection.mutable.ArrayBuffer
@@ -182,26 +183,10 @@ object XlsxElementReader {
     * shared reader contract ([[DocxElementReader.elements]] twin). */
   def elements(spark: SparkSession, documents: DataFrame,
                idCol: String = "doc_id", contentCol: String = "content",
-               metaCols: Seq[String] = Nil): Dataset[DocElement] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val metaNames = metaCols
-    val projected = documents.select(
-      Seq(col(idCol).cast("long"), col(contentCol).cast("binary")) ++
-        metaNames.map(c => col(c).cast("string")): _*)
-    projected.flatMap { row =>
-      val id = row.getLong(0)
-      val bytes =
-        if (row.isNullAt(1)) Array.empty[Byte] else row.getAs[Array[Byte]](1)
-      val meta = metaNames.zipWithIndex.collect {
-        case (name, i) if !row.isNullAt(2 + i) => name -> row.getString(2 + i)
-      }.toMap
-      parseBlocks(bytes).zipWithIndex.map {
-        case ((kind, level, md, txt), seq) =>
-          DocElement(id, seq, kind, level, md, txt, None, meta)
-      }
+               metaCols: Seq[String] = Nil): Dataset[DocElement] =
+    ElementFrame.binary(documents, idCol, contentCol, None, metaCols) {
+      (id, bytes, _, meta) => ElementFrame.numbered(id, parseBlocks(bytes), None, meta)
     }
-  }
 
   // ------------------------------------------------------------------
   // Deterministic synthesis (specs + the i_xlsx_elements driver row):
@@ -259,7 +244,7 @@ object XlsxElementReader {
         else s"""<mergeCells count="${sheet.merges.size}">""" +
           sheet.merges.map(m => s"""<mergeCell ref="$m"/>""").mkString +
           "</mergeCells>"
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      XmlDecl +
         """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
         s"<sheetData>$rowsXml</sheetData>$mergeXml</worksheet>"
     }
@@ -267,31 +252,22 @@ object XlsxElementReader {
       s"""<sheet name="${xesc(sh.name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
     }.mkString
     val workbookXml =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      XmlDecl +
         """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"""" +
         """ xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">""" +
         s"<sheets>$sheetsXml</sheets></workbook>"
-    val relsXml =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-        sheets.indices.map { i =>
-          s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet${i + 1}.xml"/>"""
-        }.mkString + "</Relationships>"
     val sstXml =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      XmlDecl +
         s"""<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="${shared.size}" uniqueCount="${shared.size}">""" +
         shared.map(t => s"""<si><t xml:space="preserve">${xesc(t)}</t></si>""").mkString +
         "</sst>"
-    val contentTypes =
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-        """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-        """<Default Extension="xml" ContentType="application/xml"/>""" +
-        """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
-        "</Types>"
     zipPackage(
-      Seq("[Content_Types].xml" -> contentTypes,
+      Seq("[Content_Types].xml" -> contentTypesXml("/xl/workbook.xml",
+          "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"),
         "xl/workbook.xml" -> workbookXml,
-        "xl/_rels/workbook.xml.rels" -> relsXml,
+        "xl/_rels/workbook.xml.rels" -> relsXml(sheets.indices.map { i =>
+          (s"rId${i + 1}", "worksheet", s"worksheets/sheet${i + 1}.xml")
+        }),
         "xl/sharedStrings.xml" -> sstXml) ++
         sheetXmls.zipWithIndex.map { case (xml, i) =>
           s"xl/worksheets/sheet${i + 1}.xml" -> xml
