@@ -47,20 +47,6 @@ object TextFunctions {
     */
   def portableHash(s: Column): Column = native.polyHash(s)
 
-  /** HOF formulation of portableHash, kept as executable documentation
-    * of the DuckDB twin (native.polyHash is the hot-path version).
-    */
-  def portableHashHof(s: Column): Column =
-    aggregate(
-      filter(split(s, ""), c => length(c) > 0),
-      lit(0L),
-      (acc, c) => pmod(acc * 31 + ascii(c), lit(HashMod))
-    )
-
-  /** Affine re-hash family for MinHash: h_i(x) = (a_i*x + b_i) mod p. */
-  def affineHash(x: Column, a: Long, b: Long): Column =
-    pmod(x * a + b, lit(HashMod))
-
   /** Word n-gram shingles as strings ("w1 w2 ... wn"). */
   def wordShingles(text: Column, n: Int): Column = {
     val toks = tokens(text)

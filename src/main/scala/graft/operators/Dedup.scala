@@ -777,6 +777,14 @@ object Dedup {
   //                      verification without touching text again
   // ------------------------------------------------------------------
 
+  /** The index's LSH shape: word 3-gram shingles, 16 minhashes cut
+    * into bands of 4 rows. Fixed for every build, append, probe and
+    * retraction: under another shape a probe computes band keys no
+    * stored key matches and silently misses candidates. */
+  private val IndexN = 3
+  private val IndexK = 16
+  private val IndexRowsPerBand = 4
+
   /** Hashed signature+band rows for `documents` — the persisted
     * index's unit of storage and the probe's unit of work.
     * [[minhashLshPairs]] pairs these same rows, so a probe against the
@@ -785,8 +793,8 @@ object Dedup {
     * batch's rows ONCE and share them between probe and append: the
     * batch text is scanned and shingled a single time, which at
     * continuous-ingestion scale halves the curation path's CPU. */
-  private[graft] def indexRows(documents: DataFrame, n: Int = 3, k: Int = 16,
-                               rowsPerBand: Int = 4): DataFrame =
+  private[graft] def indexRows(documents: DataFrame, n: Int = IndexN, k: Int = IndexK,
+                               rowsPerBand: Int = IndexRowsPerBand): DataFrame =
     documents
       // cheap pushdown-able predicate (text has a non-ws char ⇔ tokens
       // exist); filtering on size(sh) would push the whole shingle
@@ -810,13 +818,11 @@ object Dedup {
   /** Build the persisted index at `path`. One pass over the corpus
     * text, then the text is never needed again: probes and appends
     * touch only hashed longs. */
-  def writeDedupIndex(documents: DataFrame, path: String, n: Int = 3,
-                      k: Int = 16, rowsPerBand: Int = 4): Unit =
-    writeIndex(documents, path, n, k, rowsPerBand, Tables.WriteMode.Overwrite)
+  def writeDedupIndex(documents: DataFrame, path: String): Unit =
+    writeIndex(documents, path, Tables.WriteMode.Overwrite)
 
-  private def writeIndex(documents: DataFrame, path: String, n: Int, k: Int,
-                         rowsPerBand: Int, mode: Tables.WriteMode): Unit = {
-    val rows = indexRows(documents, n, k, rowsPerBand)
+  private def writeIndex(documents: DataFrame, path: String, mode: Tables.WriteMode): Unit = {
+    val rows = indexRows(documents)
       .localCheckpoint(true) // two writes below share one signature pass
     writeIndexRows(rows, path, mode)
     rows.unpersist()
@@ -828,9 +834,8 @@ object Dedup {
     * text scan. */
   private[graft] def writeIndexRows(rows: DataFrame, path: String,
                                     mode: Tables.WriteMode): Unit = {
-    Tables.write(banded(rows), s"$path/bands", "band", Seq("key"), mode)
-    rows.select(col("doc_id"), col("sh"))
-      .write.mode(mode.saveMode).parquet(s"$path/signatures")
+    Tables.write(banded(rows), s"$path/bands", mode, Some("band"), Seq("key"))
+    Tables.write(rows.select(col("doc_id"), col("sh")), s"$path/signatures", mode)
   }
 
   /** APPEND new documents to a persisted index. Append-only contract:
@@ -841,9 +846,8 @@ object Dedup {
     * O(batch), never O(index).
     */
   def appendToDedupIndex(spark: SparkSession, path: String,
-                         newDocuments: DataFrame, n: Int = 3, k: Int = 16,
-                         rowsPerBand: Int = 4): Unit =
-    writeIndex(newDocuments, path, n, k, rowsPerBand, Tables.WriteMode.Append)
+                         newDocuments: DataFrame): Unit =
+    writeIndex(newDocuments, path, Tables.WriteMode.Append)
 
   /** DELETE documents from a persisted index — the retraction leg the
     * lifecycle was missing (a CDC `D` op or right-to-be-forgotten
@@ -863,8 +867,9 @@ object Dedup {
     *      input_file_name (driver-bounded: a file list, the same
     *      order of metadata maybeCompactDedupIndex lists);
     *   3. only those files rewrite (survivors re-append key-sorted
-    *      into the same partition dirs), then the originals delete —
-    *      every untouched file stays byte-identical.
+    *      into the same partition dirs, one file per touched band),
+    *      then the originals delete — every untouched file stays
+    *      byte-identical.
     *
     * Crash caveat (documented, same family as the append-replay
     * note): between the survivor write and the original-file delete a
@@ -873,11 +878,8 @@ object Dedup {
     * Returns the number of files rewritten (0 = nothing matched).
     */
   def removeFromDedupIndex(spark: SparkSession, path: String,
-                           docIds: DataFrame, k: Int = 16,
-                           rowsPerBand: Int = 4): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path, "bands"))) return 0
+                           docIds: DataFrame): Int = {
+    if (!Tables.hasData(spark, s"$path/bands")) return 0
     val ids = docIds.select(col(docIds.columns.head).cast("long").as("doc_id"))
       .distinct().localCheckpoint(true)
     try {
@@ -887,7 +889,7 @@ object Dedup {
       // consumer, so they drop right away)
       val (victims, bounds) = pinWithBounds(Tables.read(spark, s"$path/signatures")
         .join(ids, Seq("doc_id"), "left_semi")
-        .withColumn("bands", bandKeys(col("sh"), k, rowsPerBand)), k, rowsPerBand)
+        .withColumn("bands", bandKeys(col("sh"), IndexK, IndexRowsPerBand)))
       victims.unpersist()
       val prune = bounds match {
         case Some(p) => p
@@ -898,7 +900,7 @@ object Dedup {
       // drop originals. Sorting restores the band table's row-group-
       // stat skipping; the signature table has no sort contract.
       def rewrite(table: String, pruneExpr: Option[Column],
-                  sortCols: Seq[Column]): Int = {
+                  partitionCol: Option[String], sortCol: String): Int = {
         val base = s"$path/$table"
         val scan0 = spark.read.option("basePath", base).parquet(base)
         val scan = pruneExpr.map(scan0.where).getOrElse(scan0)
@@ -910,19 +912,13 @@ object Dedup {
           .parquet(files: _*)
           .join(ids, Seq("doc_id"), "left_anti")
           .localCheckpoint(true) // materialize before mutating the source
-        val writer0 = survivors.sortWithinPartitions(sortCols: _*)
-        val writer =
-          if (table == "bands") writer0.write.mode("append").partitionBy("band")
-          else writer0.write.mode("append")
-        writer.parquet(base)
+        Tables.write(survivors, base, Tables.WriteMode.Append, partitionCol, Seq(sortCol))
         survivors.unpersist()
-        files.foreach(f => { fs.delete(new Path(f), false); () })
+        Tables.delete(spark, files.toSeq)
         files.length
       }
-      val nBandFiles = rewrite("bands", Some(prune),
-        Seq(col("band"), col("key")))
-      val nSigFiles = rewrite("signatures", None, Seq(col("doc_id")))
-      nBandFiles + nSigFiles
+      rewrite("bands", Some(prune), Some("band"), "key") +
+        rewrite("signatures", None, None, "doc_id")
     } finally ids.unpersist()
   }
 
@@ -935,15 +931,9 @@ object Dedup {
     * compaction cadence, not per append.
     */
   def compactDedupIndex(spark: SparkSession, path: String): Unit = {
-    val bands = Tables.read(spark, s"$path/bands")
-      .select(col("band"), col("key"), col("doc_id"))
-      .localCheckpoint(true) // materialize before overwriting its source
-    Tables.write(bands, s"$path/bands", "band", Seq("key"), Tables.WriteMode.Overwrite)
-    bands.unpersist()
-    val sigs = Tables.read(spark, s"$path/signatures")
-      .localCheckpoint(true)
-    sigs.write.mode("overwrite").parquet(s"$path/signatures")
-    sigs.unpersist()
+    Tables.rewrite(spark, s"$path/bands", Some("band"), Seq("key"))(
+      _.select(col("band"), col("key"), col("doc_id")))
+    Tables.rewrite(spark, s"$path/signatures")(identity)
   }
 
   /** OPTIMIZE-cadence policy for [[compactDedupIndex]] — the decision
@@ -958,19 +948,9 @@ object Dedup {
     */
   def maybeCompactDedupIndex(spark: SparkSession, path: String,
                              maxFilesPerPartition: Int = 8): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val bands = new Path(root, "bands")
-    if (!fs.exists(bands)) return false // nothing indexed yet
-    def parquetCount(p: Path): Int =
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val perBand = fs.listStatus(bands).toSeq.filter(_.isDirectory)
-      .map(d => parquetCount(d.getPath))
-    val worst = (perBand :+ parquetCount(new Path(root, "signatures"))).max
+    if (!Tables.hasData(spark, s"$path/bands")) return false // nothing indexed yet
+    val worst = (Tables.filesPerDirectory(spark, s"$path/bands") ++
+      Tables.filesPerDirectory(spark, s"$path/signatures")).max
     if (worst <= maxFilesPerPartition) false
     else { compactDedupIndex(spark, path); true }
   }
@@ -989,11 +969,9 @@ object Dedup {
     * the delta's index rows, so they cost no job of their own.
     */
   def probeDedupIndex(spark: SparkSession, path: String, delta: DataFrame,
-                      n: Int = 3, k: Int = 16, rowsPerBand: Int = 4,
                       threshold: Double = 0.8): DataFrame = {
     // banded probe + delta-side verify share the materialized rows
-    val (deltaRows, bounds) = pinWithBounds(indexRows(delta, n, k, rowsPerBand),
-      k, rowsPerBand)
+    val (deltaRows, bounds) = pinWithBounds(indexRows(delta))
     probeDedupIndexRows(spark, path, deltaRows, bounds, threshold)
   }
 
@@ -1097,8 +1075,8 @@ object Dedup {
     * ranges no key of `rows` can touch — a JOIN alone would scan every
     * band file in full. The probe, the curation loop and the
     * retraction all take their bounds here. */
-  private[graft] def pinWithBounds(rows: DataFrame, k: Int = 16,
-                                   rowsPerBand: Int = 4): (DataFrame, Option[Column]) = {
+  private[graft] def pinWithBounds(rows: DataFrame, k: Int = IndexK,
+                                   rowsPerBand: Int = IndexRowsPerBand): (DataFrame, Option[Column]) = {
     val nBands = k / rowsPerBand
     val obs = Observation()
     val aggs = (0 until nBands).flatMap(b =>

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.VectorFunctions
 import graft.sources.Tables
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -476,16 +475,14 @@ object Similarity {
     // a rebuild starts a new drift log: the old one measured centroids
     // this write replaces, and maybeRetrainIvfIndex would re-train on
     // it. Deleted first, so a crash part-way leaves no stale drift
-    val driftDir = new Path(s"$path/drift")
-    driftDir.getFileSystem(vectors.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(driftDir, true)
+    Tables.delete(vectors.sparkSession, Seq(s"$path/drift"))
     val centroids = sampleCentroids(vectors, nLists)
     val centroidSet = foldCentroids(centroids).localCheckpoint(true)
     // vec_id-clustered files: appendToIvfIndex's upsert staleness scan
     // prunes on parquet row-group stats instead of reading every list
     Tables.write(assignFolded(vectors, centroidSet, "vec_id", "embedding", probes = 1),
-      s"$path/lists", "list_id", Seq("vec_id"), Tables.WriteMode.Overwrite)
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
+      s"$path/lists", Tables.WriteMode.Overwrite, Some("list_id"), Seq("vec_id"))
+    Tables.write(centroids, s"$path/centroids", Tables.WriteMode.Overwrite)
     centroidSet.unpersist()
   }
 
@@ -566,12 +563,12 @@ object Similarity {
   }
 
   /** An index's centroid rows and the centroid directory listing
-    * (name, length, mtime of each file) they were read under. */
+    * ([[graft.sources.Tables.listing]]) they were read under. */
   private final case class Centroids(listing: Seq[(String, Long, Long)],
                                      rows: Array[(Long, Array[Float])])
 
-  /** [[Centroids]] of the last few probed indexes, by qualified index
-    * path, least recently used first. */
+  /** [[Centroids]] of the last few probed indexes, by qualified
+    * centroid directory, least recently used first. */
   private val centroidMemo =
     new java.util.LinkedHashMap[String, Centroids](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, Centroids]): Boolean =
@@ -585,17 +582,14 @@ object Similarity {
     * rewrite the centroids as new part files, so the first probe after
     * either re-reads, and probes of an unchanged index read nothing. */
   private def centroidRows(spark: SparkSession, path: String): Array[(Long, Array[Float])] = {
-    val dir = new Path(s"$path/centroids")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = fs.makeQualified(new Path(path)).toString
+    val dir = s"$path/centroids"
     // listed BEFORE the read: a rewrite racing the read leaves an entry
     // whose listing is already stale, so it can only cause a re-read
-    val listing = scala.util.Try(fs.listStatus(dir)).getOrElse(Array.empty)
-      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sorted.toSeq
+    val (key, listing) = Tables.listing(spark, dir)
     centroidMemo.synchronized(Option(centroidMemo.get(key))) match {
       case Some(c) if c.listing == listing => c.rows
       case _ =>
-        val rows = Tables.read(spark, dir.toString)
+        val rows = Tables.read(spark, dir)
           .select(col("list_id"), col("centroid")).collect()
           .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         centroidMemo.synchronized(centroidMemo.put(key, Centroids(listing, rows)))
@@ -603,35 +597,23 @@ object Similarity {
     }
   }
 
-  /** Next drift generation for the index at `path`: the `_gen` marker
-    * (an underscore file parquet readers ignore, written before every
-    * drift append) when present; a legacy store without one falls back
-    * to the max-generation aggregate the marker replaced (one saved
-    * Spark job per micro-batch in the streaming upsert loop). */
-  private def nextDriftGen(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Long = {
-    val driftDir = new Path(s"$path/drift")
-    val fs = driftDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(driftDir)) return 0L
-    val marker = new Path(s"$path/drift/_gen")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      txt.toLong + 1L
-    } else
-      Tables.read(spark, s"$path/drift")
-        .agg(max(col("generation"))).head().getLong(0) + 1L
+  /** Next drift generation for the index at `path`: one past the
+    * `_gen` state file (written before every drift append) when
+    * present; a legacy drift log without one falls back to the
+    * max-generation aggregate the marker replaced (one saved Spark job
+    * per micro-batch in the streaming upsert loop). */
+  private def nextDriftGen(spark: SparkSession, path: String): Long = {
+    val drift = s"$path/drift"
+    Tables.readState(spark, drift, DriftGenFile) match {
+      case Some(gen) => gen.trim.toLong + 1L
+      case None if Tables.hasData(spark, drift) =>
+        Tables.read(spark, drift).agg(max(col("generation"))).head().getLong(0) + 1L
+      case None => 0L
+    }
   }
 
-  /** Record `gen` as the latest drift generation (see [[nextDriftGen]]). */
-  private def writeDriftGen(spark: org.apache.spark.sql.SparkSession,
-                            path: String, gen: Long): Unit = {
-    val marker = new Path(s"$path/drift/_gen")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write(gen.toString.getBytes("UTF-8")) finally out.close()
-  }
+  /** The drift log's generation marker (see [[nextDriftGen]]). */
+  private val DriftGenFile = "_gen"
 
   /** Incrementally UPSERT vectors into a persisted IVF index — the
     * production follow-on to [[writeIvfIndex]], and the index-side
@@ -748,26 +730,22 @@ object Similarity {
   private def commitLists(spark: SparkSession, path: String, merged: DataFrame,
                           touched: Seq[Long], centroids: DataFrame,
                           newCentroids: Boolean): Unit = {
-    Tables.write(merged.drop("is_new"), s"$path/lists", "list_id", Seq("vec_id"),
-      Tables.WriteMode.ReplacePartitions)
+    Tables.write(merged.drop("is_new"), s"$path/lists",
+      Tables.WriteMode.ReplacePartitions, Some("list_id"), Seq("vec_id"))
     val means = listMeans(merged)
     val meanRows = means.collect()
     val nonEmpty = meanRows.map(_.getLong(0)).toSet
-    val listsFs = new Path(s"$path/lists").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(nonEmpty).foreach { id =>
-      listsFs.delete(new Path(s"$path/lists/list_id=$id"), true)
-      ()
-    }
-    if (newCentroids) centroids.write.mode("overwrite").parquet(s"$path/centroids")
+    Tables.delete(spark, touched.filterNot(nonEmpty).map(id => s"$path/lists/list_id=$id"))
+    if (newCentroids) Tables.write(centroids, s"$path/centroids", Tables.WriteMode.Overwrite)
     val gen = nextDriftGen(spark, path)
-    writeDriftGen(spark, path, gen)
-    spark.createDataFrame(java.util.Arrays.asList(meanRows: _*), means.schema)
+    Tables.writeState(spark, s"$path/drift", DriftGenFile, gen.toString)
+    val driftRows = spark.createDataFrame(java.util.Arrays.asList(meanRows: _*), means.schema)
       .join(centroids, Seq("list_id"))
       .select(lit(gen).as("generation"), col("list_id"),
         col("n_added"), col("list_n"),
         VectorFunctions.cosine(col("list_mean"), col("centroid"))
           .as("mean_cos"))
-      .write.mode("append").parquet(s"$path/drift")
+    Tables.write(driftRows, s"$path/drift", Tables.WriteMode.Append)
   }
 
   /** Per-list drift inputs of a rewritten index: (list_id, list_n,
@@ -828,9 +806,8 @@ object Similarity {
     */
   def maybeRetrainIvfIndex(spark: SparkSession, path: String,
                            minMeanCos: Double = 0.98): Seq[Long] = {
-    val driftPath = new Path(s"$path/drift")
-    val fs = driftPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(driftPath)) return Nil // nothing appended yet: no drift
+    // nothing appended yet (or only a failed first append): no drift
+    if (!Tables.hasData(spark, s"$path/drift")) return Nil
     val drift = Tables.read(spark, s"$path/drift")
     val latestW = Window.partitionBy(col("list_id"))
       .orderBy(col("generation").desc)

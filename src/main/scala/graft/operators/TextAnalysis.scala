@@ -383,6 +383,14 @@ object TextAnalysis {
           .otherwise(0.0).as("ttr"))
   }
 
+  /** `cols` of `df` with one row per token of its `text`, the
+    * token's hash as column `hashCol`. Fused kernel: lower + tokenize
+    * + per-token hash in one scan-stage pass — no per-token UTF8String
+    * materialization (hash values are polyHash bit-for-bit). */
+  private def hashedTokens(df: DataFrame, hashCol: String, cols: Column*): DataFrame =
+    df.select(cols :+ explode(graft.functions.native
+      .tokenPolyHashes(col("text"), lowercase = true)).as(hashCol): _*)
+
   /** Unigram corpus-frequency scoring — the CCNet-style "how rare are
     * this document's tokens against a reference corpus" quality signal
     * (CCNet scores with a wiki-trained KenLM; with no model downloads,
@@ -401,15 +409,9 @@ object TextAnalysis {
     * corpus-stats pass; a curated reference corpus plugs in unchanged.
     */
   def unigramScore(documents: DataFrame, reference: DataFrame): DataFrame = {
-    // fused kernel: lower + tokenize + per-token hash in one scan-stage
-    // pass — no per-token UTF8String materialization (hash values are
-    // polyHash bit-for-bit, oracles unchanged)
-    def hashedTokens(df: DataFrame, cols: Column*): DataFrame =
-      df.select(cols :+ explode(graft.functions.native
-        .tokenPolyHashes(col("text"), lowercase = true)).as("h"): _*)
-    val vocab = hashedTokens(reference)
+    val vocab = hashedTokens(reference, "h")
       .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-    hashedTokens(documents, col("doc_id"))
+    hashedTokens(documents, "h", col("doc_id"))
       .join(vocab, Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(
@@ -455,9 +457,7 @@ object TextAnalysis {
     }
     val bgVocab = hashedBigrams(reference)
       .groupBy(col("h1"), col("h2")).agg(count(lit(1)).as("bg_cnt"))
-    val uniVocab = reference
-      .select(explode(graft.functions.native
-        .tokenPolyHashes(col("text"), lowercase = true)).as("h2"))
+    val uniVocab = hashedTokens(reference, "h2")
       .groupBy(col("h2")).agg(count(lit(1)).as("uni_cnt"))
     hashedBigrams(documents, col("doc_id"))
       .join(bgVocab, Seq("h1", "h2"), "left")
@@ -599,10 +599,7 @@ object TextAnalysis {
     */
   def naiveBayesClassify(documents: DataFrame, train: DataFrame,
                          labelCol: String = "label"): DataFrame = {
-    def toks(df: DataFrame, cols: Column*): DataFrame =
-      df.select(cols :+ explode(graft.functions.native
-        .tokenPolyHashes(col("text"), lowercase = true)).as("h"): _*)
-    val model = toks(train, col(labelCol).as("cls"))
+    val model = hashedTokens(train, "h", col(labelCol).as("cls"))
       .groupBy(col("cls"), col("h"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true) // consumers: class totals, vocab size, score join
@@ -611,7 +608,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"))
     val vocabSize = model.select(countDistinct(col("h"))).head().getLong(0)
     val totalDocs = train.count()
-    val docToks = toks(documents, col("doc_id"))
+    val docToks = hashedTokens(documents, "h", col("doc_id"))
     val docCounts = docToks.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"))
     val hits = docToks.join(model, Seq("h"))

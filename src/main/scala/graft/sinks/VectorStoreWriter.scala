@@ -91,6 +91,9 @@ object VectorStoreWriter {
     case other => throw new IllegalArgumentException(s"unknown distanceFunction '$other'")
   }
 
+  /** The store's layout file, beside its data. */
+  private val LayoutFile = "_layout.json"
+
   /** Root-relative path of a collection. */
   def collectionPath(root: String, options: VectorStoreWriterOptions): String =
     s"$root/${options.collectionName}"
@@ -143,25 +146,17 @@ object VectorStoreWriter {
   def writeWithLayout(records: DataFrame, path: String,
                       incremental: Boolean = true): Unit = {
     val session = records.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
-    val layoutFile = new org.apache.hadoop.fs.Path(path, "_layout.json")
-    val n =
-      if (fs.exists(layoutFile)) {
-        val in = fs.open(layoutFile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+    val n = Tables.readState(session, path, LayoutFile) match {
+      case Some(txt) =>
         "\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
           .map(_.group(1).toInt)
           .getOrElse(throw new IllegalStateException(
-            s"unreadable store layout at $layoutFile: $txt"))
-      } else {
+            s"unreadable store layout at $path/$LayoutFile: $txt"))
+      case None =>
         val chosen = chooseNumBuckets(records.count())
-        val out = fs.create(layoutFile, true)
-        try out.write(s"""{"numBuckets":$chosen}""".getBytes("UTF-8"))
-        finally out.close()
+        Tables.writeState(session, path, LayoutFile, s"""{"numBuckets":$chosen}""")
         chosen
-      }
+    }
     writeBucketed(records, path, incremental, n)
   }
 
@@ -177,17 +172,11 @@ object VectorStoreWriter {
     val session = records.sparkSession
     val bucketed = records
       .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(buckets)))
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(session.sparkContext.hadoopConfiguration)
     // data presence, not directory presence: metadata files
     // (_layout.json, _SUCCESS) alone must not trigger the survivor
     // read of an empty store
-    val sinkExists = fs.exists(root) && fs.listStatus(root).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
     val toWrite =
-      if (!incremental || !sinkExists) bucketed
+      if (!incremental || !Tables.hasData(session, path)) bucketed
       else {
         // survivors: rows in touched buckets that belong to OTHER
         // documents; materialized (localCheckpoint) so we never
@@ -203,7 +192,8 @@ object VectorStoreWriter {
       }
     // one file per bucket, clustered by (documentid, key): row-group
     // stats then prune the incremental path's per-document replace
-    Tables.write(toWrite, path, "doc_bucket", Seq("documentid", "key"),
-      if (incremental) Tables.WriteMode.ReplacePartitions else Tables.WriteMode.Append)
+    Tables.write(toWrite, path,
+      if (incremental) Tables.WriteMode.ReplacePartitions else Tables.WriteMode.Append,
+      Some("doc_bucket"), Seq("documentid", "key"))
   }
 }

@@ -128,7 +128,8 @@ object AutoElementReader {
     * [[parseBlocks]] and both paths of [[docElements]]. */
   private def elementsAs(fmt: String, id: Long, bytes: Array[Byte],
                          meta: Map[String, String]): Seq[DocElement] = {
-    def utf8 = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    // null reads as empty input, as the frame reads null content
+    def utf8 = if (bytes == null) "" else new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
     fmt match {
       case "pdf" => ElementFrame.paged(id, PdfElementReader.parseBlocks(bytes), meta)
       case "pptx" => ElementFrame.paged(id, PptxElementReader.parseBlocks(bytes), meta)
@@ -177,7 +178,7 @@ object AutoElementReader {
     if (sniffed.nonEmpty) sniffed
     // markdown is the terminal text path: zero elements there means
     // genuinely empty/whitespace content — nothing was lost
-    else if (fmt == "markdown" || bytes == null || bytes.isEmpty) Nil
+    else if (fmt == "markdown" || bytes.isEmpty) Nil
     else {
       val recovered: Option[Seq[DocElement]] =
         if (!looksTextual(bytes)) None

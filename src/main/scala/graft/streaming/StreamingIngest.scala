@@ -21,19 +21,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingIngest {
 
-  /** Does `child` exist under `root`? Resolved through the Hadoop
-    * FileSystem bound to the path's scheme (like
-    * [[graft.operators.Dedup.maybeCompactDedupIndex]]), so index
-    * stores on hdfs:// or s3a:// — the 100 TB production shape — are
-    * detected correctly; a java.nio check would see only local disk
-    * and silently re-seed the index every micro-batch. */
-  private def storeExists(spark: SparkSession, root: String,
-                          child: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(root, child)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Scale-adaptive shuffle/state partition count for a streaming
     * query whose staged input holds `nRows` arrivals (r12 optimization
     * round). Streaming state stores have no AQE partition coalescing:
@@ -171,17 +158,10 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val base = Tables.read(spark, snapshotPath)
-          .select(col("doc_id"), col("text"))
-        val next = graft.operators.Corpus.applyChangelog(base, batch)
-          .select(col("doc_id"), col("text"))
-          // materialize BEFORE the overwrite: the plan reads the
-          // files the write is about to replace
-          .localCheckpoint(true)
-        next.write.mode("overwrite").parquet(snapshotPath)
-        next.unpersist()
-        ()
+        Tables.rewrite(batch.sparkSession, snapshotPath) { base =>
+          graft.operators.Corpus.applyChangelog(base.select(col("doc_id"), col("text")), batch)
+            .select(col("doc_id"), col("text"))
+        }
       }
 
   /** Watermarked tumbling-window event aggregation: the canonical
@@ -258,14 +238,14 @@ object StreamingIngest {
           count(lit(1)).as("n_bins"))
         val pOld = (col("n_old") + lit(1)) / (col("t_old") + col("n_bins"))
         val pNew = (col("n_new") + lit(1)) / (col("t_new") + col("n_bins"))
-        bins.join(broadcast(totals), Seq("window_start"))
+        val psi = bins.join(broadcast(totals), Seq("window_start"))
           .select(col("window_start"), col("n_bins"), col("t_new"),
             ((pNew - pOld) * log(pNew / pOld)).as("term"))
           .groupBy(col("window_start"))
           .agg(first(col("n_bins")).as("n_bins"),
             first(col("t_new")).as("t_new"),
             round(sum(col("term")), 6).as("psi"))
-          .write.mode("append").parquet(sinkPath)
+        Tables.write(psi, sinkPath, Tables.WriteMode.Append)
       }
   }
 
@@ -354,7 +334,7 @@ object StreamingIngest {
         val pinned = batch.select(col("doc_id"), col("text"))
           .localCheckpoint(true) // anti-join + accept write share it
         if (!pinned.isEmpty) {
-          val hasStore = storeExists(spark, indexPath, "bands")
+          val hasStore = Tables.hasData(spark, s"$indexPath/bands")
           // ONE signature pass per batch: the same materialized rows
           // feed the probe AND the survivors' index append — the batch
           // text is scanned and shingled once, not twice; the probe's
@@ -397,10 +377,8 @@ object StreamingIngest {
           if (!survivorRows.isEmpty)
             Dedup.writeIndexRows(survivorRows, indexPath,
               if (hasStore) Tables.WriteMode.Append else Tables.WriteMode.Overwrite)
-          survivors.select(col("doc_id"), lit(batchId).as("batch"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch").parquet(acceptPath)
+          Tables.write(survivors.select(col("doc_id"), lit(batchId).as("batch")),
+            acceptPath, Tables.WriteMode.ReplacePartitions, Some("batch"))
           survivors.unpersist()
           rows.unpersist()
         }
@@ -454,7 +432,7 @@ object StreamingIngest {
         val pinned = batch.select(col("vec_id"), col("embedding"))
           .localCheckpoint(true)
         if (!pinned.isEmpty) {
-          val hasStore = storeExists(spark, indexPath, "centroids")
+          val hasStore = Tables.hasData(spark, s"$indexPath/centroids")
           if (hasStore) {
             Similarity.appendToIvfIndex(spark, indexPath, pinned)
             if (retrainEvery > 0 &&

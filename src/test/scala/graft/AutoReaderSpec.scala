@@ -26,6 +26,12 @@ class AutoReaderSpec extends SparkSpecBase {
     assert(AutoElementReader.detect("PKX rest".getBytes(utf8)) == "markdown")
   }
 
+  test("null bytes read as empty input: no elements, no exception") {
+    assert(AutoElementReader.docElements(7L, null).isEmpty)
+    assert(AutoElementReader.parseBlocks(null).isEmpty)
+    assert(AutoElementReader.docElements(7L, Array.empty[Byte]).isEmpty)
+  }
+
   test("detect: %PDF- within the first 1024 bytes routes pdf (junk header)") {
     // ISO 32000-1 tolerance: producers may emit junk before the
     // header; Acrobat scans the first KB for %PDF-

@@ -207,6 +207,36 @@ class DedupIndexSpec extends SparkSpecBase {
       .forEach(p => { Files.deleteIfExists(p); () })
   }
 
+  test("curateStream: an index directory left by an interrupted seed write reads as no index") {
+    import java.nio.file.Files
+    val work = Files.createTempDirectory("graft-curate-tmp")
+    val in = work.resolve("in").toString
+    val idx = work.resolve("idx").toString
+    val accept = work.resolve("accept").toString
+    // an interrupted first index write: bands/ holds only the
+    // committer's staging directory
+    Files.createDirectories(work.resolve("idx/bands/_temporary/0"))
+    val a = (1 to 40).map(i => s"alpha$i").mkString(" ")
+    val bT = (1 to 40).map(i => s"beta$i").mkString(" ")
+    Seq((0L, a), (5L, a), (15L, bT)).toDF("doc_id", "text").coalesce(1).write.parquet(in)
+    val stream = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType))))
+      .parquet(in)
+    graft.streaming.StreamingIngest.curateStream(stream, idx, accept, work.resolve("ckpt").toString)
+      .start().awaitTermination()
+    // the batch ran as the seed: its within-batch dup dropped, its
+    // survivors accepted and indexed
+    val accepted = spark.read.parquet(accept)
+      .select(col("doc_id"), col("batch").cast("int")).as[(Long, Int)].collect().toSet
+    assert(accepted == Set((0L, 0), (15L, 0)))
+    assert(spark.read.parquet(s"$idx/signatures").select(col("doc_id")).as[Long]
+      .collect().toSet == Set(0L, 15L))
+    Files.walk(work).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => { Files.deleteIfExists(p); () })
+  }
+
   test("curateParity: id-range staging admits first-seen across batch boundaries") {
     // ids 0..38 slice at 9/19/29 → batches {0,5},{12,15},{22,25},{33,38}
     val a = (1 to 40).map(i => s"alpha$i").mkString(" ")

@@ -345,6 +345,30 @@ class IvfFramesSpec extends SparkSpecBase {
     assert(lists.count() == 106 && lists.select("vec_id").distinct().count() == 106)
   }
 
+  test("maybeRetrainIvfIndex: a drift log holding only a failed first append reads as no drift") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-gen0").toString
+    val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
+    Similarity.writeIvfIndex(emb.where(col("vec_id") < 100), dir, nLists = 4)
+    // the blocker on the FIRST drift append: the generation claim
+    // lands, no drift row does, so drift/ holds `_gen` and no data
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/drift"))
+    val blocker = new java.io.File(s"$dir/drift/_temporary")
+    assert(blocker.createNewFile())
+    val batch = emb.where(col("vec_id").between(100, 102))
+    intercept[Exception](Similarity.appendToIvfIndex(spark, dir, batch))
+    assert(new java.io.File(s"$dir/drift/_gen").isFile)
+    assert(Similarity.maybeRetrainIvfIndex(spark, dir, minMeanCos = 2.0) == Nil)
+    blocker.delete()
+    assert(Similarity.maybeRetrainIvfIndex(spark, dir, minMeanCos = 2.0) == Nil)
+    // the retry appends past the claimed generation, and the policy
+    // then reads its drift rows
+    Similarity.appendToIvfIndex(spark, dir, batch)
+    val gens = spark.read.parquet(s"$dir/drift")
+      .select(col("generation")).distinct().as[Long].collect().toSeq
+    assert(gens == Seq(1L), gens.toString)
+    assert(Similarity.maybeRetrainIvfIndex(spark, dir, minMeanCos = 2.0).nonEmpty)
+  }
+
   test("writeIvfIndex: a rebuild drops the old index's drift log and generation marker") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-rebuild").toString
     val emb = spark.read.parquet(s"${sf()}/embeddings.parquet")
@@ -508,6 +532,32 @@ class IvfFramesSpec extends SparkSpecBase {
       .orderBy(col("list_id"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
     assert(after == frozen, "append moved the frozen centroids")
+    Files.walk(work).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => { Files.deleteIfExists(p); () })
+  }
+
+  test("ivfUpsertStream: an index directory left by an interrupted seed write reads as no index") {
+    import java.nio.file.Files
+    val work = Files.createTempDirectory("graft-ivfup-tmp")
+    val in = Files.createDirectory(work.resolve("in"))
+    val idx = work.resolve("idx").toString
+    // an interrupted first writeIvfIndex: centroids/ holds only the
+    // committer's staging directory
+    Files.createDirectories(work.resolve("idx/centroids/_temporary/0"))
+    Seq.tabulate(10)(i => (i.toLong, Array.tabulate(4)(d => ((i * 7 + d * 3) % 11 - 5).toFloat).toSeq))
+      .toDF("vec_id", "embedding").coalesce(1).write.parquet(in.resolve("b1").toString)
+    val stream = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("embedding",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
+      .parquet(in.resolve("b1").toString)
+    graft.streaming.StreamingIngest.ivfUpsertStream(stream, idx, work.resolve("ckpt").toString,
+      nLists = 4, retrainEvery = 0).start().awaitTermination()
+    // the batch seeded the index
+    assert(spark.read.parquet(s"$idx/lists").select(col("vec_id")).as[Long].collect().sorted.toSeq
+      == (0L until 10L))
+    assert(spark.read.parquet(s"$idx/centroids").count() > 0)
     Files.walk(work).sorted(java.util.Comparator.reverseOrder())
       .forEach(p => { Files.deleteIfExists(p); () })
   }
